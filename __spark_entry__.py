@@ -352,8 +352,8 @@ def _wand_batch_q():
 def _streaming_query_q():
     """The SAME pinned batch served through the Structured Streaming
     query server (streaming/query_server.py): queries land as a file
-    stream, one availableNow micro-batch serves them via
-    wand_topk_batch, results read back from the sink — end-to-end
+    stream, one availableNow micro-batch serves them via the server's
+    QueryEngine.topk_batch, results read back from the sink — end-to-end
     stream-serving path, same oracle as the batch entry."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +374,9 @@ def _streaming_query_q():
         q = start_query_server(
             spark, idx, work / "queries", work / "results", work / "ckpt", k=10
         )
-        q.awaitTermination(300)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("query server did not drain its backlog in 300 s")
         return read_results(spark, work / "results").select(
             "query_id", "doc_id", "score"
         )
@@ -494,7 +496,7 @@ def raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # kernel, per-query merge) — must be rank-identical per query
         "wand_topk_batch": _wand_batch_q(),
         # the same batch through the Structured Streaming query server
-        # (query file stream → foreachBatch wand_topk_batch → sink)
+        # (query file stream → foreachBatch QueryEngine.topk_batch → sink)
         "streaming_query_topk": _streaming_query_q(),
         # --- index-backed operators (index/lists.py + operators/
         # indexed.py): the SAME oracles as the corpus-algebra entries

@@ -112,9 +112,9 @@ def main() -> None:
     medians["wand_topk_p50"] = round(statistics.median(lats_med), 3)
     medians["wand_topk_total"] = round(sum(lats_med), 3)
 
-    # --- warm query-loop path (QueryEngine: persisted term_dict +
-    # cached listings — the RdbCache analog the reference serves
-    # repeated queries from) ---
+    # --- warm query-loop path (QueryEngine: cached segment listing,
+    # doc_meta and tombstone plan — the RdbCache analog the reference
+    # serves repeated queries from) ---
     from open_source_search_engine_spark.index.engine import QueryEngine
 
     eng = QueryEngine(spark, idx)

@@ -256,14 +256,14 @@ def refresh_read_caches(spark: SparkSession, index_dir: str | Path) -> None:
     """Invalidate Spark's cached plans / file listings for this index's
     on-disk tables. Spark's CacheManager substitutes ANY later read of
     the same path whose plan ``sameResult``-matches a persisted one —
-    so a warm QueryEngine's persisted term_dict would otherwise be
+    so a caller's persisted read of, say, term_dict would otherwise be
     silently served (STALE) to every add/merge/compact job reading
     that path after a swap. Observed failure without this: a delta
     merge re-scoring against the pre-swap dictionary inner-joins away
-    every posting of every term first seen after the engine warmed —
-    new-term postings vanish from the merged generation. Writers call
-    this after each commit point; warm handles self-heal because Spark
-    re-caches the persisted entry lazily from the new files."""
+    every posting of every term first seen after the read was
+    persisted — new-term postings vanish from the merged generation.
+    Writers call this after each commit point; the persisted reads
+    self-heal because Spark re-caches them lazily from the new files."""
     index_dir = Path(index_dir)
     for sub in ("term_dict", "segments", "doc_meta", "manifest", "tombstones"):
         p = index_dir / sub

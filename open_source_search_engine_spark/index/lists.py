@@ -26,6 +26,7 @@ salt is term-independent, so the grouping is complete).
 
 from __future__ import annotations
 
+from functools import cached_property
 from pathlib import Path
 
 import numpy as np
@@ -98,17 +99,22 @@ def live_doc_meta(spark: SparkSession, index_dir, meta: dict) -> DataFrame:
 
 
 class ColdIndex:
-    """One-shot handle: every accessor re-reads from disk. The warm
-    sibling is index.engine.QueryEngine (same duck-typed surface:
-    ``meta``, ``term_rows``, ``pruned_segments``, ``tombstones_plan``,
-    ``doc_meta_df``) — every operator in this module and in
-    operators/indexed.py accepts either, so query loops pay listing /
-    dictionary / tombstone IO once (RdbCache, SURVEY.md §4)."""
+    """One-shot index handle: ``meta``, ``term_rows``,
+    ``pruned_segments``, ``tombstones_plan``, ``doc_meta_df``. Every
+    operator in this module, operators/indexed.py and wand.topk takes a
+    handle (or a path, via as_handle). The warm subclass
+    index.engine.QueryEngine caches the segment listing, live doc_meta
+    and tombstone plan per commit, so query loops pay that IO once
+    (RdbCache, SURVEY.md §4)."""
 
     def __init__(self, spark: SparkSession, index_dir):
         self.spark = spark
         self.index_dir = Path(index_dir)
         self.meta = load_meta(index_dir)
+
+    @cached_property
+    def segments(self) -> DataFrame:
+        return self.spark.read.parquet(str(self.index_dir / "segments"))
 
     def term_rows(self, terms: list[str]) -> list[dict]:
         return query_term_rows(self.spark, self.index_dir, terms)
@@ -118,10 +124,9 @@ class ColdIndex:
             require_positions(self.meta)
         n_buckets = self.meta["config"]["n_buckets"]
         buckets = sorted({t % n_buckets for t in tids})
-        seg = self.spark.read.parquet(str(self.index_dir / "segments"))
         # snapshot isolation: only generations the meta commit pointer
         # references (a concurrent merge's staged dirs are invisible)
-        seg = seg.filter(
+        seg = self.segments.filter(
             F.col("generation").isin([int(g) for g in self.meta["generations"]])
             & F.col("bucket").isin(buckets)
             & F.col("term_id").isin(tids)
@@ -138,9 +143,9 @@ class ColdIndex:
         return live_doc_meta(self.spark, self.index_dir, self.meta)
 
 
-def as_handle(spark: SparkSession, ix) -> "ColdIndex":
-    """Normalize a str/Path index dir or an already-warm handle."""
-    return ix if hasattr(ix, "pruned_segments") else ColdIndex(spark, ix)
+def as_handle(spark: SparkSession, ix) -> ColdIndex:
+    """Normalize a str/Path index dir or an already-open handle."""
+    return ix if isinstance(ix, ColdIndex) else ColdIndex(spark, ix)
 
 
 def apply_tombstone_aware(
@@ -165,11 +170,11 @@ def apply_tombstone_aware(
     (salts × touched buckets — bounded by the QUERY's bucket set, so
     the blow-up is n_salts × |query terms'| buckets, not corpus-scale;
     doc-range salts drift across generations, so every salt needs the
-    full per-doc set — same argument as wand_topk's cogroup) and
-    cogrouped into the kernels. Per-task memory is O(|tombstones|);
-    past that point the answer is merge/compact, which prunes the
-    table. Kernels must tolerate an empty input frame (a group present
-    only on the tombstone side)."""
+    full per-doc set: a replaced doc's old-salt postings must be
+    annihilated wherever they sit) and cogrouped into the kernels.
+    Per-task memory is O(|tombstones|); past that point the answer is
+    merge/compact, which prunes the table. Kernels must tolerate an
+    empty input frame (a group present only on the tombstone side)."""
     arrays, ts_df = ix.tombstones_plan()
     if ts_df is None:
         return seg.groupBy(*group_cols).applyInPandas(

@@ -1,18 +1,21 @@
 """M4 — top-k BM25 over the segment store with block-max pruning.
 
-Query lifecycle (Spark expression of SURVEY.md §3.1):
+Query lifecycle (Spark expression of SURVEY.md §3.1), implemented
+ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
+``engine.QueryEngine``) for one query or a batch of many:
 
   1. term lookup in term_dict (replaces driver-side re-hashing; also
      yields exact df — Posdb::getTermFreq is approximate, ours exact)
   2. partition-pruned segment scan: ``bucket IN (...) AND term_id IN
-     (...)`` — Catalyst prunes to the query's term buckets
+     (...)`` — Catalyst prunes to the queries' term buckets
      (the RdbMap ranged seek, SURVEY.md §2.1 S3) and parquet row-group
      stats skip non-matching term_ids inside a bucket
   3. per-salt kernel (applyInPandas over disjoint doc_id ranges — the
      per-shard Msg39 computation): decode + prune + score + local
-     top-k via numpy
-  4. driver merge: ``ORDER BY score DESC, doc_id ASC LIMIT k`` over
-     ≤ n_salts × k rows (Msg3a::mergeLists, §2.6 O4)
+     top-k via numpy, per query
+  4. merge of the ≤ n_salts × k candidates per query: ``ORDER BY score
+     DESC, doc_id ASC LIMIT k`` for one query (Msg3a::mergeLists, §2.6
+     O4), a per-query window rank for a batch
 
 Pruning inside the kernel is the MaxScore/block-max family
 (Posdb.cpp getMaxPossibleScore is the reference precedent, §4):
@@ -39,13 +42,13 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from open_source_search_engine_spark.index.builder import load_meta
 from open_source_search_engine_spark.index.segments import block_bound, decode_blocks
 
-KERNEL_SCHEMA = "doc_id long, score double, n_terms int"
+# make_salt_kernel output; the batch kernel prefixes query_id
+KERNEL_SCHEMA = "doc_id long, score double"
 
 # every column the salt kernel reads — scans select exactly these so
 # parquet column pruning drops pos_blob (positions are for the
@@ -108,9 +111,10 @@ def query_term_rows(
 # tombstone tables up to this on-disk size load driver-side into the
 # kernel closure (one pyarrow read, zero extra shuffle — the common
 # trickle-delete case, and merges prune the table besides); above it
-# wand_topk switches to a cogrouped join so a mass delete (retention
-# sweep via the delete_documents DataFrame overload) never funnels
-# through the driver. Mirrors merge.TOMBSTONE_BROADCAST_MAX_BYTES.
+# every read path switches to a cogrouped join
+# (lists.apply_tombstone_aware) so a mass delete (retention sweep via
+# the delete_documents DataFrame overload) never funnels through the
+# driver. Mirrors merge.TOMBSTONE_BROADCAST_MAX_BYTES.
 TOMBSTONE_DRIVER_MAX_BYTES = 64 * 1024 * 1024
 
 
@@ -133,23 +137,6 @@ def _arrays_from_pdf(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
     )
 
 
-def _load_tombstones(
-    spark: SparkSession, index_dir: str | Path
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Driver-side (doc_id, bar) arrays for in-kernel annihilation.
-    Right for the small/common case only — every read path (wand_topk,
-    the positional/boolean kernels in index/lists.py, the warm
-    QueryEngine) switches to cogrouped shipping above
-    TOMBSTONE_DRIVER_MAX_BYTES via tombstones_plan()."""
-    tdir = Path(index_dir) / "tombstones"
-    if not tdir.exists():
-        return None
-    import pyarrow.dataset as ds
-
-    pdf = ds.dataset(str(tdir), format="parquet").to_table().to_pandas()
-    return _arrays_from_pdf(pdf)
-
-
 def tombstones_plan(
     spark: SparkSession, index_dir: str | Path
 ) -> tuple[tuple[np.ndarray, np.ndarray] | None, DataFrame | None]:
@@ -165,10 +152,16 @@ def tombstones_plan(
     the caller gets an aggregated DataFrame instead and must ship it to
     its kernels via a cogrouped shuffle — the Msg5 shape: negative keys
     merged shard-side, never through a coordinator (SURVEY.md §1.1)."""
+    tdir = Path(index_dir) / "tombstones"
     if _tombstones_on_disk_bytes(index_dir) <= TOMBSTONE_DRIVER_MAX_BYTES:
-        return _load_tombstones(spark, index_dir), None
+        if not tdir.exists():
+            return None, None
+        import pyarrow.dataset as ds
+
+        pdf = ds.dataset(str(tdir), format="parquet").to_table().to_pandas()
+        return _arrays_from_pdf(pdf), None
     ts = (
-        spark.read.parquet(str(Path(index_dir) / "tombstones"))
+        spark.read.parquet(str(tdir))
         .groupBy("doc_id")
         .agg(F.max("before_generation").alias("before_generation"))
     )
@@ -207,6 +200,12 @@ def _score_candidates(
     return total, hits
 
 
+def _topk_frame(docs: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"doc_id": docs.astype(np.int64), "score": scores.astype(np.float64)}
+    )
+
+
 def make_salt_kernel(
     term_ids: list[int],
     k: int,
@@ -233,9 +232,7 @@ def make_salt_kernel(
         # empty group (cogrouped tombstone shipping can surface a salt
         # with tombstones but no postings) or unsatisfiable AND
         if len(per_term) == 0 or (mode == "and" and len(per_term) < n_q):
-            return pd.DataFrame({"doc_id": [], "score": [], "n_terms": []}).astype(
-                {"doc_id": "int64", "score": "float64", "n_terms": "int32"}
-            )
+            return _topk_frame(np.empty(0, np.int64), np.empty(0))
 
         if mode == "and":
             # rarest term drives (shortest-list-first, §4): decode the
@@ -258,9 +255,7 @@ def make_salt_kernel(
                 pos_c = np.minimum(pos, docs.size - 1)
                 cand = cand[docs[pos_c] == cand]
             if cand.size == 0:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "n_terms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "n_terms": "int32"})
+                return _topk_frame(cand, np.empty(0))
             lists = []
             for t, rows in per_term.items():
                 mask = _blocks_overlapping(rows, cand)
@@ -270,7 +265,7 @@ def make_salt_kernel(
                 lists.append((int(t), docs, scores))
             total, hits = _score_candidates(cand, lists)
             keep = hits == n_q
-            cand, total, hits = cand[keep], total[keep], hits[keep]
+            cand, total = cand[keep], total[keep]
         else:
             # MaxScore (block-max family). U_t from block metadata only
             # — v2: bounds computed from (block_max_tf, block_min_dl)
@@ -323,105 +318,18 @@ def make_salt_kernel(
                     rows, mask, tombstones=tombstones, rescore=_rs(t)
                 )
                 lists.append((int(t), docs, scores))
-            total, hits = _score_candidates(cand, lists)
+            total, _hits = _score_candidates(cand, lists)
 
-        if cand.size > k:
-            # local top-k with (score desc, doc_id asc) tie-break
-            idx = np.lexsort((cand, -total))[:k]
-        else:
-            idx = np.lexsort((cand, -total))
-        return pd.DataFrame(
-            {
-                "doc_id": cand[idx],
-                "score": total[idx],
-                "n_terms": hits[idx].astype(np.int32),
-            }
-        )
+        # local top-k with (score desc, doc_id asc) tie-break
+        idx = np.lexsort((cand, -total))[:k]
+        return _topk_frame(cand[idx], total[idx])
 
     return kernel
 
 
-def wand_topk(
-    spark: SparkSession,
-    index_dir: str | Path,
-    terms: list[str],
-    k: int = 10,
-    mode: str = "and",
-    round_dp: int | None = 5,
-) -> DataFrame:
-    """Top-k (doc_id, score) — must be rank-identical to
-    bm25.bm25_topk_oracle on the same corpus (§5.2 pinned oracle)."""
-    meta = load_meta(index_dir)
-    n_buckets = meta["config"]["n_buckets"]
-    trows = query_term_rows(spark, index_dir, terms)
-    found = {r["term"] for r in trows}
-    missing_any = len(found) < len(set(terms))
-    if not trows or (mode == "and" and missing_any):
-        # a required term with no posting list ⇒ empty AND result
-        # (Query.cpp default-AND semantics, SURVEY.md §2.2 F2)
-        return spark.createDataFrame([], "doc_id long, score double")
-    tids = sorted({int(r["term_id"]) for r in trows})
-    buckets = sorted({t % n_buckets for t in tids})
-
-    seg = spark.read.parquet(str(Path(index_dir) / "segments"))
-    # generation filter = snapshot isolation on the partition column:
-    # readers only see generations meta.json (the atomic commit
-    # pointer) references, so a concurrent merge/compact's staged or
-    # half-deleted generation dirs are invisible (ADVICE r04)
-    seg = seg.filter(
-        F.col("generation").isin([int(g) for g in meta["generations"]])
-        & F.col("bucket").isin(buckets)
-        & F.col("term_id").isin(tids)
-    )
-    # explicit projection: top-k scoring never touches pos_blob — the
-    # parquet scan prunes the (largest) column entirely
-    seg = seg.select(*KERNEL_INPUT_COLS)
-
-    scoring = scoring_ctx(meta, trows)
-    tombstones_arrays, ts_df = tombstones_plan(spark, index_dir)
-    if ts_df is None:
-        kernel = make_salt_kernel(tids, k, mode, tombstones_arrays, scoring)
-        local = seg.groupBy("salt").applyInPandas(kernel, KERNEL_SCHEMA)
-    else:
-        # mass-delete path: ship tombstones to the kernels through a
-        # cogrouped shuffle instead of the driver. Every salt group
-        # needs the FULL per-doc set — a doc's salt can DRIFT across
-        # generations (salts are doc-ranges over max_doc_id, which
-        # grows with adds), and global tombstones are exactly what
-        # makes that drift safe (a replaced doc's old-salt postings
-        # are annihilated wherever they sit) — so replicate rows to
-        # every salt (n_salts× shuffle volume, no driver round-trip).
-        # Per-task memory is still O(|tombstones|): past that point
-        # the answer is merge/compact, which prunes the table.
-        n_salts = meta["config"]["n_salts"]
-        ts = ts_df.crossJoin(
-            spark.range(n_salts).select(F.col("id").cast("int").alias("salt"))
-        )
-        base_kernel = make_salt_kernel(tids, k, mode, None, scoring)
-
-        def cokernel(seg_pdf: pd.DataFrame, ts_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(seg_pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "n_terms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "n_terms": "int32"})
-            arrays = _arrays_from_pdf(ts_pdf[["doc_id", "before_generation"]])
-            if arrays is None:
-                return base_kernel(seg_pdf)
-            return make_salt_kernel(tids, k, mode, arrays, scoring)(seg_pdf)
-
-        local = (
-            seg.groupBy("salt")
-            .cogroup(ts.groupBy("salt"))
-            .applyInPandas(cokernel, KERNEL_SCHEMA)
-        )
-    if mode == "and":
-        local = local.filter(F.col("n_terms") == len(tids))
-    out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    score = F.round(F.col("score"), round_dp) if round_dp is not None else F.col("score")
-    return out.select("doc_id", score.alias("score"))
 
 
-BATCH_KERNEL_SCHEMA = "query_id string, doc_id long, score double, n_terms int"
+BATCH_KERNEL_SCHEMA = "query_id string, " + KERNEL_SCHEMA
 
 
 def make_batch_salt_kernel(
@@ -434,25 +342,21 @@ def make_batch_salt_kernel(
 
     ``resolved`` = [(query_id, tids sorted, mode)]. Each query runs the
     EXACT single-query kernel (make_salt_kernel) over the sub-frame of
-    its own term_ids — rank-identity with wand_topk is by construction,
-    per query (pinned in tests). Shared terms decode once per query
+    its own term_ids, so a batch of one and a batch of N rank each query
+    identically (pinned in tests). Shared terms decode once per query
     that uses them (bounded duplicate work; the scan and the shuffle —
     the scale costs — are already shared)."""
     kernels = [
-        (qid, tids, mode, make_salt_kernel(tids, k, mode, tombstones, scoring))
+        (qid, tids, make_salt_kernel(tids, k, mode, tombstones, scoring))
         for qid, tids, mode in resolved
     ]
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         groups = {int(t): g for t, g in pdf.groupby("term_id")}
         outs = []
-        for qid, tids, mode, kern in kernels:
+        for qid, tids, kern in kernels:
             subs = [groups[t] for t in tids if t in groups]
-            sub_pdf = pd.concat(subs) if subs else pdf.iloc[0:0]
-            o = kern(sub_pdf)
-            if mode == "and":
-                o = o[o["n_terms"] == len(tids)]
-            o = o.copy()
+            o = kern(pd.concat(subs) if subs else pdf.iloc[0:0])
             o.insert(0, "query_id", qid)
             outs.append(o)
         return pd.concat(outs, ignore_index=True)
@@ -465,8 +369,8 @@ def resolve_batch_queries(
 ) -> list[tuple[str, list[int], str]]:
     """[(query_id, tids sorted, mode)] with per-query empty-result
     semantics applied: a required term with no posting list (AND) or a
-    query with no known terms contributes nothing — identical to
-    wand_topk's default-AND handling, per query."""
+    query with no known terms contributes nothing (Query.cpp default-AND
+    semantics, SURVEY.md §2.2 F2)."""
     resolved: list[tuple[str, list[int], str]] = []
     for qid, (terms, mode) in sorted(queries.items()):
         found = [t for t in set(terms) if t in tid_of]
@@ -476,19 +380,73 @@ def resolve_batch_queries(
     return resolved
 
 
-def merge_batch_topk(local: DataFrame, k: int, round_dp: int | None) -> DataFrame:
-    """Per-query driver-side merge: window rank over the per-salt
-    candidates (≤ n_salts × k rows per query)."""
-    from pyspark.sql import Window
+def topk(
+    ix,
+    queries: dict[str, tuple[list[str], str]],
+    k: int = 10,
+    round_dp: int | None = 5,
+) -> DataFrame:
+    """The one top-k implementation: (query_id, doc_id, score) for
+    ``queries`` = {query_id: (terms, mode)} over an index handle
+    (index.lists.ColdIndex or the warm index.engine.QueryEngine).
+    Every top-k entry point — wand_topk, wand_topk_batch,
+    QueryEngine.topk/topk_batch and the streaming query server — is a
+    thin wrapper over this one function.
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn", "n_terms")
+    One job whatever |Q| (Msg39 serving many queries per shard, SURVEY.md
+    §2.6): the handle resolves every query's terms in one dictionary
+    read, one partition-pruned scan covers the UNION of their term
+    buckets, one per-salt kernel pass runs each query's single-query
+    kernel over its own term groups, with tombstones shipped by the
+    shared size switch (lists.apply_tombstone_aware).
+
+    The merge over the ≤ n_salts × k × |Q| per-salt candidates follows
+    the input size: one resolved query merges by ``ORDER BY score DESC,
+    doc_id ASC LIMIT k`` — a driver-side take on collect, no shuffle
+    (Msg3a::mergeLists, §2.6 O4); more than one ranks per query_id in a
+    window. Queries whose required term is missing (AND) or with no
+    known terms contribute no rows."""
+    from open_source_search_engine_spark.index.lists import apply_tombstone_aware
+
+    spark = ix.spark
+    all_terms = sorted({t for terms, _m in queries.values() for t in terms})
+    trows = ix.term_rows(all_terms)
+    resolved = resolve_batch_queries(
+        queries, {r["term"]: int(r["term_id"]) for r in trows}
     )
+    if not resolved:
+        return spark.createDataFrame([], BATCH_KERNEL_SCHEMA)
+    tids = sorted({t for _q, ts, _m in resolved for t in ts})
+    seg = ix.pruned_segments(tids).drop("bucket")
+    scoring = scoring_ctx(ix.meta, trows)
+    local = apply_tombstone_aware(
+        spark, ix, seg, ("salt",),
+        lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
+        BATCH_KERNEL_SCHEMA,
+    )
+    if len(resolved) == 1:
+        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    else:
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        out = local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
     score = F.round(F.col("score"), round_dp) if round_dp is not None else F.col("score")
     return out.select("query_id", "doc_id", score.alias("score"))
+
+
+def wand_topk(
+    spark: SparkSession,
+    index_dir: str | Path,
+    terms: list[str],
+    k: int = 10,
+    mode: str = "and",
+    round_dp: int | None = 5,
+) -> DataFrame:
+    """Top-k (doc_id, score) — must be rank-identical to
+    bm25.bm25_topk_oracle on the same corpus (§5.2 pinned oracle)."""
+    from open_source_search_engine_spark.index.lists import ColdIndex
+
+    ix = ColdIndex(spark, index_dir)
+    return topk(ix, {"q": (terms, mode)}, k, round_dp).select("doc_id", "score")
 
 
 def wand_topk_batch(
@@ -498,78 +456,8 @@ def wand_topk_batch(
     k: int = 10,
     round_dp: int | None = 5,
 ) -> DataFrame:
-    """Top-k for MANY queries in ONE job: (query_id, doc_id, score).
+    """Top-k for MANY queries in ONE job: (query_id, doc_id, score),
+    rank-identical per query to wand_topk (see topk)."""
+    from open_source_search_engine_spark.index.lists import ColdIndex
 
-    The concurrent-load shape (Msg39 serving many queries per shard,
-    SURVEY.md §2.6): a per-query Spark job pays scheduling + scan setup
-    per query — fine for one user, wrong for a query stream. This
-    batches N queries into one partition-pruned scan over the UNION of
-    their term buckets (Catalyst prunes exactly as for one query — the
-    isin sets are just wider), one per-salt kernel pass that runs each
-    query's unchanged single-query kernel over its own term groups, and
-    one per-query driver-side merge (window rank over
-    ≤ n_salts × k × |Q| rows). Per-query results are rank-identical to
-    wand_topk (tested, both tombstone paths); amortization is the
-    whole point — job count is O(1) in |Q|.
-
-    ``queries`` = {query_id: (terms, mode)}. Queries whose required
-    term is missing (AND) or with no known terms contribute no rows —
-    the same empty-result semantics as wand_topk per query."""
-    meta = load_meta(index_dir)
-    n_buckets = meta["config"]["n_buckets"]
-    all_terms = sorted({t for terms, _m in queries.values() for t in terms})
-    trows = query_term_rows(spark, index_dir, all_terms)
-    tid_of = {r["term"]: int(r["term_id"]) for r in trows}
-
-    resolved = resolve_batch_queries(queries, tid_of)
-    if not resolved:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double")
-
-    tids = sorted({t for _q, ts, _m in resolved for t in ts})
-    buckets = sorted({t % n_buckets for t in tids})
-
-    seg = spark.read.parquet(str(Path(index_dir) / "segments"))
-    seg = seg.filter(
-        F.col("generation").isin([int(g) for g in meta["generations"]])
-        & F.col("bucket").isin(buckets)
-        & F.col("term_id").isin(tids)
-    ).select(*KERNEL_INPUT_COLS)
-
-    scoring = scoring_ctx(meta, trows)
-    tombstones_arrays, ts_df = tombstones_plan(spark, index_dir)
-    if ts_df is None:
-        kernel = make_batch_salt_kernel(resolved, k, tombstones_arrays, scoring)
-        local = seg.groupBy("salt").applyInPandas(kernel, BATCH_KERNEL_SCHEMA)
-    else:
-        # mass-delete path: identical cogrouped shipping to wand_topk
-        # (see the rationale there — global tombstones replicated per
-        # salt keep cross-generation salt drift safe)
-        n_salts = meta["config"]["n_salts"]
-        ts = ts_df.crossJoin(
-            spark.range(n_salts).select(F.col("id").cast("int").alias("salt"))
-        )
-        base_kernel = make_batch_salt_kernel(resolved, k, None, scoring)
-
-        def cokernel(seg_pdf: pd.DataFrame, ts_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(seg_pdf) == 0:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": [], "n_terms": []}
-                ).astype(
-                    {
-                        "query_id": "object",
-                        "doc_id": "int64",
-                        "score": "float64",
-                        "n_terms": "int32",
-                    }
-                )
-            arrays = _arrays_from_pdf(ts_pdf[["doc_id", "before_generation"]])
-            if arrays is None:
-                return base_kernel(seg_pdf)
-            return make_batch_salt_kernel(resolved, k, arrays, scoring)(seg_pdf)
-
-        local = (
-            seg.groupBy("salt")
-            .cogroup(ts.groupBy("salt"))
-            .applyInPandas(cokernel, BATCH_KERNEL_SCHEMA)
-        )
-    return merge_batch_topk(local, k, round_dp)
+    return topk(ColdIndex(spark, index_dir), queries, k, round_dp)

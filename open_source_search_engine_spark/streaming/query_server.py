@@ -10,9 +10,12 @@ micro-batch. So the serving shape is:
     queries — on a real deployment this is the Kafka topic a frontend
     writes to)
       → foreachBatch: ALL queries of the micro-batch served by ONE
-          wand.wand_topk_batch job (one pruned scan over the union of
-          their term buckets, per-query kernel, per-query merge —
-          rank-identical per query to independent wand_topk calls)
+          QueryEngine.topk_batch job on the server's one warm engine
+          (one pruned scan over the union of their term buckets,
+          per-query kernel, per-query merge — rank-identical per query
+          to independent wand_topk calls). The engine's commit-stamp
+          auto-refresh keeps every batch on the committed store without
+          re-listing it per batch.
       → results appended to a sink table keyed by (query_id, batch)
 
 Amortization is the point (BENCH.md §r05 batched: 10.8× the serial
@@ -46,7 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from open_source_search_engine_spark.index import wand
+from open_source_search_engine_spark.index.engine import QueryEngine
 
 QUERY_STREAM_SCHEMA = StructType(
     [
@@ -74,6 +77,7 @@ def start_query_server(
     stops (the request-backlog mode the driver test uses); ``False``
     keeps serving micro-batches as queries arrive."""
     result_dir = Path(result_dir)
+    engine = QueryEngine(spark, index_dir)
     reader = spark.readStream.schema(QUERY_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -84,7 +88,7 @@ def start_query_server(
         if not rows:
             return
         queries = {r["query_id"]: (list(r["terms"]), r["mode"]) for r in rows}
-        out = wand.wand_topk_batch(spark, index_dir, queries, k=k)
+        out = engine.topk_batch(queries, k=k)
         # idempotent re-delivery: each batch owns its partition dir
         # (batch becomes a partition column at read time via basePath)
         out.write.mode("overwrite").parquet(
@@ -101,8 +105,14 @@ def start_query_server(
     return writer.start()
 
 
+RESULT_SCHEMA = "query_id string, doc_id long, score double, batch int"
+
+
 def read_results(spark: SparkSession, result_dir: str | Path):
-    """(query_id, doc_id, score, batch) — the served result log."""
+    """(query_id, doc_id, score, batch) — the served result log; empty
+    (same columns) before the first batch lands."""
+    if not any(Path(result_dir).glob("batch=*")):
+        return spark.createDataFrame([], RESULT_SCHEMA)
     return spark.read.option("basePath", str(result_dir)).parquet(
         str(Path(result_dir) / "batch=*")
     )

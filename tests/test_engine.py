@@ -30,7 +30,7 @@ def test_engine_matches_wand(spark, eng_index):
         ]:
             a = eng.topk(terms, k=10, mode=mode).toPandas()
             b = wand.wand_topk(spark, eng_index, terms, k=10, mode=mode).toPandas()
-            pd.testing.assert_frame_equal(a, b), (terms, mode)
+            pd.testing.assert_frame_equal(a, b, obj=f"{terms} {mode}")
     finally:
         eng.close()
 
@@ -111,9 +111,10 @@ def test_engine_auto_refresh_sees_committed_writes(
         eng.close()
 
 
-def test_engine_topk_batch_matches_topk(spark, eng_index, monkeypatch):
+def test_engine_topk_batch_matches_topk(spark, eng_index):
     """Warm-path batch must be rank-identical, per query, to serial
-    engine.topk on both tombstone paths."""
+    engine.topk (the cogrouped tombstone path is pinned on a mutated
+    store in test_merge's positional/boolean cogroup test)."""
     Q = {
         "and2": (["def", "return"], "and"),
         "or2": (["dup", "if"], "or"),
@@ -121,24 +122,18 @@ def test_engine_topk_batch_matches_topk(spark, eng_index, monkeypatch):
     }
     eng = QueryEngine(spark, eng_index, auto_refresh=False)
     try:
-        def check():
-            batch = eng.topk_batch(Q, k=10).toPandas()
-            for qid, (terms, mode) in Q.items():
-                want = eng.topk(terms, k=10, mode=mode).toPandas()
-                got = (
-                    batch[batch["query_id"] == qid][["doc_id", "score"]]
-                    .reset_index(drop=True)
-                )
-                assert list(got["doc_id"]) == list(want["doc_id"]), qid
-                assert got["score"].tolist() == pytest.approx(
-                    want["score"].tolist()
-                ), qid
-            assert len(batch[batch["query_id"] == "missing"]) == 0
-            assert len(batch) > 0
-
-        check()
-        monkeypatch.setattr(wand, "TOMBSTONE_DRIVER_MAX_BYTES", -1)
-        check()
-        monkeypatch.undo()
+        batch = eng.topk_batch(Q, k=10).toPandas()
+        for qid, (terms, mode) in Q.items():
+            want = eng.topk(terms, k=10, mode=mode).toPandas()
+            got = (
+                batch[batch["query_id"] == qid][["doc_id", "score"]]
+                .reset_index(drop=True)
+            )
+            assert list(got["doc_id"]) == list(want["doc_id"]), qid
+            assert got["score"].tolist() == pytest.approx(
+                want["score"].tolist()
+            ), qid
+        assert len(batch[batch["query_id"] == "missing"]) == 0
+        assert len(batch) > 0
     finally:
         eng.close()

@@ -338,7 +338,7 @@ def test_warm_engine_cache_does_not_corrupt_later_merges(spark, corpora, tmp_pat
     builder.build_index(
         spark, base, d, cfg=TEST_CFG, text_col="content", tokenizer_mode="code"
     )
-    eng = QueryEngine(spark, d)  # persists term_dict → cache entry exists
+    eng = QueryEngine(spark, d)
     assert eng.topk(["def"], k=5).count() == 5
 
     extra_pdf = extra.toPandas()
@@ -422,6 +422,16 @@ def test_positional_boolean_cogrouped_tombstones_match_driver_path(
                     spark, d, ["scan", "merge"], k=15
                 ).toPandas(),
                 "warm_topk": eng.topk(["def", "return"], k=25, mode="or").toPandas(),
+                "warm_batch": eng.topk_batch(
+                    {
+                        "or2": (["def", "return"], "or"),
+                        "and2": (["scan", "merge"], "and"),
+                        "missing": (["scan", "zzz_not_a_term"], "and"),
+                    },
+                    k=25,
+                )
+                .orderBy("query_id", F.desc("score"), "doc_id")
+                .toPandas(),
                 "warm_bool": eng.boolean("def AND NOT scan")
                 .orderBy("doc_id")
                 .toPandas(),
@@ -437,10 +447,13 @@ def test_positional_boolean_cogrouped_tombstones_match_driver_path(
 
     for key in want:
         pd.testing.assert_frame_equal(
-            got[key].reset_index(drop=True), want[key].reset_index(drop=True)
-        ), key
+            got[key].reset_index(drop=True), want[key].reset_index(drop=True),
+            obj=key,
+        )
     # non-vacuous: deletes visible, results non-empty
     assert len(want["postings"]) > 0 and len(want["warm_topk"]) > 0
+    assert set(want["warm_batch"]["query_id"]) == {"or2", "and2"}
+    assert not any(int(x) % 5 == 0 for x in want["warm_batch"]["doc_id"])
     assert not any(int(x) % 5 == 0 for x in want["postings"]["doc_id"])
     assert not any(int(x) % 5 == 0 for x in want["warm_bool"]["doc_id"])
 

@@ -200,9 +200,10 @@ def test_streaming_with_merge_policy_bounds_generations(spark, tmp_path):
 
 def test_streaming_query_server(spark, tmp_path):
     """Queries arrive as a stream; each micro-batch is served by ONE
-    wand_topk_batch job; results are rank-identical per query to
-    wand_topk, and a second wave served from the same checkpoint
-    appends its own batch partition without reprocessing wave 1."""
+    QueryEngine.topk_batch job; results are rank-identical per query to
+    wand_topk, and a second wave served from the same checkpoint after
+    an add_documents commit appends its own batch partition, served
+    from the committed store, without reprocessing wave 1."""
     import pandas as pd
 
     from open_source_search_engine_spark.streaming.query_server import (
@@ -229,36 +230,54 @@ def test_streaming_query_server(spark, tmp_path):
     spark.createDataFrame(wave1, QUERY_STREAM_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(qdir))
+    assert read_results(spark, rdir).count() == 0  # typed, before any batch
     q = start_query_server(spark, idx, qdir, rdir, ckpt, k=10)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+
+    def ranked(df):
+        # the sink keeps no rank: order both sides by (score desc,
+        # doc_id asc) so docs tied at the rounded score compare stably
+        return (
+            df.sort_values(["score", "doc_id"], ascending=[False, True])[
+                ["doc_id", "score"]
+            ]
+            .reset_index(drop=True)
+        )
+
+    def served(res, qid):
+        return ranked(res[res["query_id"] == qid])
 
     res = read_results(spark, rdir).toPandas()
     assert set(res["batch"]) == {0}
     for qid, terms, mode in wave1:
         want = wand.wand_topk(spark, idx, terms, k=10, mode=mode).toPandas()
-        got = (
-            res[res["query_id"] == qid]
-            .sort_values("score", ascending=False)[["doc_id", "score"]]
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, want), qid
+        pd.testing.assert_frame_equal(served(res, qid), ranked(want), obj=qid)
     assert len(res[res["query_id"] == "w1_missing"]) == 0
 
-    # wave 2 from the SAME checkpoint: only the new file is served
-    wave2 = [("w2_single", ["scan"], "and")]
+    # a commit between the waves: one doc carrying a term no wave-1
+    # query could find
+    new_id = 10_000
+    merge.add_documents(
+        spark,
+        spark.createDataFrame(
+            pd.DataFrame({"doc_id": [new_id], "content": ["zzzwavetwo scan"]})
+        ),
+        idx,
+    )
+
+    # wave 2 from the SAME checkpoint: only the new file is served, on
+    # the committed store
+    wave2 = [("w2_single", ["scan"], "and"), ("w2_new", ["zzzwavetwo"], "and")]
     spark.createDataFrame(wave2, QUERY_STREAM_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(qdir))
     q2 = start_query_server(spark, idx, qdir, rdir, ckpt, k=10)
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
 
     res2 = read_results(spark, rdir).toPandas()
     assert set(res2["batch"]) == {0, 1}
-    assert set(res2[res2["batch"] == 1]["query_id"]) == {"w2_single"}
-    want = wand.wand_topk(spark, idx, ["scan"], k=10, mode="and").toPandas()
-    got = (
-        res2[res2["query_id"] == "w2_single"]
-        .sort_values("score", ascending=False)[["doc_id", "score"]]
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want)
+    assert set(res2[res2["batch"] == 1]["query_id"]) == {"w2_single", "w2_new"}
+    for qid, terms, mode in wave2:
+        want = wand.wand_topk(spark, idx, terms, k=10, mode=mode).toPandas()
+        pd.testing.assert_frame_equal(served(res2, qid), ranked(want), obj=qid)
+    assert list(served(res2, "w2_new")["doc_id"]) == [new_id]
