@@ -113,7 +113,7 @@ def main() -> None:
     medians["wand_topk_total"] = round(sum(lats_med), 3)
 
     # --- warm query-loop path (QueryEngine: cached segment listing,
-    # doc_meta and tombstone plan — the RdbCache analog the reference
+    # doc_meta and tombstone snapshot — the RdbCache analog the reference
     # serves repeated queries from) ---
     from open_source_search_engine_spark.index.engine import QueryEngine
 

@@ -15,7 +15,7 @@ manifests on top — no Iceberg jar in-sandbox, SURVEY.md §7 M0):
     term_dict/                     (term, term_id, df)
     segments/generation=G/bucket=B/   block rows (segments.BLOCK_SCHEMA)
     manifest/generation=G/         per-bucket lineage/checkpoint rows
-    tombstones/                    (doc_id, before_generation)
+    tombstones/                    (doc_id, before_generation) — tombstones.py
 
 Partitioning at scale: ``bucket = term_id % n_buckets`` makes query
 term lookup partition-prunable (O(k) buckets touched per query, not
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.config import EngineConfig
+from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.segments import (
     BLOCK_SCHEMA,
     SEGMENT_FORMAT,
@@ -265,7 +266,7 @@ def refresh_read_caches(spark: SparkSession, index_dir: str | Path) -> None:
     Writers call this after each commit point; the persisted reads
     self-heal because Spark re-caches them lazily from the new files."""
     index_dir = Path(index_dir)
-    for sub in ("term_dict", "segments", "doc_meta", "manifest", "tombstones"):
+    for sub in ("term_dict", "segments", "doc_meta", "manifest", T.DIR):
         p = index_dir / sub
         if p.exists():
             spark.catalog.refreshByPath(str(p))

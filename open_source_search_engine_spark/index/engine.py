@@ -3,10 +3,11 @@
 The reference keeps termlist metadata and hot lists in RdbCache
 (RdbCache.cpp, SURVEY.md §4 'list caching'); the Spark analog is an
 index handle that lists the segment store, plans live doc_meta and
-loads the tombstone plan once per commit instead of once per call. It
-IS a ``lists.ColdIndex`` — the term lookup (driver-side pyarrow read of
-the term-sorted dictionary, no Spark job) and the pruned segment scan
-are the cold handle's own — with those three listings cached. Every
+takes the tombstone snapshot (index/tombstones.py) once per commit
+instead of once per call. It IS a ``lists.ColdIndex`` — the term
+lookup (driver-side pyarrow read of the term-sorted dictionary, no
+Spark job) and the pruned segment scan are the cold handle's own —
+with those three cached. Every
 operator that takes an index path takes the engine instead: top-k
 (``wand.topk``, the one top-k implementation), boolean/facets/sort/
 pagination, phrase, the query language and nested boolean expressions.
@@ -18,6 +19,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index import wand as W
 from open_source_search_engine_spark.index.builder import load_meta
 from open_source_search_engine_spark.index.lists import ColdIndex
@@ -48,13 +50,7 @@ class QueryEngine(ColdIndex):
         build/add/merge/compact; delete_documents only touches the
         tombstones dir, so fold in its file set too."""
         meta_m = (self.index_dir / "meta.json").stat().st_mtime_ns
-        tdir = self.index_dir / "tombstones"
-        ts_state = (
-            tuple(sorted(p.name for p in tdir.glob("*.parquet")))
-            if tdir.exists()
-            else ()
-        )
-        return (meta_m, ts_state)
+        return (meta_m, tuple(p.name for p in T.files(self.index_dir)))
 
     def _maybe_refresh(self) -> None:
         if self.auto_refresh and self._commit_stamp() != self._stamp:
@@ -63,22 +59,15 @@ class QueryEngine(ColdIndex):
     def _load(self) -> None:
         self._stamp = self._commit_stamp()
         self.meta = load_meta(self.index_dir)
-        # listing + schema inference once per commit (shadows the cold
-        # handle's lazily read ``segments``)
+        # listings + schema inference once per commit (shadow the cold
+        # handle's lazily read ``segments`` and ``tombstones``)
         self.segments = self.spark.read.parquet(str(self.index_dir / "segments"))
+        self.tombstones = T.Snapshot(self.spark, self.index_dir)
         self._doc_meta = super().doc_meta_df()
-        # size-switched (ADVICE r04 medium): after a mass delete the
-        # warm engine keeps a DataFrame plan instead of materializing a
-        # corpus-scale tombstone table on the driver; every query entry
-        # point then ships it to the kernels via a cogrouped shuffle
-        self._ts_plan = super().tombstones_plan()
 
     def refresh(self) -> None:
         """Pick up new generations/tombstones (after add/delete)."""
         self._load()
-
-    def tombstones_plan(self):
-        return self._ts_plan
 
     def doc_meta_df(self) -> DataFrame:
         return self._doc_meta

@@ -14,7 +14,9 @@ SURVEY.md §3.1). The Spark expression:
 
 and every operator downstream is plain DataFrame algebra over those
 rows. Nothing re-tokenizes the corpus at query time; the scan cost is
-O(query's posting lists), not O(corpus).
+O(query's posting lists), not O(corpus). Deletes are annihilated
+inside the decode kernels, shipped by the handle's tombstone snapshot
+(index/tombstones.py).
 
 Parallelism: the decode groups by (salt, bucket) — all generations of
 one (term, salt) share a bucket (bucket = term_id % n_buckets), so
@@ -34,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.builder import load_meta
 from open_source_search_engine_spark.index.segments import decode_blocks
 from open_source_search_engine_spark.index import wand as W
@@ -59,52 +62,14 @@ def require_positions(meta: dict) -> None:
         )
 
 
-def live_doc_meta(spark: SparkSession, index_dir, meta: dict) -> DataFrame:
-    """Live view of doc_meta: newest row per doc_id, minus tombstoned
-    docs — the same liveness rule compact() applies (merge.compact),
-    enforced at READ time so facets / NOT universes / metadata filters
-    stay correct between a delete/replace and the next compact (the
-    reference's Msg5 merged read applies negative keys on every list
-    read, RdbList.cpp — doc_meta is titledb here, SURVEY.md §2.1 S8).
-
-    Fresh gen-0 indexes (the common case) skip the groupBy entirely:
-    one generation and no tombstones means every row is live, so the
-    raw pruned parquet scan survives untouched."""
-    dm = spark.read.parquet(str(Path(index_dir) / "doc_meta"))
-    tdir = Path(index_dir) / "tombstones"
-    has_ts = tdir.exists() and any(tdir.glob("*.parquet"))
-    if len(meta.get("generations", [0])) <= 1 and not has_ts:
-        return dm.drop("gen")
-    extra = [c for c in dm.columns if c not in ("doc_id", "gen")]
-    dm = dm.groupBy("doc_id").agg(
-        *[F.max_by(c, "gen").alias(c) for c in extra],
-        F.max("gen").alias("gen"),
-    )
-    if has_ts:
-        ts = (
-            spark.read.parquet(str(tdir))
-            .groupBy("doc_id")
-            .agg(F.max("before_generation").alias("before_generation"))
-        )
-        # broadcast only the trickle-delete case; a mass delete joins
-        # by shuffle (both sides keyed on doc_id) instead of pushing a
-        # corpus-scale table through the driver (VERDICT r04 item 1)
-        if W._tombstones_on_disk_bytes(index_dir) <= W.TOMBSTONE_DRIVER_MAX_BYTES:
-            ts = F.broadcast(ts)
-        dm = dm.join(ts, "doc_id", "left").filter(
-            F.col("before_generation").isNull()
-            | (F.col("gen") >= F.col("before_generation"))
-        )
-    return dm.select("doc_id", *extra)
-
-
 class ColdIndex:
     """One-shot index handle: ``meta``, ``term_rows``,
-    ``pruned_segments``, ``tombstones_plan``, ``doc_meta_df``. Every
+    ``pruned_segments``, ``tombstones`` (one index.tombstones.Snapshot
+    shared by every read through the handle), ``doc_meta_df``. Every
     operator in this module, operators/indexed.py and wand.topk takes a
     handle (or a path, via as_handle). The warm subclass
     index.engine.QueryEngine caches the segment listing, live doc_meta
-    and tombstone plan per commit, so query loops pay that IO once
+    and tombstone snapshot per commit, so query loops pay that IO once
     (RdbCache, SURVEY.md §4)."""
 
     def __init__(self, spark: SparkSession, index_dir):
@@ -136,67 +101,19 @@ class ColdIndex:
             cols.append("pos_blob")
         return seg.select(*cols)
 
-    def tombstones_plan(self):
-        return W.tombstones_plan(self.spark, self.index_dir)
+    @cached_property
+    def tombstones(self) -> T.Snapshot:
+        return T.Snapshot(self.spark, self.index_dir)
 
     def doc_meta_df(self) -> DataFrame:
-        return live_doc_meta(self.spark, self.index_dir, self.meta)
+        return T.live_doc_meta(
+            self.spark, self.index_dir, self.meta["generations"], self.tombstones
+        )
 
 
 def as_handle(spark: SparkSession, ix) -> ColdIndex:
     """Normalize a str/Path index dir or an already-open handle."""
     return ix if isinstance(ix, ColdIndex) else ColdIndex(spark, ix)
-
-
-def apply_tombstone_aware(
-    spark: SparkSession,
-    ix,
-    seg: DataFrame,
-    group_cols: tuple[str, ...],
-    kernel_factory,
-    out_schema: str,
-    buckets: list[int] | None = None,
-) -> DataFrame:
-    """Run a per-group decode kernel with size-switched tombstone
-    shipping — the ONE mass-delete guard every indexed read path shares
-    (VERDICT r04 item 1; mirrors Msg5 merging negative keys shard-side,
-    SURVEY.md §1.1, never through a coordinator).
-
-    ``kernel_factory(arrays) -> kernel(pdf) -> pdf`` closes over the
-    (doc_id, before_generation) annihilation arrays. Below
-    TOMBSTONE_DRIVER_MAX_BYTES the arrays load driver-side once and the
-    plain groupBy path runs unchanged (zero extra shuffle). Above it,
-    the aggregated tombstone table is replicated to every group key
-    (salts × touched buckets — bounded by the QUERY's bucket set, so
-    the blow-up is n_salts × |query terms'| buckets, not corpus-scale;
-    doc-range salts drift across generations, so every salt needs the
-    full per-doc set: a replaced doc's old-salt postings must be
-    annihilated wherever they sit) and cogrouped into the kernels.
-    Per-task memory is O(|tombstones|); past that point the answer is
-    merge/compact, which prunes the table. Kernels must tolerate an
-    empty input frame (a group present only on the tombstone side)."""
-    arrays, ts_df = ix.tombstones_plan()
-    if ts_df is None:
-        return seg.groupBy(*group_cols).applyInPandas(
-            kernel_factory(arrays), out_schema
-        )
-    n_salts = ix.meta["config"]["n_salts"]
-    keys = spark.range(n_salts).select(F.col("id").cast("int").alias("salt"))
-    if "bucket" in group_cols:
-        keys = keys.crossJoin(
-            spark.createDataFrame([(int(b),) for b in sorted(buckets)], "bucket int")
-        )
-    ts_rep = ts_df.crossJoin(keys)
-
-    def cokernel(seg_pdf: pd.DataFrame, ts_pdf: pd.DataFrame) -> pd.DataFrame:
-        arrays2 = W._arrays_from_pdf(ts_pdf[["doc_id", "before_generation"]])
-        return kernel_factory(arrays2)(seg_pdf)
-
-    return (
-        seg.groupBy(*group_cols)
-        .cogroup(ts_rep.groupBy(*group_cols))
-        .applyInPandas(cokernel, out_schema)
-    )
 
 
 def term_postings(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame:
@@ -244,9 +161,9 @@ def term_postings(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame
 
         return kernel
 
-    return apply_tombstone_aware(
-        spark, ix, seg, ("salt", "bucket"), kernel_factory, POSTING_SCHEMA,
-        buckets=sorted({t % n_buckets for t in tids}),
+    return ix.tombstones.apply_kernel(
+        seg, ("salt", "bucket"), kernel_factory, POSTING_SCHEMA,
+        ix.meta["config"]["n_salts"], buckets=sorted({t % n_buckets for t in tids}),
     )
 
 
@@ -283,8 +200,8 @@ def phrase_docs(spark: SparkSession, index_dir, words: list[str]) -> DataFrame:
     def kernel_factory(tombstones):
         return _phrase_kernel(word_tids, n_words, tombstones)
 
-    return apply_tombstone_aware(
-        spark, ix, seg, ("salt",), kernel_factory, PHRASE_SCHEMA
+    return ix.tombstones.apply_kernel(
+        seg, ("salt",), kernel_factory, PHRASE_SCHEMA, ix.meta["config"]["n_salts"]
     )
 
 

@@ -9,11 +9,13 @@ LSM semantics lifted from the reference (SURVEY.md §1.1, §2.10):
     scores until compaction (the reference precedent: Posdb term
     frequencies are approximate and drift between merges,
     Posdb::getTermFreq — exactness is restored by ``compact``).
-  * ``delete_documents`` → tombstone rows ``(doc_id,
-    before_generation)`` — negative keys (RdbList.cpp delete-key
-    annihilation). Queries apply them at read time (Msg5-style merged
-    read); ``replace=True`` adds makes updates: old version
-    annihilated, new version indexed.
+  * ``delete_documents`` → tombstones — negative keys (RdbList.cpp
+    delete-key annihilation) that mask a doc below a generation bar.
+    Queries apply them at read time (Msg5-style merged read);
+    ``replace=True`` adds makes updates: old version annihilated, new
+    version indexed. The format, the size switch and the doc_meta
+    liveness view live in ``index/tombstones.py``; this module only
+    picks the bars and calls it.
   * ``compact``          → the full merge (RdbBase::attemptMerge /
     RdbMerge.cpp): decode all generations back to posting tuples
     (vectorized mapInPandas), drop tombstoned versions, rebuild ONE
@@ -57,35 +59,9 @@ from open_source_search_engine_spark.functions.codec import (
     varint_decode,
 )
 from open_source_search_engine_spark.index import builder as B
+from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.operators.postings import fast_postings
 from open_source_search_engine_spark.operators.stats import term_stats
-
-TOMBSTONE_SCHEMA = "doc_id long, before_generation int"
-
-
-def _write_tombstones(index_dir: Path, doc_ids, gen: int) -> None:
-    """Driver-side pyarrow write — tombstones are metadata-scale (the
-    reference's negative keys are single records, Rdb::addRecord); a
-    distributed write of a handful of ids costs ~5 s of job overhead."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tdir = index_dir / "tombstones"
-    tdir.mkdir(parents=True, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([int(d) for d in doc_ids], pa.int64()),
-                "before_generation": pa.array(
-                    [gen] * len(doc_ids), pa.int32()
-                ),
-            }
-        ),
-        tdir / f"tombstones-{uuid.uuid4().hex}.parquet",
-    )
-
 
 def _cfg_from_meta(meta: dict) -> EngineConfig:
     c = dict(meta["config"])
@@ -109,21 +85,12 @@ def _next_gen(index_dir: Path, meta: dict) -> int:
     return max([*current_generations(index_dir), *meta["generations"]]) + 1
 
 
-def _live_doc_stats(spark: SparkSession, index_dir: Path):
-    """Exact (n_docs, avgdl, max_doc_id) over the LIVE document set:
-    newest doc_meta row per doc, minus tombstoned docs — the read
-    path's liveness rule, applied to stats so scored reads stay exact
-    under deletes too (v2 read-time scoring uses meta's N/avgdl)."""
-    dm = (
-        spark.read.parquet(str(index_dir / "doc_meta"))
-        .groupBy("doc_id")
-        .agg(
-            F.max_by("doc_len", "gen").alias("doc_len"),
-            F.max("gen").alias("gen"),
-        )
-    )
-    dm = _apply_tombstones(dm, _tombstones_per_doc(spark, index_dir), gen_col="gen")
-    return dm.agg(
+def _live_doc_stats(dm_live: DataFrame):
+    """Exact (n_docs, avgdl, max_doc_id) over the live document set
+    (tombstones.live_doc_meta) — the read path's liveness rule, applied
+    to stats so scored reads stay exact under deletes too (v2
+    read-time scoring uses meta's N/avgdl)."""
+    return dm_live.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("doc_len").alias("avgdl"),
         F.max("doc_id").alias("max_doc_id"),
@@ -141,54 +108,8 @@ def _live_doc_stats(spark: SparkSession, index_dir: Path):
 # single commit point for generations AND stats.
 
 
-# tombstone tables up to this on-disk size ship as a map-side hash
-# join; above it the merge joins them with a plain shuffle — a
-# retention sweep / mass takedown written through the DataFrame
-# overload of delete_documents is corpus-scale, and broadcasting it
-# would funnel the whole delete set through the driver.
-TOMBSTONE_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _tombstones_per_doc(
-    spark: SparkSession, index_dir: Path
-) -> tuple[DataFrame, bool] | None:
-    """One row per doc_id (max before_generation wins — the read-path
-    aggregation) plus a fits-in-a-broadcast flag decided from the
-    on-disk parquet size, or None when no tombstones exist."""
-    tdir = Path(index_dir) / "tombstones"
-    if not tdir.exists():
-        return None
-    on_disk = sum(p.stat().st_size for p in tdir.glob("*.parquet"))
-    ts = (
-        spark.read.parquet(str(tdir))
-        .groupBy("doc_id")
-        .agg(F.max("before_generation").alias("before_generation"))
-    )
-    return ts, on_disk <= TOMBSTONE_BROADCAST_MAX_BYTES
-
-
-def _apply_tombstones(
-    rows: DataFrame,
-    ts_small: tuple[DataFrame, bool] | None,
-    gen_col: str = "generation",
-) -> DataFrame:
-    """Annihilate rows whose ``gen_col`` sits below the doc's
-    tombstone bar (RdbList delete-key semantics)."""
-    if ts_small is None:
-        return rows
-    ts, small = ts_small
-    return (
-        rows.join(F.broadcast(ts) if small else ts, "doc_id", "left")
-        .filter(
-            F.col("before_generation").isNull()
-            | (F.col(gen_col) >= F.col("before_generation"))
-        )
-        .drop("before_generation")
-    )
-
-
 def _live_postings(
-    spark: SparkSession, index_dir: Path, generations: list[int]
+    spark: SparkSession, index_dir: Path, generations: list[int], snap: T.Snapshot
 ) -> DataFrame:
     """decode → tombstone-filter → newest-generation-wins: the shared
     merged read (Msg5's view of an Rdb) used by both ``compact`` (all
@@ -197,74 +118,11 @@ def _live_postings(
     crashed merge's garbage dirs are never decoded."""
     seg = spark.read.parquet(str(index_dir / "segments"))
     seg = seg.filter(F.col("generation").isin([int(g) for g in generations]))
-    posts = _apply_tombstones(
-        decode_segments_to_postings(seg), _tombstones_per_doc(spark, index_dir)
-    )
+    posts = snap.mask(decode_segments_to_postings(seg), "generation")
     aggs = [F.max_by("tf", "generation").cast("int").alias("tf")]
     if "pos_blob" in posts.columns:
         aggs.append(F.max_by("pos_blob", "generation").alias("pos_blob"))
     return posts.groupBy("term_id", "doc_id").agg(*aggs)
-
-
-def _prune_tombstones(
-    spark: SparkSession, index_dir: Path, base_generations: list[int]
-) -> None:
-    """Drop tombstone rows that no longer mask anything, and collapse
-    the rest to one row per doc. After a delta merge a tombstone
-    ``(doc_id, bg)`` still matters iff it masks (a) BASE-generation
-    postings — the doc was in the base build, i.e. doc_meta has a row
-    at the base generation (min of meta['generations']; 0 for a fresh
-    build, higher after a compact — every surviving delta posting
-    carries a generation above every existing bg, so only the base can
-    be masked) — or (b) the doc_meta liveness view — the doc's newest
-    meta row sits below bg (a doc added and then deleted entirely
-    within the delta tier). The common replace-in-delta rows are dead
-    after the merge, and without this sweep continuous replace-mode
-    ingest grows the table by one row per updated doc per batch —
-    an unbounded cost every read and every future merge would re-join.
-
-    Crash-safe by construction: the pruned rows are APPENDED into the
-    tombstones dir first (union semantics are unchanged — the pruned
-    set is a semantic subset and reads take max-per-doc), then the old
-    files are unlinked. Concurrency (ADVICE r04): the old-file set is
-    globbed BEFORE the read plan is built and the read targets exactly
-    those files, so a tombstone file appended by a concurrent
-    delete_documents between listing and unlink is neither folded nor
-    deleted — no delete is ever silently lost; any crash point leaves a
-    correct superset."""
-    tdir = Path(index_dir) / "tombstones"
-    if not tdir.exists():
-        return
-    old_files = sorted(tdir.glob("*.parquet"))
-    if not old_files:
-        return
-    base_gen = min(int(g) for g in base_generations)
-    ts = (
-        spark.read.parquet(*[str(f) for f in old_files])
-        .groupBy("doc_id")
-        .agg(F.max("before_generation").alias("before_generation"))
-    )
-    dm = (
-        spark.read.parquet(str(index_dir / "doc_meta"))
-        .groupBy("doc_id")
-        .agg(
-            F.max("gen").alias("max_gen"),
-            F.max((F.col("gen") == base_gen).cast("int")).alias("has_base"),
-        )
-    )
-    live = (
-        ts.join(dm, "doc_id", "left")
-        .filter(
-            (F.col("has_base") == 1)
-            | (F.col("max_gen") < F.col("before_generation"))
-        )
-        .select("doc_id", F.col("before_generation").cast("int").alias("before_generation"))
-    )
-    live.write.mode("append").parquet(str(tdir))
-    for p in old_files:
-        p.unlink()
-    if not any(tdir.glob("*.parquet")):
-        shutil.rmtree(tdir)
 
 
 def delete_documents(
@@ -279,19 +137,11 @@ def delete_documents(
     retention sweep, a licence takedown over millions of docs) never
     route ids through the driver — the same fan-out the replace branch
     of add_documents uses."""
-    index_dir = Path(index_dir)
     # the bar comes from the COMMITTED generation set: a crashed
     # merge's garbage dir must never inflate it past generations a
     # future add will legitimately use (which the bar would mask)
     gen = max(B.load_meta(index_dir)["generations"]) + 1
-    if isinstance(doc_ids, DataFrame):
-        doc_ids.select(
-            F.col("doc_id").cast("long"),
-            F.lit(gen).cast("int").alias("before_generation"),
-        ).write.mode("append").parquet(str(index_dir / "tombstones"))
-    else:
-        _write_tombstones(index_dir, doc_ids, gen)
-    spark.catalog.refreshByPath(str(index_dir / "tombstones"))
+    T.append(spark, index_dir, doc_ids, gen)
 
 
 def add_documents(
@@ -349,18 +199,13 @@ def add_documents(
         tok_text_col = "__text_anchored"
 
     if replace:
-        # distributed tombstone append — never collect incoming ids to
-        # the driver (a large re-ingest would OOM it; the reference's
-        # negative keys flow through the same Msg4 fan-out as adds).
-        # Spark's _SUCCESS/_committed files start with '_' and are
-        # ignored by both spark.read and pyarrow.dataset discovery, so
-        # they coexist with the driver-written tombstone files.
+        # distributed append — never collect incoming ids to the driver
+        # (a large re-ingest would OOM it; the reference's negative
+        # keys flow through the same Msg4 fan-out as adds).
         # NOTE df drift (documented): replaced docs' term_dict df is
         # not decremented here, so scores drift upward until compact();
         # under a long replace=True loop run compact() periodically.
-        docs.select(
-            F.col("doc_id"), F.lit(gen).cast("int").alias("before_generation")
-        ).write.mode("append").parquet(str(index_dir / "tombstones"))
+        T.append(spark, index_dir, docs, gen)
 
     posts = fast_postings(
         tok_docs, tok_text_col, "doc_id", mode=tok_mode, stopwords=cfg.stopwords
@@ -418,7 +263,10 @@ def add_documents(
     # refresh global stats + term_dict (df adds up; N/avgdl over the
     # LIVE doc set — tombstone-filtered, so deletes are reflected too
     # and v2 read-time scoring stays exact under add+delete traffic)
-    row = _live_doc_stats(spark, index_dir)
+    generations = sorted(set(meta["generations"]) | {gen})
+    row = _live_doc_stats(
+        T.live_doc_meta(spark, index_dir, generations, T.Snapshot(spark, index_dir))
+    )
     old_dict = spark.read.parquet(str(index_dir / "term_dict"))
     merged_dict = (
         old_dict.unionByName(term_stats(posts))
@@ -450,7 +298,7 @@ def add_documents(
         n_docs=float(row["n_docs"]),
         avgdl=float(row["avgdl"]),
         max_doc_id=new_max,
-        generations=sorted(set(meta["generations"]) | {gen}),
+        generations=generations,
         epoch=new_epoch,
     )
     B._write_meta(index_dir, meta)  # THE commit point
@@ -515,12 +363,6 @@ def decode_segments_to_postings(seg: DataFrame) -> DataFrame:
     return seg.mapInPandas(it, schema)
 
 
-# _drop_unreferenced_generations moved to builder (it now runs inside
-# every writer's load_meta(recover=True) as part of crash recovery);
-# kept as an alias for callers/tests addressing it through this module.
-_drop_unreferenced_generations = B._drop_unreferenced_generations
-
-
 def compact(spark: SparkSession, index_dir: str | Path) -> dict:
     """Full merge: all committed generations − tombstones → ONE fresh
     base generation with exact stats. Equivalent to a from-scratch
@@ -545,30 +387,18 @@ def compact(spark: SparkSession, index_dir: str | Path) -> dict:
     meta = B.load_meta(index_dir, recover=True)
     cfg = _cfg_from_meta(meta)
     committed = [int(g) for g in meta["generations"]]
-    _drop_unreferenced_generations(index_dir, committed)
     new_gen = _next_gen(index_dir, meta)
 
-    posts = _live_postings(spark, index_dir, generations=committed)
+    snap = T.Snapshot(spark, index_dir)
+    posts = _live_postings(spark, index_dir, committed, snap)
 
-    # live doc_meta: liveness comes from doc_meta MINUS tombstones,
-    # NOT from surviving posting doc_ids — a live doc with zero
-    # postings (empty/whitespace-only content) must keep its
-    # sha256/meta row and count toward n_docs/avgdl, or compact would
-    # silently diverge from a from-scratch build over the live set.
-    dm_src = spark.read.parquet(str(index_dir / "doc_meta"))
-    extra_cols = [c for c in dm_src.columns if c not in ("doc_id", "gen")]
-    dm = dm_src.groupBy("doc_id").agg(
-        *[F.max_by(c, "gen").alias(c) for c in extra_cols],
-        F.max("gen").alias("gen"),
-    )
-    dm = _apply_tombstones(dm, _tombstones_per_doc(spark, index_dir), gen_col="gen")
-    dm_live = dm.select("doc_id", *extra_cols)
-
-    row = dm_live.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.max("doc_id").alias("max_doc_id"),
-    ).collect()[0]
+    # liveness comes from doc_meta MINUS tombstones, NOT from surviving
+    # posting doc_ids — a live doc with zero postings (empty/whitespace-
+    # only content) must keep its sha256/meta row and count toward
+    # n_docs/avgdl, or compact would silently diverge from a
+    # from-scratch build over the live set.
+    dm_live = T.live_doc_meta(spark, index_dir, committed, snap)
+    row = _live_doc_stats(dm_live)
     n_docs, avgdl, max_id = float(row["n_docs"]), float(row["avgdl"]), int(row["max_doc_id"])
 
     new_dict = (
@@ -606,9 +436,7 @@ def compact(spark: SparkSession, index_dir: str | Path) -> dict:
             old = index_dir / name / f"generation={g}"
             if old.exists():
                 shutil.rmtree(old)
-    tdir = index_dir / "tombstones"
-    if tdir.exists():
-        shutil.rmtree(tdir)
+    T.clear(index_dir)
     B.refresh_read_caches(spark, index_dir)
     return meta
 
@@ -627,7 +455,7 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
         delta posting an earlier delete/replace annihilated never
         reaches the new generation); rows still masking the base
         generation or the doc_meta liveness view are RETAINED (one row
-        per doc), the rest PRUNED (``_prune_tombstones``) — so
+        per doc), the rest PRUNED (``tombstones.prune``) — so
         replace-heavy continuous ingest doesn't accumulate an unbounded
         tombstone table across merges.
       * newest-generation-wins is resolved among the merged deltas;
@@ -676,7 +504,8 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
         return None
     new_gen = _next_gen(index_dir, meta)
 
-    posts = _live_postings(spark, index_dir, generations=deltas).persist()
+    snap = T.Snapshot(spark, index_dir)
+    posts = _live_postings(spark, index_dir, deltas, snap).persist()
 
     # exact df fold: raw delta contribution from block METADATA only
     # (sum of per-block posting counts — no blob decode), live from the
@@ -708,15 +537,11 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
 
     # doc_len join for the v2 dls stream (tf/positions carry through
     # unchanged; scores are read-time, so no re-scoring job exists)
-    dm = (
-        spark.read.parquet(str(index_dir / "doc_meta"))
-        .groupBy("doc_id")
-        .agg(F.max_by("doc_len", "gen").alias("doc_len"))
-    )
+    dm_live = T.live_doc_meta(spark, index_dir, committed, snap)
     new_epoch = int(meta.get("epoch", 0)) + 1
     try:
         B._encode_and_write(
-            posts.join(dm, "doc_id"),
+            posts.join(dm_live.select("doc_id", "doc_len"), "doc_id"),
             index_dir, new_gen, None, cfg, "delta_merge", meta["max_doc_id"],
         )
         # stage the df-folded dict UNREFERENCED: the live term_dict is
@@ -726,7 +551,7 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
     finally:
         posts.unpersist()
 
-    row = _live_doc_stats(spark, index_dir)
+    row = _live_doc_stats(dm_live)
     meta.update(
         n_docs=float(row["n_docs"]),
         avgdl=float(row["avgdl"]),
@@ -741,7 +566,7 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
             old = index_dir / name / f"generation={g}"
             if old.exists():
                 shutil.rmtree(old)
-    _prune_tombstones(spark, index_dir, meta["generations"])
+    T.prune(spark, index_dir, meta["generations"])
     B.refresh_read_caches(spark, index_dir)
     return meta
 

@@ -88,117 +88,6 @@ def block_bound(
     return bm25_rescore(max_tf, min_dl, idf, avgdl, k1, b)
 
 
-def _encode_sorted(
-    buckets: np.ndarray,
-    salts: np.ndarray,
-    term_ids: np.ndarray,
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    block_size: int,
-    pos_blobs: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Encode postings ALREADY sorted by (bucket, salt, term_id,
-    doc_id) — any mix of (bucket, salt) runs — into block rows.
-
-    Whole-array vectorized: gaps + varints are computed over ALL
-    postings in one numpy pass, then sliced into per-block blobs by
-    byte offset — the only Python loop is a bytes-slice per block.
-    Output blobs are byte-identical to encoding each block alone
-    (each block's delta stream restarts with an absolute doc_id)."""
-    n = term_ids.size
-
-    # a posting "run" = one (bucket, salt, term) list; position of
-    # each posting within its run, then block id
-    run_change = np.flatnonzero(
-        (np.diff(term_ids) != 0)
-        | (np.diff(buckets) != 0)
-        | (np.diff(salts) != 0)
-    ) + 1
-    starts = np.concatenate(([0], run_change))
-    run_start_of = np.repeat(starts, np.diff(np.concatenate((starts, [n]))))
-    within = np.arange(n) - run_start_of
-    block_of = within // block_size
-
-    # block boundaries: run change OR block_of change
-    is_run_change = np.zeros(n, dtype=bool)
-    is_run_change[run_change] = True
-    change = np.flatnonzero(is_run_change[1:] | (np.diff(block_of) != 0)) + 1
-    b_starts = np.concatenate(([0], change))
-    b_ends = np.concatenate((change, [n]))
-
-    # delta-gap stream with an ABSOLUTE value at every block start
-    # (each block decodes standalone), varint-encoded in one pass
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_ids[0]
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:], casting="unsafe")
-    gaps[b_starts] = doc_ids[b_starts].astype(np.uint64)
-    d_bytes, d_sizes = varint_encode_with_sizes(gaps)
-    d_off = np.concatenate(([0], np.cumsum(d_sizes)))
-    t_bytes, t_sizes = varint_encode_with_sizes(tfs.astype(np.uint64))
-    t_off = np.concatenate(([0], np.cumsum(t_sizes)))
-    l_bytes = dls.astype("<u4").tobytes()
-
-    if pos_blobs is not None:
-        # per-posting streams are self-contained → a block's pos_blob
-        # is the plain concatenation; offsets from per-posting lengths
-        p_sizes = np.fromiter(
-            (len(x) if x is not None else 0 for x in pos_blobs),
-            dtype=np.int64,
-            count=n,
-        )
-        p_all = b"".join(bytes(x) if x is not None else b"" for x in pos_blobs)
-        p_off = np.concatenate(([0], np.cumsum(p_sizes)))
-        pos_col = [p_all[p_off[s] : p_off[e]] for s, e in zip(b_starts, b_ends)]
-    else:
-        pos_col = [b""] * b_starts.size
-
-    out = {
-        "bucket": buckets[b_starts].astype(np.int32),
-        "salt": salts[b_starts].astype(np.int32),
-        "term_id": term_ids[b_starts],
-        "block_id": block_of[b_starts].astype(np.int32),
-        "doc_id_min": doc_ids[b_starts],
-        "doc_id_max": doc_ids[b_ends - 1],
-        "n_docs": (b_ends - b_starts).astype(np.int32),
-        "block_max_tf": np.maximum.reduceat(tfs, b_starts).astype(np.int32),
-        "block_min_dl": np.minimum.reduceat(dls, b_starts).astype(np.int32),
-        "docs_blob": [
-            d_bytes[d_off[s]:d_off[e]] for s, e in zip(b_starts, b_ends)
-        ],
-        "tfs_blob": [
-            t_bytes[t_off[s]:t_off[e]] for s, e in zip(b_starts, b_ends)
-        ],
-        "dls_blob": [
-            l_bytes[4 * s:4 * e] for s, e in zip(b_starts, b_ends)
-        ],
-        "pos_blob": pos_col,
-    }
-    return pd.DataFrame(out)
-
-
-def encode_group(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """Encode one (bucket, salt) group of postings into block rows.
-    Input columns: bucket, salt, term_id, doc_id, tf, doc_len.
-    Rows within a term are doc_id-sorted here (the RdbDump sorted-run
-    invariant, RdbDump.cpp dumpTree)."""
-    if len(pdf) == 0:
-        return _empty_blocks()
-    pdf = pdf.sort_values(["term_id", "doc_id"], kind="mergesort")
-    return _encode_sorted(
-        pdf["bucket"].to_numpy(np.int64),
-        pdf["salt"].to_numpy(np.int64),
-        pdf["term_id"].to_numpy(np.int64),
-        pdf["doc_id"].to_numpy(np.int64),
-        pdf["tf"].to_numpy(np.int64),
-        pdf["doc_len"].to_numpy(np.int64),
-        block_size,
-        pos_blobs=(
-            pdf["pos_blob"].to_numpy(object) if "pos_blob" in pdf.columns else None
-        ),
-    )
-
-
 def _binary_array(data: np.ndarray, offsets: np.ndarray) -> "object":
     """Zero-copy Arrow binary column from a contiguous byte stream +
     int offsets (no per-value Python bytes objects).
@@ -244,22 +133,6 @@ def _binary_column_np(col) -> tuple[np.ndarray, np.ndarray]:
     return data, offsets
 
 
-def _gather_varlen(
-    data: np.ndarray, offsets: np.ndarray, order: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Permute variable-length values (byte stream + offsets) by
-    ``order`` with one vectorized gather — no per-value slicing."""
-    sizes = np.diff(offsets)
-    sz = sizes[order]
-    starts = offsets[:-1][order]
-    total = int(sz.sum())
-    new_off = np.concatenate(([0], np.cumsum(sz)))
-    if total == 0:
-        return np.empty(0, dtype=np.uint8), new_off
-    idx = np.arange(total, dtype=np.int64) + np.repeat(starts - new_off[:-1], sz)
-    return data[idx], new_off
-
-
 def make_encode_kernel(
     block_size: int, n_buckets: int, max_doc_id: int, n_salts: int
 ):
@@ -271,14 +144,14 @@ def make_encode_kernel(
     of being shuffled as columns — the shuffle moves 8 fewer bytes per
     posting, and the whole partition is encoded in ONE numpy pass. The
     kernel speaks Arrow directly (mapInArrow): the pos_blob column is
-    consumed as (data buffer, offsets) and permuted with a vectorized
-    gather, and every output blob column is built zero-copy from a
-    contiguous stream + offsets — NO per-posting Python objects on
-    either side (the per-posting bytes slices of the pandas path made
-    positions cost ~2.5× build time at 4 cores). The caller must have
-    partitioned rows by the SAME (bucket, salt) expressions so every
-    run is whole within the partition (builder._encode_and_write
-    does)."""
+    consumed as (data buffer, offsets), and every output blob column
+    is built zero-copy from a contiguous stream + offsets — NO
+    per-posting Python objects on either side (per-posting bytes
+    slices made positions cost ~2.5× build time at 4 cores). The
+    caller must have partitioned rows by the SAME (bucket, salt)
+    expressions so every run is whole within the partition, and
+    sorted them (bucket, term_id, salt, doc_id) within it
+    (builder._encode_and_write does both); unsorted input raises."""
     import pyarrow as pa
 
     width = salt_width(max_doc_id, n_salts)
@@ -300,12 +173,11 @@ def make_encode_kernel(
         # needs), and the partitioned write that follows the kernel
         # directly produces files whose row groups span narrow term_id
         # ranges — tight min/max stats for query-side pruning.
-        # The builder pre-sorts this order JVM-SIDE (Tungsten radix
-        # sort in sortWithinPartitions): a numpy lexsort+gather here
-        # is memory-bandwidth-bound and measured to scale at only
-        # ~0.46 from 4→16 cores on this host, so the kernel only
-        # VERIFIES order (one streaming pass) and falls back to
-        # sorting for callers that feed unsorted rows (tests).
+        # The builder sorts this order JVM-SIDE (Tungsten radix sort
+        # in sortWithinPartitions): a numpy lexsort+gather here is
+        # memory-bandwidth-bound and measured to scale at only ~0.46
+        # from 4→16 cores, so the kernel only VERIFIES order (one
+        # streaming pass) — an unsorted run would corrupt the blocks.
         n = term_ids.size
         sorted_ok = bool(
             np.all(
@@ -328,44 +200,35 @@ def make_encode_kernel(
                 )
             )
         ) if n > 1 else True
-        if sorted_ok:
-            pos = None
-            if "pos_blob" in tbl.column_names:
-                p_data, p_off = _binary_column_np(tbl.column("pos_blob"))
-                pos = (p_data, p_off)
-            yield _encode_sorted_arrow(
-                buckets, salts, term_ids, doc_ids, tfs, dls,
-                block_size, pos_sorted=pos,
+        if not sorted_ok:
+            raise ValueError(
+                "encode kernel input is not sorted by (bucket, term_id, "
+                "salt, doc_id) within its partition"
             )
-            return
-        order = np.lexsort((doc_ids, salts, term_ids, buckets))
         pos = None
         if "pos_blob" in tbl.column_names:
-            p_data, p_off = _binary_column_np(tbl.column("pos_blob"))
-            pos = _gather_varlen(p_data, p_off, order)
-        yield _encode_sorted_arrow(
-            buckets[order],
-            salts[order],
-            term_ids[order],
-            doc_ids[order],
-            tfs[order],
-            dls[order],
-            block_size,
-            pos_sorted=pos,
+            pos = _binary_column_np(tbl.column("pos_blob"))
+        yield _encode_sorted(
+            buckets, salts, term_ids, doc_ids, tfs, dls, block_size, pos_sorted=pos
         )
 
     return it
 
 
-def _encode_sorted_arrow(
+def _encode_sorted(
     buckets, salts, term_ids, doc_ids, tfs, dls, block_size, pos_sorted=None
 ):
-    """Arrow-native sibling of _encode_sorted: same math, but blob
-    columns are emitted as zero-copy binary arrays (stream + block
-    offsets) instead of per-block Python bytes."""
+    """Encode postings ALREADY sorted by (bucket, term_id, salt,
+    doc_id) into one Arrow batch of block rows. Whole-array
+    vectorized: gaps + varints are computed over ALL postings in one
+    numpy pass, and every blob column is a zero-copy binary array
+    (stream + block offsets). Each block's delta stream restarts with
+    an absolute doc_id, so every block decodes standalone."""
     import pyarrow as pa
 
     n = term_ids.size
+    # a posting "run" = one (bucket, salt, term) list; position of
+    # each posting within its run, then block id
     run_change = np.flatnonzero(
         (np.diff(term_ids) != 0)
         | (np.diff(buckets) != 0)
@@ -376,6 +239,7 @@ def _encode_sorted_arrow(
     within = np.arange(n) - run_start_of
     block_of = within // block_size
 
+    # block boundaries: run change OR block_of change
     is_run_change = np.zeros(n, dtype=bool)
     is_run_change[run_change] = True
     change = np.flatnonzero(is_run_change[1:] | (np.diff(block_of) != 0)) + 1
@@ -424,7 +288,6 @@ def _encode_sorted_arrow(
 def _empty_blocks_arrow():
     import pyarrow as pa
 
-    e = _empty_blocks()
     schema = pa.schema(
         [
             ("bucket", pa.int32()),
@@ -442,32 +305,12 @@ def _empty_blocks_arrow():
             ("pos_blob", pa.binary()),
         ]
     )
-    return pa.RecordBatch.from_pandas(e, schema=schema, preserve_index=False)
+    return pa.RecordBatch.from_pylist([], schema=schema)
 
 
 def salt_width(max_doc_id: int, n_salts: int) -> int:
     """doc_id-range width of one salt — MUST match builder._salt_col."""
     return max(1, (max_doc_id + n_salts) // n_salts)
-
-
-def _empty_blocks() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "bucket": pd.Series(dtype="int32"),
-            "salt": pd.Series(dtype="int32"),
-            "term_id": pd.Series(dtype="int64"),
-            "block_id": pd.Series(dtype="int32"),
-            "doc_id_min": pd.Series(dtype="int64"),
-            "doc_id_max": pd.Series(dtype="int64"),
-            "n_docs": pd.Series(dtype="int32"),
-            "block_max_tf": pd.Series(dtype="int32"),
-            "block_min_dl": pd.Series(dtype="int32"),
-            "docs_blob": pd.Series(dtype=object),
-            "tfs_blob": pd.Series(dtype=object),
-            "dls_blob": pd.Series(dtype=object),
-            "pos_blob": pd.Series(dtype=object),
-        }
-    )
 
 
 def gather_flat(values: np.ndarray, counts: np.ndarray, sel: np.ndarray) -> np.ndarray:

@@ -12,7 +12,8 @@ ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
      stats skip non-matching term_ids inside a bucket
   3. per-salt kernel (applyInPandas over disjoint doc_id ranges — the
      per-shard Msg39 computation): decode + prune + score + local
-     top-k via numpy, per query
+     top-k via numpy, per query; deletes are annihilated in the decode,
+     shipped by the handle's tombstone snapshot (index/tombstones.py)
   4. merge of the ≤ n_salts × k candidates per query: ``ORDER BY score
      DESC, doc_id ASC LIMIT k`` for one query (Msg3a::mergeLists, §2.6
      O4), a per-query window rank for a batch
@@ -106,66 +107,6 @@ def query_term_rows(
         columns=["term", "term_id", "df"],
     )
     return tbl.to_pylist()
-
-
-# tombstone tables up to this on-disk size load driver-side into the
-# kernel closure (one pyarrow read, zero extra shuffle — the common
-# trickle-delete case, and merges prune the table besides); above it
-# every read path switches to a cogrouped join
-# (lists.apply_tombstone_aware) so a mass delete (retention sweep via
-# the delete_documents DataFrame overload) never funnels through the
-# driver. Mirrors merge.TOMBSTONE_BROADCAST_MAX_BYTES.
-TOMBSTONE_DRIVER_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _tombstones_on_disk_bytes(index_dir: str | Path) -> int:
-    tdir = Path(index_dir) / "tombstones"
-    if not tdir.exists():
-        return 0
-    return sum(p.stat().st_size for p in tdir.glob("*.parquet"))
-
-
-def _arrays_from_pdf(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
-    if len(pdf) == 0:
-        return None
-    # one row per doc: the max before_generation wins
-    pdf = pdf.groupby("doc_id", as_index=False)["before_generation"].max()
-    pdf = pdf.sort_values("doc_id")
-    return (
-        pdf["doc_id"].to_numpy(np.int64),
-        pdf["before_generation"].to_numpy(np.int64),
-    )
-
-
-def tombstones_plan(
-    spark: SparkSession, index_dir: str | Path
-) -> tuple[tuple[np.ndarray, np.ndarray] | None, DataFrame | None]:
-    """(driver_arrays, ts_df) — the size-switched tombstone access plan
-    every read path shares (VERDICT r04 item 1: the positional/boolean
-    paths previously loaded the FULL table driver-side).
-
-    At most one element is non-None: below TOMBSTONE_DRIVER_MAX_BYTES
-    (trickle deletes — the common case; merges prune the table besides)
-    the (doc_id, before_generation) arrays load driver-side, one
-    pyarrow read, zero extra shuffle. Above it (a mass delete, e.g. a
-    retention sweep through the delete_documents DataFrame overload)
-    the caller gets an aggregated DataFrame instead and must ship it to
-    its kernels via a cogrouped shuffle — the Msg5 shape: negative keys
-    merged shard-side, never through a coordinator (SURVEY.md §1.1)."""
-    tdir = Path(index_dir) / "tombstones"
-    if _tombstones_on_disk_bytes(index_dir) <= TOMBSTONE_DRIVER_MAX_BYTES:
-        if not tdir.exists():
-            return None, None
-        import pyarrow.dataset as ds
-
-        pdf = ds.dataset(str(tdir), format="parquet").to_table().to_pandas()
-        return _arrays_from_pdf(pdf), None
-    ts = (
-        spark.read.parquet(str(tdir))
-        .groupBy("doc_id")
-        .agg(F.max("before_generation").alias("before_generation"))
-    )
-    return None, ts
 
 
 def _blocks_overlapping(
@@ -398,7 +339,7 @@ def topk(
     read, one partition-pruned scan covers the UNION of their term
     buckets, one per-salt kernel pass runs each query's single-query
     kernel over its own term groups, with tombstones shipped by the
-    shared size switch (lists.apply_tombstone_aware).
+    handle's snapshot (index.tombstones).
 
     The merge over the ≤ n_salts × k × |Q| per-salt candidates follows
     the input size: one resolved query merges by ``ORDER BY score DESC,
@@ -406,8 +347,6 @@ def topk(
     (Msg3a::mergeLists, §2.6 O4); more than one ranks per query_id in a
     window. Queries whose required term is missing (AND) or with no
     known terms contribute no rows."""
-    from open_source_search_engine_spark.index.lists import apply_tombstone_aware
-
     spark = ix.spark
     all_terms = sorted({t for terms, _m in queries.values() for t in terms})
     trows = ix.term_rows(all_terms)
@@ -419,10 +358,10 @@ def topk(
     tids = sorted({t for _q, ts, _m in resolved for t in ts})
     seg = ix.pruned_segments(tids).drop("bucket")
     scoring = scoring_ctx(ix.meta, trows)
-    local = apply_tombstone_aware(
-        spark, ix, seg, ("salt",),
+    local = ix.tombstones.apply_kernel(
+        seg, ("salt",),
         lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
-        BATCH_KERNEL_SCHEMA,
+        BATCH_KERNEL_SCHEMA, ix.meta["config"]["n_salts"],
     )
     if len(resolved) == 1:
         out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

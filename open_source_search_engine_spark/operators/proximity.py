@@ -184,14 +184,9 @@ def proximity_topk_indexed(
         order = np.lexsort((cand, -boosted))[:k]
         return pd.DataFrame({"doc_id": cand[order], "score": boosted[order]})
 
-    def kernel_factory(arrays):
-        def bound_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(pdf, tombstones=arrays)
-
-        return bound_kernel
-
-    local = L.apply_tombstone_aware(
-        spark, ix, seg, ("salt",), kernel_factory, "doc_id long, score double",
+    local = ix.tombstones.apply_kernel(
+        seg, ("salt",), lambda arrays: lambda pdf: kernel(pdf, tombstones=arrays),
+        "doc_id long, score double", ix.meta["config"]["n_salts"],
     )
     return (
         local.orderBy(F.desc("score"), F.asc("doc_id"))

@@ -31,13 +31,15 @@ set) and re-delivery overwrites its own batch partition
 idempotence pattern.
 
 QUERY_STREAM_SCHEMA rows: (query_id string, terms array<string>,
-mode string). Queries are metadata-scale; collecting one micro-batch
+mode string); a query_id is unique within one micro-batch (a duplicate
+fails the batch). Queries are metadata-scale; collecting one micro-batch
 of them to the driver is the same class of work as the term-dict
 lookup every query already does.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -58,6 +60,17 @@ QUERY_STREAM_SCHEMA = StructType(
         StructField("mode", StringType(), False),
     ]
 )
+
+
+def batch_queries(rows) -> dict[str, tuple[list[str], str]]:
+    """{query_id: (terms, mode)} for one micro-batch's rows. Results are
+    keyed by query_id, so an id queued twice in one batch would have
+    all but one of its queries silently dropped: raise instead."""
+    counts = Counter(r["query_id"] for r in rows)
+    dups = sorted(q for q, n in counts.items() if n > 1)
+    if dups:
+        raise ValueError(f"duplicate query_id in one micro-batch: {dups}")
+    return {r["query_id"]: (list(r["terms"]), r["mode"]) for r in rows}
 
 
 def start_query_server(
@@ -87,8 +100,7 @@ def start_query_server(
         rows = batch_df.collect()
         if not rows:
             return
-        queries = {r["query_id"]: (list(r["terms"]), r["mode"]) for r in rows}
-        out = engine.topk_batch(queries, k=k)
+        out = engine.topk_batch(batch_queries(rows), k=k)
         # idempotent re-delivery: each batch owns its partition dir
         # (batch becomes a partition column at read time via basePath)
         out.write.mode("overwrite").parquet(

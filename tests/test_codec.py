@@ -79,86 +79,98 @@ else:  # pragma: no cover
         pytest.skip("hypothesis not installed")
 
 
-def test_encode_kernel_matches_encode_group():
-    """The whole-partition mapInPandas kernel must produce the same
-    block rows (byte-identical blobs) as per-(bucket,salt)-group
-    encoding — the invariant that lets the builder swap
-    groupBy().applyInPandas for a partition-level kernel."""
+def _kernel_input(rng, n_buckets, n_salts, max_doc_id, n=5000):
+    """Postings with positions, sorted (bucket, term_id, salt, doc_id)
+    as builder._encode_and_write delivers them to the encode kernel."""
     import pandas as pd
 
-    from open_source_search_engine_spark.index.segments import (
-        encode_group,
-        make_encode_kernel,
-        salt_width,
-    )
+    from open_source_search_engine_spark.functions.codec import positions_encode
+    from open_source_search_engine_spark.index.segments import salt_width
 
-    rng = np.random.default_rng(7)
-    n_buckets, n_salts, bs, max_doc_id = 4, 3, 8, 999
-    n = 5000
-    term_ids = rng.integers(0, 40, n).astype(np.int64)
-    doc_ids = rng.integers(0, max_doc_id + 1, n).astype(np.int64)
     pdf = (
         pd.DataFrame(
             {
-                "term_id": term_ids,
-                "doc_id": doc_ids,
+                "term_id": rng.integers(0, 40, n).astype(np.int64),
+                "doc_id": rng.integers(0, max_doc_id + 1, n).astype(np.int64),
                 "tf": rng.integers(1, 9, n).astype(np.int64),
                 "doc_len": rng.integers(1, 300, n).astype(np.int64),
             }
         )
         .drop_duplicates(["term_id", "doc_id"])
-        .reset_index(drop=True)
     )
-    width = salt_width(max_doc_id, n_salts)
-    pdf["bucket"] = pdf["term_id"] % n_buckets
-    pdf["salt"] = np.minimum(pdf["doc_id"] // width, n_salts - 1)
+    salt = np.minimum(pdf["doc_id"] // salt_width(max_doc_id, n_salts), n_salts - 1)
+    order = np.lexsort(
+        (pdf["doc_id"], salt, pdf["term_id"], pdf["term_id"] % n_buckets)
+    )
+    pdf = pdf.iloc[order].reset_index(drop=True)
+    tfs = pdf["tf"].to_numpy()
+    flat = np.concatenate(
+        [np.sort(rng.choice(1000, tf, replace=False)) for tf in tfs]
+    ).astype(np.int64)
+    buf, offs = positions_encode(flat, tfs)
+    pdf["pos_blob"] = [buf[offs[i]:offs[i + 1]] for i in range(len(pdf))]
+    return pdf, flat
 
-    kernel = make_encode_kernel(bs, n_buckets, max_doc_id, n_salts)
-    # feed the kernel the whole frame split into arbitrary Arrow
-    # batches (the kernel is mapInArrow now)
+
+def _run_kernel(pdf, split, *args):
+    import pandas as pd
     import pyarrow as pa
 
-    out_kernel = pd.concat(
-        [
-            rb.to_pandas()
-            for rb in kernel(
-                iter(
-                    [
-                        pa.RecordBatch.from_pandas(
-                            pdf.iloc[:1234].drop(columns=["bucket", "salt"]),
-                            preserve_index=False,
-                        ),
-                        pa.RecordBatch.from_pandas(
-                            pdf.iloc[1234:].drop(columns=["bucket", "salt"]),
-                            preserve_index=False,
-                        ),
-                    ]
-                )
-            )
-        ]
+    from open_source_search_engine_spark.index.segments import make_encode_kernel
+
+    batches = [
+        pa.RecordBatch.from_pandas(part, preserve_index=False)
+        for part in (pdf.iloc[:split], pdf.iloc[split:])
+    ]
+    return pd.concat(rb.to_pandas() for rb in make_encode_kernel(*args)(iter(batches)))
+
+
+def test_encode_kernel_decode_roundtrip():
+    """Sorted postings with positions, split over two Arrow batches,
+    encode (make_encode_kernel) and decode (decode_blocks) back to the
+    input: doc_ids, tfs, doc lengths and positions per term, with
+    block metadata that bounds every block's postings."""
+    from open_source_search_engine_spark.index.segments import (
+        bm25_rescore,
+        decode_blocks,
+        salt_width,
     )
-    out_groups = pd.concat(
-        [encode_group(g, bs) for _, g in pdf.groupby(["bucket", "salt"])]
-    )
-    key = ["bucket", "salt", "term_id", "block_id"]
-    a = out_kernel.sort_values(key).reset_index(drop=True)
-    b = out_groups.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    for col in ["bucket", "salt", "term_id", "block_id", "doc_id_min",
-                "doc_id_max", "n_docs"]:
+
+    rng = np.random.default_rng(7)
+    n_buckets, n_salts, bs, max_doc_id = 4, 3, 8, 999
+    pdf, flat = _kernel_input(rng, n_buckets, n_salts, max_doc_id)
+    out = _run_kernel(pdf, 1234, bs, n_buckets, max_doc_id, n_salts)
+
+    assert (out["n_docs"] <= bs).all() and out["n_docs"].sum() == len(pdf)
+    assert (out["bucket"] == out["term_id"] % n_buckets).all()
+    width = salt_width(max_doc_id, n_salts)
+    assert (out["salt"] == np.minimum(out["doc_id_min"] // width, n_salts - 1)).all()
+    assert (out["salt"] == np.minimum(out["doc_id_max"] // width, n_salts - 1)).all()
+    starts = np.concatenate(([0], np.cumsum(pdf["tf"].to_numpy())))
+    rescore = (1.0, 100.0, 1.2, 0.75)
+    for tid, rows in out.groupby("term_id"):
+        sel = np.flatnonzero(pdf["term_id"].to_numpy() == tid)
+        want = pdf.iloc[sel]
+        docs, tfs, scores, pos = decode_blocks(rows, with_positions=True, rescore=rescore)
+        assert np.array_equal(docs, want["doc_id"].to_numpy()), tid
+        assert np.array_equal(tfs, want["tf"].to_numpy()), tid
         assert np.array_equal(
-            a[col].to_numpy(np.int64), b[col].to_numpy(np.int64)
-        ), col
-    assert np.array_equal(
-        a["block_max_tf"].to_numpy(np.int64), b["block_max_tf"].to_numpy(np.int64)
-    )
-    assert np.array_equal(
-        a["block_min_dl"].to_numpy(np.int64), b["block_min_dl"].to_numpy(np.int64)
-    )
-    for col in ["docs_blob", "tfs_blob", "dls_blob"]:
-        assert all(
-            bytes(x) == bytes(y) for x, y in zip(a[col], b[col])
-        ), col
+            scores, bm25_rescore(want["tf"].to_numpy(), want["doc_len"].to_numpy(), *rescore)
+        ), tid
+        want_pos = np.concatenate([flat[starts[i]:starts[i + 1]] for i in sel])
+        assert np.array_equal(pos, want_pos), tid
+        for _, blk in rows.iterrows():
+            in_blk = want[want["doc_id"].between(blk["doc_id_min"], blk["doc_id_max"])]
+            assert len(in_blk) == blk["n_docs"]
+            assert in_blk["tf"].max() == blk["block_max_tf"]
+            assert in_blk["doc_len"].min() == blk["block_min_dl"]
+
+
+def test_encode_kernel_rejects_unsorted_input():
+    rng = np.random.default_rng(11)
+    pdf, _flat = _kernel_input(rng, 4, 3, 999, n=500)
+    with pytest.raises(ValueError, match="not sorted"):
+        _run_kernel(pdf.iloc[::-1], 100, 8, 4, 999, 3)
 
 
 def test_positions_roundtrip_and_self_contained_slices():

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from fixtures.gen_corpus import gen_corpus
 from open_source_search_engine_spark.index import builder, merge, wand
+from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.operators import bm25
 from tests.conftest import TEST_CFG
 
@@ -136,7 +137,7 @@ def test_positions_survive_add_and_compact(spark, corpora, tmp_path):
         assert got == want(w1, w2), ("post-compact", w1, w2)
 
 
-def test_doc_meta_liveness_multi_generation(spark, corpora, tmp_path):
+def test_doc_meta_liveness_multi_generation(spark, corpora, tmp_path, monkeypatch):
     """doc_meta_df() must serve the LIVE view between a delete/replace
     and the next compact: newest row per doc_id, tombstoned docs gone
     (ADVICE r02 — facets/NOT universes double-counted otherwise)."""
@@ -160,12 +161,17 @@ def test_doc_meta_liveness_multi_generation(spark, corpora, tmp_path):
     merge.delete_documents(spark, d, [vic_delete])
 
     n_base = base.count()
-    for handle in (lists.ColdIndex(spark, d), QueryEngine(spark, d)):
-        dm = handle.doc_meta_df().toPandas()
-        assert dm["doc_id"].is_unique
-        assert vic_delete not in set(dm["doc_id"])
-        assert dm.loc[dm["doc_id"] == vic_replace, "lang"].iloc[0] == "zz"
-        assert len(dm) == n_base - 1
+    # both sides of the tombstone size switch: broadcast and shuffle join
+    for small_max in (T.SMALL_MAX_BYTES, -1):
+        monkeypatch.setattr(T, "SMALL_MAX_BYTES", small_max)
+        for handle in (lists.ColdIndex(spark, d), QueryEngine(spark, d)):
+            assert handle.tombstones.small == (small_max >= 0)
+            dm = handle.doc_meta_df().toPandas()
+            assert dm["doc_id"].is_unique
+            assert vic_delete not in set(dm["doc_id"])
+            assert dm.loc[dm["doc_id"] == vic_replace, "lang"].iloc[0] == "zz"
+            assert len(dm) == n_base - 1
+    monkeypatch.undo()
 
     # NOT universe = live doc_meta: a term nobody has matches all LIVE
     # docs; the deleted doc must not resurface
@@ -301,25 +307,30 @@ def test_merge_deltas_prunes_dead_tombstones(spark, corpora, tmp_path):
 
 
 def test_tombstone_shuffle_join_matches_broadcast(spark, corpora, tmp_path, monkeypatch):
-    # mass deletes make the tombstone table corpus-scale: the merge
-    # must not broadcast it. Forcing the shuffle branch (threshold 0)
-    # must give byte-identical results to the broadcast branch.
+    # mass deletes make the tombstone table corpus-scale: the merges
+    # must not broadcast it. With the shuffle branch forced (threshold
+    # 0), merge_deltas and then compact must still serve exactly the
+    # live set.
     base, extra, full = corpora
     d = tmp_path / "idx_shufflets"
     builder.build_index(
         spark, base, d, cfg=TEST_CFG, text_col="content", tokenizer_mode="code"
     )
-    merge.add_documents(spark, extra, d)
+    extra_pdf = extra.toPandas()
+    for part in (extra_pdf[0::2], extra_pdf[1::2]):  # two deltas to merge
+        merge.add_documents(spark, spark.createDataFrame(part), d)
     dead = full.select("doc_id").filter(F.col("doc_id") % 3 == 0)
     merge.delete_documents(spark, d, dead)  # DataFrame overload
-    monkeypatch.setattr(merge, "TOMBSTONE_BROADCAST_MAX_BYTES", 0)
-    merge.compact(spark, d)
-    got = wand.wand_topk(spark, d, ["def", "return"], k=1000, mode="or").toPandas()
+    monkeypatch.setattr(T, "SMALL_MAX_BYTES", 0)
     want = _oracle(
         full.filter(F.col("doc_id") % 3 != 0), ["def", "return"], k=1000
     )
-    assert set(got["doc_id"]) == set(want["doc_id"])
-    assert not any(int(x) % 3 == 0 for x in got["doc_id"])
+    for merge_fn in (merge.merge_deltas, merge.compact):
+        assert not T.Snapshot(spark, d).small
+        assert merge_fn(spark, d) is not None
+        got = wand.wand_topk(spark, d, ["def", "return"], k=1000, mode="or").toPandas()
+        assert set(got["doc_id"]) == set(want["doc_id"]), merge_fn.__name__
+        assert not any(int(x) % 3 == 0 for x in got["doc_id"])
 
 
 def test_warm_engine_cache_does_not_corrupt_later_merges(spark, corpora, tmp_path):
@@ -375,7 +386,8 @@ def test_wand_cogrouped_tombstones_match_driver_path(spark, corpora, tmp_path, m
 
     for terms, mode in [(["def", "return"], "or"), (["scan", "merge"], "and")]:
         want = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
-        monkeypatch.setattr(wand, "TOMBSTONE_DRIVER_MAX_BYTES", -1)
+        monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
+        assert not T.Snapshot(spark, d).small
         got = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
         monkeypatch.undo()
         assert list(got["doc_id"]) == list(want["doc_id"]), (terms, mode)
@@ -405,8 +417,9 @@ def test_positional_boolean_cogrouped_tombstones_match_driver_path(
     dead = full.select("doc_id").filter(F.col("doc_id") % 5 == 0)
     merge.delete_documents(spark, d, dead)
 
-    def snapshot():
+    def snapshot(small):
         eng = QueryEngine(spark, d, auto_refresh=False)
+        assert eng.tombstones.small == small
         try:
             out = {
                 "postings": lists.term_postings(spark, d, ["def", "scan"])
@@ -440,9 +453,9 @@ def test_positional_boolean_cogrouped_tombstones_match_driver_path(
             eng.close()
         return out
 
-    want = snapshot()
-    monkeypatch.setattr(wand, "TOMBSTONE_DRIVER_MAX_BYTES", -1)
-    got = snapshot()
+    want = snapshot(small=True)
+    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
+    got = snapshot(small=False)
     monkeypatch.undo()
 
     for key in want:
@@ -560,6 +573,11 @@ def test_add_documents_crash_rollback_and_rerun_exact(
         .sort_values("term").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(td_crashed, td_before)
+    # readers see only committed doc_meta rows: the crashed add's
+    # appended rows must not leak into the liveness view
+    from open_source_search_engine_spark.index.lists import ColdIndex
+
+    assert ColdIndex(spark, d).doc_meta_df().count() == dm_rows_before
 
     # recovery (any writer's load_meta(recover=True)): staged-ahead
     # dict discarded, orphan doc_meta rows swept, garbage gen dropped
@@ -707,7 +725,8 @@ def test_wand_batch_matches_single_queries(spark, corpora, tmp_path, monkeypatch
         "single": (["index"], "and"),
     }
 
-    def check():
+    def check(small):
+        assert T.Snapshot(spark, d).small == small
         batch = wand.wand_topk_batch(spark, d, Q, k=25).toPandas()
         for qid, (terms, mode) in Q.items():
             want = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
@@ -721,7 +740,7 @@ def test_wand_batch_matches_single_queries(spark, corpora, tmp_path, monkeypatch
         assert len(batch[batch["query_id"] == "and_missing"]) == 0
         assert len(batch) > 0
 
-    check()  # driver-array tombstones
-    monkeypatch.setattr(wand, "TOMBSTONE_DRIVER_MAX_BYTES", -1)
-    check()  # cogrouped tombstone shuffle
+    check(small=True)  # driver-array tombstones
+    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
+    check(small=False)  # cogrouped tombstone shuffle
     monkeypatch.undo()

@@ -281,3 +281,19 @@ def test_streaming_query_server(spark, tmp_path):
         want = wand.wand_topk(spark, idx, terms, k=10, mode=mode).toPandas()
         pd.testing.assert_frame_equal(served(res2, qid), ranked(want), obj=qid)
     assert list(served(res2, "w2_new")["doc_id"]) == [new_id]
+
+
+def test_batch_queries_rejects_duplicate_query_ids():
+    """One micro-batch's rows → {query_id: (terms, mode)}; a query_id
+    queued twice in one batch fails loudly instead of the last row
+    silently winning."""
+    from open_source_search_engine_spark.streaming.query_server import batch_queries
+
+    rows = [
+        {"query_id": "a", "terms": ["def"], "mode": "and"},
+        {"query_id": "b", "terms": ["scan", "merge"], "mode": "or"},
+    ]
+    assert batch_queries(rows) == {"a": (["def"], "and"), "b": (["scan", "merge"], "or")}
+    dup = rows + [{"query_id": "a", "terms": ["if"], "mode": "or"}]
+    with pytest.raises(ValueError, match=r"duplicate query_id.*\['a'\]"):
+        batch_queries(dup)
