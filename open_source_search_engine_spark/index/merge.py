@@ -303,8 +303,9 @@ def add_documents(
     )
     B._write_meta(index_dir, meta)  # THE commit point
     B._promote_side_table(index_dir, "term_dict")
-    # the dict just promoted: any warm handle's persisted copy must
-    # not be served the pre-swap cache
+    # the dict was just swapped on disk: drop Spark's cached file
+    # listings and plans for the index paths (and any read a caller
+    # persisted) so later jobs read the new files, not the old ones
     B.refresh_read_caches(spark, index_dir)
     if max_generations is not None:
         merged = maybe_compact(

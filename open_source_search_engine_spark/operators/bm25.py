@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.config import EngineConfig
 from open_source_search_engine_spark.operators.postings import doc_tokens, postings
-from open_source_search_engine_spark.operators.stats import corpus_stats, doc_meta, term_stats
+from open_source_search_engine_spark.operators.stats import corpus_stats, doc_meta
 
 
 def idf_col(df_: Column, n_docs: Column) -> Column:
@@ -44,33 +44,6 @@ def bm25_term_score_col(
         tf_d + k1 * (F.lit(1.0) - b + b * dl.cast("double") / avgdl)
     )
     return idf_col(df_.cast("double"), n_docs) * norm
-
-
-def scored_postings(
-    postings_df: DataFrame,
-    doc_meta_df: DataFrame,
-    cfg: EngineConfig = EngineConfig(),
-) -> DataFrame:
-    """Every posting annotated with its full float64 BM25 contribution.
-
-    This is what the segment builder persists per posting (the
-    reference's analog: density/spam/siterank are precomputed into the
-    posdb key at index time — SURVEY.md §4 'static scoring features').
-    """
-    stats = corpus_stats(doc_meta_df)
-    tstats = term_stats(postings_df).select("term_id", "df")
-    out = (
-        postings_df.join(F.broadcast(tstats), "term_id")
-        .join(doc_meta_df.select("doc_id", "doc_len"), "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    return out.withColumn(
-        "score",
-        bm25_term_score_col(
-            F.col("tf"), F.col("df"), F.col("doc_len"),
-            F.col("n_docs"), F.col("avgdl"), cfg,
-        ),
-    ).drop("n_docs", "avgdl", "df", "doc_len")
 
 
 def bm25_scores(

@@ -370,11 +370,6 @@ def _minhash_aggs(n_hashes: int):
     ]
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
-    """(doc_id, m0..m{n-1}) — portable string-min MinHash signature."""
-    return _shingles(docs).groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,

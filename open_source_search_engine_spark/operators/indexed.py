@@ -10,11 +10,13 @@ algebra on the decoded rows. Metadata predicates (`lang:`, numeric
 ranges, site, sort keys) join `doc_meta`, which the build persists
 with the caller's extra columns — the titledb join (SURVEY.md §1.2).
 
-Score semantics: per-posting BM25 contributions are PRECOMPUTED at
-build time with exact global stats (builder.scored_postings_df), so
-`sum(score) GROUP BY doc_id` here is rank-identical to the
-bm25_topk_oracle / DuckDB oracle — the driver verifies every one of
-these entries against the same SQL as the DataFrame-algebra path.
+Score semantics: segment blocks store no statistics (tf, doc length
+and positions only); each per-posting BM25 contribution is computed at
+read time by `segments.bm25_rescore` from the LIVE stats (df from
+term_dict, N and avgdl from meta), so `sum(score) GROUP BY doc_id` here
+is rank-identical to the bm25_topk_oracle / DuckDB oracle — the driver
+verifies every one of these entries against the same SQL as the
+DataFrame-algebra path.
 """
 
 from __future__ import annotations
@@ -52,7 +54,7 @@ def bm25_topk_field(
 ) -> DataFrame:
     """Field-restricted BM25 top-k, BOTH legs from the index: the
     restriction is the composite-term list, the scores are the
-    precomputed per-posting contributions."""
+    read-time per-posting contributions."""
     scored = scored_matches(
         spark, index_dir, terms, mode,
         candidate_docs=field_docs(spark, index_dir, field, value),
@@ -160,7 +162,7 @@ def scored_matches(
     candidate_docs: DataFrame | None = None,
     groups: list[list[str]] | None = None,
 ) -> DataFrame:
-    """FULL scored match set (doc_id, _score) from the precomputed
+    """FULL scored match set (doc_id, _score) from the read-time
     per-posting scores — unrounded, unordered, no k cut (the indexed
     twin of bm25.bm25_scores; consumers window/limit themselves).
 
@@ -273,7 +275,7 @@ def bm25_topk_site_boosted(
     site_col: str = "source",
 ) -> DataFrame:
     """Top-k on BM25 × (1 + site_rank/16), served entirely from the
-    index: scores from the precomputed per-posting contributions,
+    index: scores from the read-time per-posting contributions,
     site_rank from the doc_meta column the build persisted from the
     link graph (builder.build_index(site_rank_edges=…)) — the posdb
     siteRank multiplier (J4 + A6, SURVEY.md §2.4) with the link graph

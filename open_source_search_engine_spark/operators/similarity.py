@@ -443,47 +443,6 @@ def ivf_ann_topk(
     )
 
 
-def ivf_ann_topk_sql(
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_centroids: int = IVF_N_CENTROIDS,
-    n_probe: int = IVF_N_PROBE,
-) -> str:
-    """Full-pipeline DuckDB mirror of ``ivf_ann_topk`` (same cells,
-    same probes, exact rerank)."""
-    return f"""WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), cents AS (
-  SELECT vec_id AS cent_id, v AS cv FROM e
-  WHERE vec_id IN (SELECT vec_id FROM e ORDER BY vec_id LIMIT {n_centroids})
-), pairs AS (
-  SELECT e.vec_id, c.cent_id,
-         list_dot_product(e.v, c.cv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) AS csim
-  FROM e CROSS JOIN cents c
-), assign AS (
-  SELECT vec_id, cent_id AS cell FROM (
-    SELECT vec_id, cent_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id ASC) AS rn
-    FROM pairs) WHERE rn = 1
-), q AS (
-  SELECT v AS qv FROM e WHERE vec_id = {query_vec_id}
-), probe AS (
-  SELECT cent_id FROM (
-    SELECT c.cent_id,
-           list_dot_product(c.cv, q.qv) / (sqrt(list_dot_product(c.cv, c.cv)) * sqrt(list_dot_product(q.qv, q.qv))) AS qsim
-    FROM cents c CROSS JOIN q
-    ORDER BY qsim DESC, cent_id ASC LIMIT {n_probe})
-), cand AS (
-  SELECT a.vec_id FROM assign a JOIN probe p ON a.cell = p.cent_id
-), scored AS (
-  SELECT e.vec_id,
-         list_dot_product(e.v, q.qv) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-  FROM e JOIN cand USING (vec_id) CROSS JOIN q
-)
-SELECT vec_id, ROUND(cos, 5) AS cos_sim
-FROM scored ORDER BY cos DESC, vec_id ASC LIMIT {k}"""
-
-
 IVF_KMEANS_ITERS = 2
 
 

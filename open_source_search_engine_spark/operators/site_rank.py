@@ -74,17 +74,3 @@ def doc_site_rank(
     ).select(
         "doc_id", F.coalesce("site_rank", F.lit(0)).cast("int").alias("site_rank")
     )
-
-
-def apply_site_rank_boost(
-    scored: DataFrame, ranks: DataFrame, site_col: str = "site"
-) -> DataFrame:
-    """Multiply scores by the reference-style siteRank weight
-    (PosdbTable applies a per-docid siteRank multiplier; we fold it in
-    post-aggregation). ranks is small → broadcast."""
-    w = F.lit(1.0) + F.coalesce(F.col("site_rank"), F.lit(0)) / F.lit(16.0)
-    return (
-        scored.join(F.broadcast(ranks.select(site_col, "site_rank")), site_col, "left")
-        .withColumn("score", F.col("score") * w)
-        .drop("site_rank")
-    )

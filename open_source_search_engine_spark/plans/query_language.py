@@ -233,7 +233,7 @@ def execute_indexed(
     """Compile + run the SAME query language ENTIRELY from the segment
     store (VERDICT r01 item 1): metadata filters hit the persisted
     doc_meta (titledb join), phrases hit the persisted positions,
-    negatives anti-join decoded lists, scoring sums the precomputed
+    negatives anti-join decoded lists, scoring sums the read-time
     per-posting BM25 contributions. Nothing touches the raw corpus.
     Must stay hash-identical to ``execute`` / the DuckDB oracle
     (the driver verifies it against the same ``sql(q)``).
