@@ -84,17 +84,6 @@ def delta_decode(buf: bytes) -> np.ndarray:
     return np.cumsum(gaps, dtype=np.uint64)
 
 
-def varint_value_sizes(buf: bytes) -> np.ndarray:
-    """Byte length of each encoded value in a LEB128 stream (scan of
-    continuation bits — lets callers slice a concatenated stream at
-    value boundaries without decoding)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    return np.diff(np.concatenate(([-1], ends))).astype(np.int64)
-
-
 def positions_encode(flat_pos: np.ndarray, tfs: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Encode per-posting position lists, laid out flat in posting
     order (posting i owns flat_pos[cum_tf[i-1]:cum_tf[i]], ascending).
@@ -132,14 +121,17 @@ def positions_decode(buf: bytes, tfs: np.ndarray) -> np.ndarray:
 
 def positions_byte_offsets(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     """Per-posting byte offsets (len n+1) into a concatenated
-    positions stream, from the continuation-bit scan alone."""
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    sizes = varint_value_sizes(buf)
-    if sizes.size == 0:
-        return np.zeros(tfs.size + 1, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-    per_post = np.add.reduceat(sizes, starts)
-    return np.concatenate(([0], np.cumsum(per_post)))
+    positions stream, from the continuation-bit scan alone. A posting
+    with tf 0 owns no bytes."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    value_ends = np.concatenate(([0], np.flatnonzero(b < 0x80) + 1))
+    first_value = np.concatenate(([0], np.cumsum(tfs, dtype=np.int64)))
+    if first_value[-1] != value_ends.size - 1:
+        raise ValueError(
+            f"positions stream holds {value_ends.size - 1} values, "
+            f"tfs sum to {first_value[-1]}"
+        )
+    return value_ends[first_value]
 
 
 def f64_encode(values: np.ndarray) -> bytes:

@@ -4,7 +4,7 @@ reference's index pipeline (SURVEY.md §3.2):
     XmlDoc::hashAll            → tokenize + posexplode + groupBy  (postings)
     Msg4 fan-out to shards     → salted repartition by (term-bucket, doc-range)
     RdbTree sorted memtable    → sortWithinPartitions / in-kernel sort
-    RdbDump sorted run + RdbMap→ applyInPandas block encoder (segments.py)
+    RdbDump sorted run + RdbMap→ mapInArrow block encoder (segments.py)
     Rdb stats                  → DataFrame aggs (doc_meta / term_dict / stats)
 
 Layout under ``index_dir`` (plain parquet dirs; Iceberg would add its
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.config import EngineConfig
+from open_source_search_engine_spark.functions.hashing import term_id_col
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.segments import (
     BLOCK_SCHEMA,
@@ -56,6 +57,9 @@ from open_source_search_engine_spark.index.segments import (
 )
 from open_source_search_engine_spark.operators.postings import staged_postings
 from open_source_search_engine_spark.operators.stats import term_stats
+
+# an add's private staging dir: `<prefix><generation>`
+ADD_STAGING_PREFIX = "_staging_gen="
 
 MANIFEST_SCHEMA = (
     "bucket int, n_terms long, n_blocks long, n_postings long, "
@@ -129,8 +133,9 @@ def _promote_side_table(index_dir: Path, name: str) -> None:
 
 
 def _recover_swaps(index_dir: Path) -> None:
-    """Writer-side crash recovery. The commit protocol (all three
-    writers — add_documents / merge_deltas / compact) is:
+    """Writer-side crash recovery. The commit protocol (every writer
+    after the initial build — add_documents, which writes through
+    ``_write_generation``, merge_deltas and compact) is:
 
         1. append-only artifacts land first (doc_meta rows, tombstones,
            the new generation dir) — all UNREFERENCED by readers, who
@@ -158,12 +163,16 @@ def _recover_swaps(index_dir: Path) -> None:
       * generation dirs meta.json does not reference → garbage from a
         crashed encode: drop them (a rerun re-encodes from scratch —
         `_encode_and_write` appends, so a half-written dir must never
-        be reused; `_next_gen` picks fresh numbers anyway).
+        be reused; `_next_gen` picks fresh numbers anyway);
+      * an add's staging dir (``ADD_STAGING_PREFIX``) → left by a
+        killed add: drop it (adds never resume from it).
 
     Readers never call this (they never mutate the index dir)."""
     meta_path = index_dir / "meta.json"
     if not meta_path.exists():
         return
+    for p in index_dir.glob(f"{ADD_STAGING_PREFIX}*"):
+        shutil.rmtree(p, ignore_errors=True)
     meta = json.loads(meta_path.read_text())
     committed_epoch = int(meta.get("epoch", 0))
     for name in ("term_dict", "doc_meta"):
@@ -196,8 +205,6 @@ def _sweep_orphan_doc_meta(index_dir: Path, max_committed_gen: int) -> None:
     Decided from parquet footer statistics alone (no data read); a
     file without usable stats falls back to reading its tiny gen
     column."""
-    import pyarrow.parquet as pq
-
     dm = index_dir / "doc_meta"
     if not dm.exists():
         return
@@ -216,9 +223,7 @@ def _sweep_orphan_doc_meta(index_dir: Path, max_committed_gen: int) -> None:
                 mins.append(st.min)
             file_min = min(mins) if mins else None
         except (StopIteration, ValueError, OSError):
-            import pyarrow.parquet as _pq
-
-            col = _pq.read_table(f, columns=["gen"])["gen"]
+            col = pq.read_table(f, columns=["gen"])["gen"]
             file_min = col.to_pandas().min() if len(col) else None
         if file_min is not None and int(file_min) > max_committed_gen:
             f.unlink()
@@ -226,9 +231,10 @@ def _sweep_orphan_doc_meta(index_dir: Path, max_committed_gen: int) -> None:
 
 def _drop_unreferenced_generations(index_dir: Path, committed: list[int]) -> None:
     """Remove generation dirs meta.json does not reference — garbage
-    left by a crashed add/merge/compact between encode and commit.
-    Safe: readers filter every segment scan to meta['generations'],
-    and a crashed initial build never loses its gen-0 work: either
+    left by a crashed add/merge/compact between encode and commit, and
+    the generations a committed merge/compact replaced. Safe: readers
+    filter every segment scan to meta['generations'], and a crashed
+    initial build never loses its gen-0 work: either
     meta.json exists (it references generation 0), or it doesn't and
     recovery returns before this sweep — in both cases resume keeps
     the committed gen-0 files and done_buckets decides what is left
@@ -288,7 +294,7 @@ def _encode_and_write(
     below is THE salted shuffle — it hashes on the (bucket, salt)
     EXPRESSIONS without materializing them as columns (8 fewer bytes
     per shuffled posting), spreading a Zipf head term over n_salts
-    partitions; the mapInPandas kernel recomputes bucket/salt in numpy
+    partitions; the mapInArrow kernel recomputes bucket/salt in numpy
     and encodes its whole partition in one pass (segments.py
     make_encode_kernel)."""
     spark = posts.sparkSession
@@ -467,7 +473,63 @@ def build_index(
     doc_meta only, never the link graph."""
     index_dir = Path(index_dir)
     index_dir.mkdir(parents=True, exist_ok=True)
+    meta = {
+        "format": SEGMENT_FORMAT,
+        "epoch": 0,  # side-table commit epoch (see _recover_swaps)
+        "config": asdict(cfg) | {"stopwords": sorted(cfg.stopwords)},
+        "generations": [0],
+        "tokenizer_mode": tokenizer_mode,
+        "text_col": text_col,
+        "index_fields": sorted(index_fields or []),
+        "anchored": anchor_edges is not None,
+    }
+    meta = _write_generation(
+        spark, docs, index_dir, 0, cfg, meta,
+        id_col=id_col,
+        extra_meta_cols=extra_meta_cols,
+        anchor_edges=anchor_edges,
+        site_rank_edges=site_rank_edges,
+        site_col=site_col,
+        input_snapshot=input_snapshot,
+        resume=resume,
+    )
+    # a rebuild over an existing dir must invalidate any session-cached
+    # plans over the old files (see refresh_read_caches)
+    refresh_read_caches(spark, index_dir)
+    return meta
 
+
+def _write_generation(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: Path,
+    gen: int,
+    cfg: EngineConfig,
+    meta: dict,
+    id_col: str = "doc_id",
+    extra_meta_cols: list[str] | None = None,
+    anchor_edges: DataFrame | None = None,
+    site_rank_edges: DataFrame | None = None,
+    site_col: str = "source",
+    input_snapshot: str = "full",
+    resume: bool = False,
+) -> dict:
+    """THE generation writer — every document enters the index here,
+    whether by the initial build (``gen == 0``) or by an add (``gen >
+    0``), the way the reference indexes every doc through one
+    XmlDoc::indexDoc → Msg4 → RdbDump path (SURVEY.md §3.2). Tokenizer
+    mode, text column and field terms come from ``meta``.
+
+    Generation 0 writes fresh doc_meta / term_dict and commits ``meta``
+    (filled with the observed corpus stats) itself; ``resume=True``
+    reuses its staging checkpoint and skips encoded buckets. A
+    generation above 0 appends its doc_meta rows, STAGES the df-folded
+    term_dict for the next epoch and encodes an unreferenced
+    generation dir; it returns the meta to commit — the caller's meta
+    flip is the commit point (``_recover_swaps``)."""
+    # one anchor join: inbound anchor text is concatenated after each
+    # doc's content before the single tokenize pass
+    text_col = meta["text_col"]
     tok_docs, tok_text_col = docs, text_col
     if anchor_edges is not None:
         agg = anchor_edges.groupBy(F.col("dst_doc_id").alias(id_col)).agg(
@@ -493,48 +555,45 @@ def build_index(
     # doc_meta is a pure FILTER of the staged output — no groupBy, no
     # join back to the source table. Parquet staging beats a JVM
     # .persist() here: columnar compressed, column-pruned downstream
-    # scans, no executor-memory/GC pressure, and a crashed build
-    # resumes WITHOUT re-tokenizing (the staging dir survives until the
-    # build completes). On a real cluster it lives on the shared store
-    # next to the index.
-    staging = index_dir / "_staging"
-    meta_path = index_dir / "meta.json"
+    # scans, no executor-memory/GC pressure. Generation 0's staging dir
+    # is the build's resume checkpoint (kept until the build commits,
+    # so a crashed build resumes WITHOUT re-tokenizing); an add's is
+    # private to that add — never read by a later add or a resumed
+    # build, and a retried add re-tokenizes. On a real cluster it
+    # lives on the shared store next to the index.
+    staging = index_dir / ("_staging" if gen == 0 else f"{ADD_STAGING_PREFIX}{gen}")
     dm_dir = index_dir / "doc_meta"
     td_dir = index_dir / "term_dict"
-    # corpus stats observed ON the staging write itself (Observation =
+    # corpus stats observed ON the staging write (Observation =
     # accumulator-backed metrics, zero extra scan): every downstream
     # job — doc_meta, term_dict AND the encode (which needs max_doc_id
     # for the salt) — is then free of stat dependencies on any other,
     # so the three run CONCURRENTLY below (r05 §serial-overhead: the
     # two side-table jobs are too small to fill the cores at high
     # parallelism; serialized they added ~2 s of underparallelized
-    # wall to the 8-core leg, ~5 % of the build)
-    _STAT_AGGS = (
+    # wall to the 8-core leg, ~5 % of the build). Staging rows with
+    # tf == 0 are the per-doc meta rows.
+    stat_aggs = (
         F.count(F.when(F.col("tf") == 0, 1)).cast("double").alias("n_docs"),
         F.avg(F.when(F.col("tf") == 0, F.col("doc_len"))).alias("avgdl"),
         F.max("doc_id").alias("max_doc_id"),
     )
     staging_obs: Observation | None = None
-    if not (resume and (staging / "_SUCCESS").exists()):
+    if not (gen == 0 and resume and (staging / "_SUCCESS").exists()):
         staging_obs = Observation(f"corpus_stats_{uuid.uuid4().hex[:8]}")
         staged_postings(
             tok_docs,
             tok_text_col,
             id_col,
-            mode=tokenizer_mode,
+            mode=meta["tokenizer_mode"],
             stopwords=cfg.stopwords,
             sha_col=text_col if anchor_edges is not None else None,
-        ).observe(staging_obs, *_STAT_AGGS).write.mode("overwrite").parquet(
+        ).observe(staging_obs, *stat_aggs).write.mode("overwrite").parquet(
             str(staging)
         )
-    # NOTE: on failure anywhere below, the staging dir is left in
-    # place — a resumed build reuses it and skips the tokenize pass
-    # entirely (checkpoint semantics); it is deleted on commit only.
     sp = spark.read.parquet(str(staging))
     posts = sp.filter(F.col("tf") > 0)
-    if index_fields:
-        from open_source_search_engine_spark.functions.hashing import term_id_col
-
+    if meta.get("index_fields"):
         fparts = [
             docs.select(
                 F.concat(F.lit(f + ":"), F.col(f).cast("string")).alias("term"),
@@ -544,47 +603,67 @@ def build_index(
                 F.lit(None).cast("string").alias("sha"),
                 F.lit(None).cast("binary").alias("pos_blob"),
             ).filter(F.col("term").isNotNull())
-            for f in index_fields
+            for f in meta["index_fields"]
         ]
         fposts = fparts[0]
-        for p in fparts[1:]:
-            fposts = fposts.unionByName(p)
-        posts = posts.unionByName(fposts.withColumn("term_id", term_id_col(F.col("term"))))
-    fresh_side_tables = not (
-        resume and meta_path.exists() and dm_dir.exists() and td_dir.exists()
+        for part in fparts[1:]:
+            fposts = fposts.unionByName(part)
+        posts = posts.unionByName(
+            fposts.withColumn("term_id", term_id_col(F.col("term")))
+        )
+    fresh_side_tables = gen > 0 or not (
+        resume
+        and (index_dir / "meta.json").exists()
+        and dm_dir.exists()
+        and td_dir.exists()
     )
     if not fresh_side_tables:
         meta = load_meta(index_dir, recover=True)
     else:
-        # resumed build reusing the staging checkpoint: the write (and
-        # its observation) did not run this session — one column-pruned
-        # agg over the int columns of staging recovers the stats
-        stats_row = staging_obs.get if staging_obs is not None else (
-            sp.agg(*_STAT_AGGS).first()
+        # a resumed build reusing the staging checkpoint did not run
+        # the write (or its observation) this session — one
+        # column-pruned agg over the int columns of staging recovers
+        # the stats
+        stats = staging_obs.get if staging_obs is not None else (
+            sp.agg(*stat_aggs).first()
         )
-        meta = {
-            "format": SEGMENT_FORMAT,
-            "epoch": 0,  # side-table commit epoch (see _recover_swaps)
-            "config": asdict(cfg) | {"stopwords": sorted(cfg.stopwords)},
-            "n_docs": float(stats_row["n_docs"]),
-            "avgdl": float(stats_row["avgdl"]),
-            "max_doc_id": int(stats_row["max_doc_id"]),
-            "generations": [0],
-            "tokenizer_mode": tokenizer_mode,
-            "text_col": text_col,
-            "index_fields": sorted(index_fields or []),
-            "anchored": anchor_edges is not None,
-        }
+        if gen == 0:
+            meta = meta | {
+                "n_docs": float(stats["n_docs"]),
+                "avgdl": float(stats["avgdl"]),
+                "max_doc_id": int(stats["max_doc_id"]),
+            }
+        else:
+            meta = meta | {
+                "max_doc_id": max(meta["max_doc_id"], int(stats["max_doc_id"] or 0)),
+                "generations": sorted(set(meta["generations"]) | {gen}),
+                "epoch": int(meta.get("epoch", 0)) + 1,
+            }
+    epoch = meta["epoch"]
+    base_schema = spark.read.parquet(str(dm_dir)).schema if gen else None
 
     def _write_doc_meta() -> None:
         meta_df = sp.filter(F.col("tf") == 0).select(
             "doc_id", F.col("sha").alias("content_sha256"), "doc_len"
         )
-        if extra_meta_cols:
+        if gen == 0:
+            extra = [F.col(c) for c in extra_meta_cols or []]
+        else:
+            # carry the base doc_meta's extra columns (lang, site,
+            # nchars, …): an append with a NARROWER schema makes
+            # spark.read's schema pick nondeterministic (no
+            # mergeSchema) — facets/sorts would lose the column
+            extra = [
+                (
+                    F.col(f.name) if f.name in docs.columns
+                    else F.lit(None).cast(f.dataType)
+                ).alias(f.name)
+                for f in base_schema.fields
+                if f.name not in ("doc_id", "content_sha256", "doc_len", "gen")
+            ]
+        if extra:
             meta_df = meta_df.join(
-                docs.select(F.col(id_col).alias("doc_id"), *extra_meta_cols),
-                "doc_id",
-                "left",
+                docs.select(F.col(id_col).alias("doc_id"), *extra), "doc_id", "left"
             )
         if site_rank_edges is not None:
             from open_source_search_engine_spark.operators.site_rank import (
@@ -596,27 +675,45 @@ def build_index(
                 "doc_id",
                 "left",
             )
-        meta_df.withColumn("gen", F.lit(0)).write.mode("overwrite").parquet(
-            str(dm_dir)
-        )
+        meta_df = meta_df.withColumn("gen", F.lit(gen))
+        if gen == 0:
+            meta_df.write.mode("overwrite").parquet(str(dm_dir))
+        else:
+            meta_df.select(*base_schema.fieldNames()).write.mode(
+                "append"
+            ).parquet(str(dm_dir))
 
     def _write_term_dict() -> None:
+        td = term_stats(posts)
+        if gen:
+            td = (
+                spark.read.parquet(str(td_dir))
+                .unionByName(td)
+                .groupBy("term", "term_id")
+                .agg(F.sum("df").alias("df"))
+            )
         # term_dict hash-clustered + sorted by term: the query path's
         # driver-side lookup prunes parquet row-groups on term min/max
         # stats (the RdbMap seek applied to the dictionary)
-        term_stats(posts).repartition(8, "term").sortWithinPartitions(
-            "term"
-        ).write.mode("overwrite").parquet(str(td_dir))
+        td = td.repartition(8, "term").sortWithinPartitions("term")
+        if gen:
+            # STAGED unreferenced: the live term_dict is untouched
+            # until the caller's meta flip, so a crash rolls the df
+            # fold back and a rerun applies it exactly once
+            _stage_side_table(index_dir, "term_dict", td, epoch)
+        else:
+            td.write.mode("overwrite").parquet(str(td_dir))
 
     # doc_meta ∥ term_dict ∥ encode: three independent reads of the
     # staging checkpoint submitted concurrently (Spark schedules
     # concurrent actions from driver threads; the small side-table
     # jobs fill task slots the long encode job leaves idle at stage
     # boundaries instead of adding serial wall). Commit ordering is
-    # preserved: meta.json — the pointer resume trusts to mean
-    # "side tables complete" — is written only after BOTH side-table
-    # futures join; the gen-0 encode commits its files at job end and
-    # is gated by the manifest exactly as before, so every crash
+    # preserved: generation 0's meta.json — the pointer resume
+    # trusts to mean "side tables complete" — is written only after
+    # BOTH side-table futures join, and its encode commits its files
+    # at job end, gated by the manifest; an add's generation dir
+    # stays unreferenced until the caller's meta flip. Every crash
     # window converges through the same recovery paths.
     from concurrent.futures import ThreadPoolExecutor
 
@@ -627,43 +724,57 @@ def build_index(
             else []
         )
         todo: list[int] | None = None
-        done_early = False
-        if resume:
-            done = done_buckets(spark, index_dir, 0)
-            todo = sorted(set(range(cfg.n_buckets)) - done)
-            done_early = not todo
-        # v2: no scoring join — the encoder persists (tf, dl) and reads
-        # score with the live stats; the build's hottest job loses the
-        # df broadcast join and the 8-byte score column from the shuffle
-        # _encode_and_write writes a manifest row for EVERY bucket it was
-        # responsible for (empty ones included) — generation 0 is
-        # complete when it returns
+        if gen == 0 and resume:
+            todo = sorted(set(range(cfg.n_buckets)) - done_buckets(spark, index_dir, 0))
+        # v2: no scoring join — the encoder persists (tf, dl) and
+        # reads score with the live stats. _encode_and_write writes
+        # a manifest row for EVERY bucket it was responsible for
+        # (empty ones included) — the generation is complete when it
+        # returns
         enc_fut = (
             None
-            if done_early
+            if todo == []
             else ex.submit(
                 _encode_and_write,
-                posts,
-                index_dir,
-                0,
-                todo,
-                cfg,
-                input_snapshot,
-                meta["max_doc_id"],
+                posts, index_dir, gen, todo, cfg, input_snapshot, meta["max_doc_id"],
             )
         )
         for f in side_futs:
             f.result()
-        if fresh_side_tables:
-            _write_meta(index_dir, meta)
+        if gen == 0:
+            if fresh_side_tables:
+                _write_meta(index_dir, meta)
+        else:
+            # N/avgdl over the LIVE doc set, this generation's rows
+            # included — tombstone-filtered (a replace-mode add has
+            # written its bars already), so deletes are reflected
+            # and read-time scoring stays exact under add+delete
+            stats = _live_doc_stats(
+                T.live_doc_meta(
+                    spark, index_dir, meta["generations"], T.Snapshot(spark, index_dir)
+                )
+            )
+            meta = meta | {
+                "n_docs": float(stats["n_docs"]),
+                "avgdl": float(stats["avgdl"]),
+            }
         if enc_fut is not None:
             enc_fut.result()
-    if done_early:
-        shutil.rmtree(staging, ignore_errors=True)
-        return meta
-    # build committed — drop the staging checkpoint
+    # committed (gen 0) or ready for the caller's flip: drop the
+    # staging dir. On failure it stays — generation 0's is the resumed
+    # build's checkpoint; a crashed add's is swept by the next writer's
+    # recovery (adds never resume from it).
     shutil.rmtree(staging, ignore_errors=True)
-    # a rebuild over an existing dir must invalidate any session-cached
-    # plans over the old files (see refresh_read_caches)
-    refresh_read_caches(spark, index_dir)
     return meta
+
+
+def _live_doc_stats(dm_live: DataFrame):
+    """Exact (n_docs, avgdl, max_doc_id) over the live document set
+    (tombstones.live_doc_meta) — the read path's liveness rule, applied
+    to stats so scored reads stay exact under deletes too (v2
+    read-time scoring uses meta's N/avgdl)."""
+    return dm_live.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg("doc_len").alias("avgdl"),
+        F.max("doc_id").alias("max_doc_id"),
+    ).collect()[0]

@@ -3,12 +3,11 @@
 LSM semantics lifted from the reference (SURVEY.md §1.1, §2.10):
 
   * ``add_documents``    → a new *generation* of segments (the RdbDump
-    of a fresh memtable): only the new docs are tokenized/encoded; the
-    existing generations are untouched. New postings are scored with
-    the UPDATED corpus stats; older generations keep their build-time
-    scores until compaction (the reference precedent: Posdb term
-    frequencies are approximate and drift between merges,
-    Posdb::getTermFreq — exactness is restored by ``compact``).
+    of a fresh memtable), written by the build's own generation writer
+    (``builder._write_generation``): only the new docs are
+    tokenized/encoded; the existing generations are untouched. Blocks
+    are stat-free, so every generation scores at read time with the
+    live (df, N, avgdl) the add commits.
   * ``delete_documents`` → tombstones — negative keys (RdbList.cpp
     delete-key annihilation) that mask a doc below a generation bar.
     Queries apply them at read time (Msg5-style merged read);
@@ -18,8 +17,9 @@ LSM semantics lifted from the reference (SURVEY.md §1.1, §2.10):
     picks the bars and calls it.
   * ``compact``          → the full merge (RdbBase::attemptMerge /
     RdbMerge.cpp): decode all generations back to posting tuples
-    (vectorized mapInPandas), drop tombstoned versions, rebuild ONE
-    fresh base generation with exact global stats. Sorted order is
+    (a mapInArrow over the read path's block decoder), drop tombstoned
+    versions, rebuild ONE fresh base generation with exact global
+    stats. Sorted order is
     re-established per (bucket, salt) partition by the encoder — a
     distributed sorted merge expressed as shuffle + sortWithinPartitions
     rather than a hand-written k-way file merge. The rebuilt store is
@@ -44,24 +44,22 @@ semantics; the reference drifts far more, Posdb::getTermFreq).
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Iterator
 from pathlib import Path
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.config import EngineConfig
-from open_source_search_engine_spark.functions.codec import (
-    delta_decode,
-    positions_byte_offsets,
-    varint_decode,
-)
 from open_source_search_engine_spark.index import builder as B
 from open_source_search_engine_spark.index import tombstones as T
-from open_source_search_engine_spark.operators.postings import fast_postings
-from open_source_search_engine_spark.operators.stats import term_stats
+from open_source_search_engine_spark.index.segments import (
+    _binary_array,
+    decode_block_rows,
+)
+
 
 def _cfg_from_meta(meta: dict) -> EngineConfig:
     c = dict(meta["config"])
@@ -83,18 +81,6 @@ def current_generations(index_dir: str | Path) -> list[int]:
 
 def _next_gen(index_dir: Path, meta: dict) -> int:
     return max([*current_generations(index_dir), *meta["generations"]]) + 1
-
-
-def _live_doc_stats(dm_live: DataFrame):
-    """Exact (n_docs, avgdl, max_doc_id) over the live document set
-    (tombstones.live_doc_meta) — the read path's liveness rule, applied
-    to stats so scored reads stay exact under deletes too (v2
-    read-time scoring uses meta's N/avgdl)."""
-    return dm_live.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.max("doc_id").alias("max_doc_id"),
-    ).collect()[0]
 
 
 # Side-table commit protocol: stage (B._stage_side_table, epoch-
@@ -177,129 +163,26 @@ def add_documents(
         raise ValueError("max_generations must be >= 2 with compact_mode='deltas'")
     index_dir = Path(index_dir)
     meta = B.load_meta(index_dir, recover=True)
-    cfg = _cfg_from_meta(meta)
     gen = _next_gen(index_dir, meta)
-    text_col, tok_mode = meta["text_col"], meta["tokenizer_mode"]
-    tok_docs, tok_text_col = docs, text_col
-    if anchor_edges is not None:
-        agg = anchor_edges.groupBy(F.col("dst_doc_id").alias("doc_id")).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("src_doc_id", "anchor_text"))
-                    ),
-                    lambda x: x["anchor_text"],
-                ),
-                " ",
-            ).alias("__anchors")
-        )
-        tok_docs = docs.join(agg, "doc_id", "left").withColumn(
-            "__text_anchored", F.concat_ws(" ", F.col(text_col), F.col("__anchors"))
-        )
-        tok_text_col = "__text_anchored"
-
     if replace:
         # distributed append — never collect incoming ids to the driver
         # (a large re-ingest would OOM it; the reference's negative
-        # keys flow through the same Msg4 fan-out as adds).
+        # keys flow through the same Msg4 fan-out as adds). Written
+        # before the writer's liveness snapshot, so N/avgdl exclude the
+        # replaced versions.
         # NOTE df drift (documented): replaced docs' term_dict df is
         # not decremented here, so scores drift upward until compact();
         # under a long replace=True loop run compact() periodically.
         T.append(spark, index_dir, docs, gen)
-
-    posts = fast_postings(
-        tok_docs, tok_text_col, "doc_id", mode=tok_mode, stopwords=cfg.stopwords
-    )
-    # field-prefixed termlists (F3) must cover new generations too, or
-    # field-restricted queries silently miss every doc added after the
-    # base build (same composite-term hook as builder.build_index)
-    if meta.get("index_fields"):
-        from open_source_search_engine_spark.functions.hashing import term_id_col
-
-        fparts = [
-            docs.select(
-                F.concat(F.lit(f + ":"), F.col(f).cast("string")).alias("term"),
-                F.col("doc_id"),
-                F.lit(1).cast("int").alias("tf"),
-                F.lit(0).cast("int").alias("doc_len"),
-            ).filter(F.col("term").isNotNull())
-            for f in meta["index_fields"]
-        ]
-        fposts = fparts[0]
-        for p in fparts[1:]:
-            fposts = fposts.unionByName(p)
-        fposts = fposts.withColumn("term_id", term_id_col(F.col("term")))
-        posts = posts.unionByName(fposts, allowMissingColumns=True)
-    posts = posts.persist()
-    lens = posts.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
-    # carry the base doc_meta's extra columns (lang, site, nchars, …):
-    # an append with a NARROWER schema makes spark.read's schema pick
-    # nondeterministic (no mergeSchema) — facets/sorts would lose the
-    # column outright after the first add_documents
-    dm_fields = [
-        f
-        for f in spark.read.parquet(str(index_dir / "doc_meta")).schema.fields
-        if f.name not in ("doc_id", "content_sha256", "doc_len", "gen")
-    ]
-    extra_exprs = [
-        (
-            F.col(f.name) if f.name in docs.columns else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
-        for f in dm_fields
-    ]
-    new_meta_df = (
-        docs.select(
-            F.col("doc_id"),
-            F.sha2(F.col(text_col).cast("binary"), 256).alias("content_sha256"),
-            *extra_exprs,
-        )
-        .join(lens, "doc_id", "left")
-        .fillna({"doc_len": 0})
-    )
-    new_meta_df.withColumn("gen", F.lit(gen)).write.mode("append").parquet(
-        str(index_dir / "doc_meta")
-    )
-
-    # refresh global stats + term_dict (df adds up; N/avgdl over the
-    # LIVE doc set — tombstone-filtered, so deletes are reflected too
-    # and v2 read-time scoring stays exact under add+delete traffic)
-    generations = sorted(set(meta["generations"]) | {gen})
-    row = _live_doc_stats(
-        T.live_doc_meta(spark, index_dir, generations, T.Snapshot(spark, index_dir))
-    )
-    old_dict = spark.read.parquet(str(index_dir / "term_dict"))
-    merged_dict = (
-        old_dict.unionByName(term_stats(posts))
-        .groupBy("term", "term_id")
-        .agg(F.sum("df").alias("df"))
-    )
-    new_epoch = int(meta.get("epoch", 0)) + 1
-    # STAGE the folded dict unreferenced — the live term_dict is not
-    # touched until the meta flip commits this add, so a crash anywhere
-    # below rolls the fold back (recovery discards the staged-ahead
-    # dir) and the rerun applies it exactly once
-    B._stage_side_table(index_dir, "term_dict", merged_dict, new_epoch)
-
-    new_max = max(int(row["max_doc_id"]), meta["max_doc_id"])
-    try:
-        # encode BEFORE the meta flip: readers filter segment scans to
-        # meta['generations'], so the new generation only becomes
-        # visible once its files are complete. (In replace mode the
-        # tombstones are already visible — a replaced doc is briefly
-        # absent rather than briefly doubled, the standard LSM
-        # delete-before-add transient.)
-        B._encode_and_write(
-            posts, index_dir, gen, None, cfg, input_snapshot, new_max
-        )
-    finally:
-        posts.unpersist()
-
-    meta.update(
-        n_docs=float(row["n_docs"]),
-        avgdl=float(row["avgdl"]),
-        max_doc_id=new_max,
-        generations=generations,
-        epoch=new_epoch,
+    # the build's own writer: one tokenize pass staged to parquet, the
+    # doc_meta append, the df fold STAGED for the next epoch and the
+    # encode of an unreferenced generation dir. (In replace mode the
+    # tombstones are already visible — a replaced doc is briefly absent
+    # rather than briefly doubled, the standard LSM delete-before-add
+    # transient.)
+    meta = B._write_generation(
+        spark, docs, index_dir, gen, _cfg_from_meta(meta), meta,
+        anchor_edges=anchor_edges, input_snapshot=input_snapshot,
     )
     B._write_meta(index_dir, meta)  # THE commit point
     B._promote_side_table(index_dir, "term_dict")
@@ -318,50 +201,42 @@ def add_documents(
 
 def decode_segments_to_postings(seg: DataFrame) -> DataFrame:
     """Segments → (term_id, doc_id, tf, generation[, pos_blob])
-    posting tuples. Arrow-batched mapInPandas; numpy decode, no
-    per-row Python. Per-posting position streams are self-contained
-    (codec.positions_encode), so compaction re-slices block pos_blobs
-    at posting boundaries (continuation-bit scan) and carries the raw
-    bytes through to the re-encoder — positions are never re-encoded."""
+    posting tuples: a mapInArrow over ``segments.decode_block_rows``,
+    the read path's decoder. Per-posting position streams are
+    self-contained (codec.positions_encode), so compaction re-slices
+    block pos_blobs at posting boundaries and carries the raw bytes
+    through to the re-encoder as zero-copy slices of the block stream
+    — positions are never re-encoded."""
     has_pos = "pos_blob" in seg.columns
+    cols = ["term_id", "generation", "n_docs", "docs_blob", "tfs_blob"]
+    names = ["term_id", "doc_id", "tf", "generation"]
+    if has_pos:
+        cols.append("pos_blob")
+        names.append("pos_blob")
+
+    def it(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            counts = rb.column("n_docs").to_numpy().astype(np.int64)
+            docs, tfs, _dls, pos = decode_block_rows(
+                counts,
+                rb.column("docs_blob"),
+                rb.column("tfs_blob"),
+                pos_blob=rb.column("pos_blob") if has_pos else None,
+            )
+            arrays = [
+                np.repeat(rb.column("term_id").to_numpy().astype(np.int64), counts),
+                docs,
+                tfs,
+                np.repeat(rb.column("generation").to_numpy().astype(np.int64), counts),
+            ]
+            if has_pos:
+                arrays.append(_binary_array(*pos))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
     schema = "term_id long, doc_id long, tf long, generation long"
     if has_pos:
         schema += ", pos_blob binary"
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            pos_col = pdf["pos_blob"] if has_pos else [None] * len(pdf)
-            for term_id, gen, blob_d, blob_t, blob_p in zip(
-                pdf["term_id"], pdf["generation"], pdf["docs_blob"],
-                pdf["tfs_blob"], pos_col,
-            ):
-                d = delta_decode(bytes(blob_d)).astype("int64")
-                t = varint_decode(bytes(blob_t)).astype("int64")
-                out = pd.DataFrame(
-                    {
-                        "term_id": term_id,
-                        "doc_id": d,
-                        "tf": t,
-                        "generation": gen,
-                    }
-                )
-                if has_pos:
-                    pb = bytes(blob_p) if blob_p is not None else b""
-                    offs = positions_byte_offsets(pb, t)
-                    out["pos_blob"] = [
-                        pb[offs[i] : offs[i + 1]] for i in range(d.size)
-                    ]
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs)
-            else:
-                empty = {"term_id": [], "doc_id": [], "tf": [], "generation": []}
-                if has_pos:
-                    empty["pos_blob"] = []
-                yield pd.DataFrame(empty)
-
-    return seg.mapInPandas(it, schema)
+    return seg.select(*cols).mapInArrow(it, schema)
 
 
 def compact(spark: SparkSession, index_dir: str | Path) -> dict:
@@ -399,7 +274,7 @@ def compact(spark: SparkSession, index_dir: str | Path) -> dict:
     # n_docs/avgdl, or compact would silently diverge from a
     # from-scratch build over the live set.
     dm_live = T.live_doc_meta(spark, index_dir, committed, snap)
-    row = _live_doc_stats(dm_live)
+    row = B._live_doc_stats(dm_live)
     n_docs, avgdl, max_id = float(row["n_docs"]), float(row["avgdl"]), int(row["max_doc_id"])
 
     new_dict = (
@@ -432,11 +307,7 @@ def compact(spark: SparkSession, index_dir: str | Path) -> dict:
     B._promote_side_table(index_dir, "term_dict")
 
     # post-commit sweep: dirs no reader with the new meta can reach
-    for g in committed:
-        for name in ("segments", "manifest"):
-            old = index_dir / name / f"generation={g}"
-            if old.exists():
-                shutil.rmtree(old)
+    B._drop_unreferenced_generations(index_dir, meta["generations"])
     T.clear(index_dir)
     B.refresh_read_caches(spark, index_dir)
     return meta
@@ -552,7 +423,7 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
     finally:
         posts.unpersist()
 
-    row = _live_doc_stats(dm_live)
+    row = B._live_doc_stats(dm_live)
     meta.update(
         n_docs=float(row["n_docs"]),
         avgdl=float(row["avgdl"]),
@@ -562,11 +433,7 @@ def merge_deltas(spark: SparkSession, index_dir: str | Path) -> dict | None:
     B._write_meta(index_dir, meta)  # atomic flip: {deltas} -> {new_gen}
     B._promote_side_table(index_dir, "term_dict")
     B.refresh_read_caches(spark, index_dir)
-    for g in deltas:
-        for name in ("segments", "manifest"):
-            old = index_dir / name / f"generation={g}"
-            if old.exists():
-                shutil.rmtree(old)
+    B._drop_unreferenced_generations(index_dir, meta["generations"])
     T.prune(spark, index_dir, meta["generations"])
     B.refresh_read_caches(spark, index_dir)
     return meta

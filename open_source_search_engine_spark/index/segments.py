@@ -49,7 +49,7 @@ import numpy as np
 import pandas as pd
 
 from open_source_search_engine_spark.functions.codec import (
-    delta_decode,
+    positions_byte_offsets,
     positions_decode,
     varint_decode,
     varint_encode_with_sizes,
@@ -114,7 +114,7 @@ def _binary_array(data: np.ndarray, offsets: np.ndarray) -> "object":
         [
             None,
             pa.py_buffer(np.ascontiguousarray(offsets, dtype=np.int32).tobytes()),
-            pa.py_buffer(data.tobytes() if isinstance(data, np.ndarray) else data),
+            pa.py_buffer(data),
         ],
     )
 
@@ -333,6 +333,62 @@ def gather_flat(values: np.ndarray, counts: np.ndarray, sel: np.ndarray) -> np.n
     return values[idx]
 
 
+def _stream(col) -> tuple[np.ndarray, np.ndarray]:
+    """A binary column (Arrow array, or a sequence of bytes such as a
+    pandas Series) → (one uint8 stream of its values in row order,
+    int64 per-row offsets into it starting at 0). Arrow input is a
+    zero-copy view; a sequence is joined in one call."""
+    import pyarrow as pa
+
+    if isinstance(col, (pa.Array, pa.ChunkedArray)):
+        data, offsets = _binary_column_np(col)
+        return data[offsets[0] : offsets[-1]], offsets - offsets[0]
+    lens = np.fromiter(map(len, col), np.int64, len(col))
+    offsets = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    return np.frombuffer(b"".join(col), dtype=np.uint8), offsets
+
+
+def decode_block_rows(n_docs, docs_blob, tfs_blob, dls_blob=None, pos_blob=None):
+    """Decode a batch of block rows (any terms, any generations) into
+    flat per-posting arrays, postings in row order: ``(doc_ids, tfs,
+    dls, pos)``. Each blob argument is a binary column; ``n_docs`` is
+    the rows' posting counts.
+
+    The rows' streams are decoded as one concatenation: doc_ids by a
+    segmented prefix sum over all delta gaps (every block restarts
+    with an absolute doc_id at the offsets ``n_docs`` gives), so there
+    is no per-row loop. ``dls`` is None unless ``dls_blob`` is given.
+    ``pos`` is None unless ``pos_blob`` is given; then it is ``(data,
+    offsets)``: posting i's self-contained position stream is
+    ``data[offsets[i]:offsets[i + 1]]``. A row with an empty pos_blob
+    (a field term, or a store built without positions) gives its
+    postings empty streams."""
+    counts = np.asarray(n_docs, dtype=np.int64)
+    gaps = varint_decode(_stream(docs_blob)[0]).astype(np.int64)
+    tfs = varint_decode(_stream(tfs_blob)[0]).astype(np.int64)
+    if gaps.size != counts.sum() or tfs.size != gaps.size:
+        raise ValueError(
+            f"block rows hold {gaps.size} doc_ids and {tfs.size} tfs, "
+            f"n_docs sums to {counts.sum()}"
+        )
+    docs = gaps
+    if gaps.size:
+        # int64 wrap-around in the running sum cancels in the difference
+        run = np.cumsum(gaps)
+        starts = np.minimum(np.cumsum(counts) - counts, gaps.size - 1)
+        docs = run - np.repeat(run[starts] - gaps[starts], counts)
+    dls = None
+    if dls_blob is not None:
+        dls = np.frombuffer(_stream(dls_blob)[0], dtype="<u4").astype(np.int64)
+    pos = None
+    if pos_blob is not None:
+        data, row_off = _stream(pos_blob)
+        has_pos = np.repeat(np.diff(row_off) > 0, counts)
+        pos = data, positions_byte_offsets(data, np.where(has_pos, tfs, 0))
+    return docs, tfs, dls, pos
+
+
 def decode_blocks(
     block_rows: pd.DataFrame,
     keep_mask: np.ndarray | None = None,
@@ -369,53 +425,33 @@ def decode_blocks(
         z = np.empty(0, dtype=np.int64)
         out3 = (z, z.copy(), np.empty(0, dtype=np.float64))
         return (*out3, np.empty(0, dtype=np.int64)) if with_positions else out3
-    docs_parts, tf_parts, dl_parts, gen_parts, pos_parts = [], [], [], [], []
-    gens = (
-        block_rows["generation"].to_numpy(np.int64)
-        if "generation" in block_rows.columns
-        else np.zeros(len(block_rows), dtype=np.int64)
-    )
-    pos_blobs = (
-        block_rows["pos_blob"] if with_positions else [None] * len(block_rows)
-    )
-    dl_blobs = (
-        block_rows["dls_blob"] if rescore is not None else [None] * len(block_rows)
-    )
-    for blob_d, blob_t, blob_l, blob_p, g in zip(
+    if with_positions and (
+        "pos_blob" not in block_rows.columns or block_rows["pos_blob"].isna().any()
+    ):
+        raise ValueError(
+            "segment store has no pos_blob — built with "
+            "store_positions=False; positional ops unavailable"
+        )
+    counts = block_rows["n_docs"].to_numpy(np.int64)
+    docs, tfs, dls, pos = decode_block_rows(
+        counts,
         block_rows["docs_blob"],
         block_rows["tfs_blob"],
-        dl_blobs,
-        pos_blobs,
-        gens,
-    ):
-        d = delta_decode(bytes(blob_d)).astype(np.int64)
-        t = varint_decode(bytes(blob_t)).astype(np.int64)
-        docs_parts.append(d)
-        tf_parts.append(t)
-        if rescore is not None:
-            dl_parts.append(
-                np.frombuffer(bytes(blob_l), dtype="<u4").astype(np.int64)
-            )
-        gen_parts.append(np.full(d.size, g, dtype=np.int64))
-        if with_positions:
-            if blob_p is None:
-                raise ValueError(
-                    "segment store has no pos_blob — built with "
-                    "store_positions=False; positional ops unavailable"
-                )
-            pos_parts.append(positions_decode(bytes(blob_p), t))
-    docs = np.concatenate(docs_parts)
-    tfs = np.concatenate(tf_parts)
-    dls = np.concatenate(dl_parts) if rescore is not None else None
-    gen = np.concatenate(gen_parts)
-    pos_flat = np.concatenate(pos_parts).astype(np.int64) if with_positions else None
+        block_rows["dls_blob"] if rescore is not None else None,
+        block_rows["pos_blob"] if with_positions else None,
+    )
+    gen = (
+        np.repeat(block_rows["generation"].to_numpy(np.int64), counts)
+        if "generation" in block_rows.columns
+        else np.zeros(docs.size, dtype=np.int64)
+    )
     # k-way merge of generation runs (RdbList::merge_r analog): stable
     # sort by (doc_id, generation) then keep the LAST (newest) per doc.
     order = np.lexsort((gen, docs))
     docs, tfs, gen = docs[order], tfs[order], gen[order]
     if dls is not None:
         dls = dls[order]
-    sel = order  # surviving postings, as indices into concat order
+    sel = order  # surviving postings, as indices into decode order
     if docs.size > 1:
         last = np.ones(docs.size, dtype=bool)
         last[:-1] = docs[1:] != docs[:-1]
@@ -425,8 +461,8 @@ def decode_blocks(
         sel = sel[last]
     if tombstones is not None and tombstones[0].size and docs.size:
         dead_ids, before = tombstones
-        pos = np.searchsorted(dead_ids, docs)
-        pos_c = np.minimum(pos, dead_ids.size - 1)
+        hit_at = np.searchsorted(dead_ids, docs)
+        pos_c = np.minimum(hit_at, dead_ids.size - 1)
         hit = dead_ids[pos_c] == docs
         dead = hit & (gen < before[pos_c])
         keep = ~dead
@@ -441,4 +477,6 @@ def decode_blocks(
         scores = np.zeros(docs.size, dtype=np.float64)
     if not with_positions:
         return docs, tfs, scores
-    return docs, tfs, scores, gather_flat(pos_flat, np.concatenate(tf_parts), sel)
+    data, offsets = pos
+    survivors = gather_flat(data, np.diff(offsets), sel)
+    return docs, tfs, scores, positions_decode(survivors, tfs)

@@ -201,32 +201,3 @@ def staged_postings(
     )
     return staged.withColumn("term_id", term_id_col(F.col("term")))
 
-
-def fast_postings(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "simple",
-    stopwords: frozenset | tuple = (),
-) -> DataFrame:
-    """(term, doc_id, tf, doc_len, term_id) — posting rows only.
-
-    Where the algebra path ships every token occurrence through Arrow
-    and shuffles it into groupBy(term, doc_id) (XmlDoc::hashAll one key
-    per occurrence), staged_postings aggregates tf inside the tokenizer
-    batch (pandas C groupby) and emits pre-aggregated rows from
-    mapInPandas: ~3.5× less Arrow traffic at our token/doc ratio and
-    ZERO shuffle — tf per (doc, term) is complete within the doc's
-    batch, the map-side combine taken to its limit. ``doc_len``
-    (BM25's dl) rides along on every posting row, so scoring needs NO
-    doc_id join back to doc_meta (the reference analog is posdb keys
-    carrying precomputed per-doc ranks, Posdb.h key layout,
-    SURVEY.md §1.3). Must stay row-identical to
-    ``build_postings(..., with_positions=False)`` on
-    (term, doc_id, tf) (tested).
-    """
-    return (
-        staged_postings(docs, text_col, id_col, mode, stopwords)
-        .filter(F.col("tf") > 0)
-        .drop("sha")
-    )

@@ -125,12 +125,18 @@ def _run_kernel(pdf, split, *args):
     return pd.concat(rb.to_pandas() for rb in make_encode_kernel(*args)(iter(batches)))
 
 
-def test_encode_kernel_decode_roundtrip():
+def test_encode_kernel_decode_roundtrip(spark):
     """Sorted postings with positions, split over two Arrow batches,
-    encode (make_encode_kernel) and decode (decode_blocks) back to the
-    input: doc_ids, tfs, doc lengths and positions per term, with
-    block metadata that bounds every block's postings."""
+    encode (make_encode_kernel) and decode back to the input: through
+    decode_blocks, doc_ids, tfs, doc lengths and positions per term,
+    with block metadata that bounds every block's postings; through
+    the merge decoder, every posting with its generation tag and its
+    position bytes."""
+    from open_source_search_engine_spark.index.merge import (
+        decode_segments_to_postings,
+    )
     from open_source_search_engine_spark.index.segments import (
+        BLOCK_SCHEMA,
         bm25_rescore,
         decode_blocks,
         salt_width,
@@ -164,6 +170,23 @@ def test_encode_kernel_decode_roundtrip():
             assert len(in_blk) == blk["n_docs"]
             assert in_blk["tf"].max() == blk["block_max_tf"]
             assert in_blk["doc_len"].min() == blk["block_min_dl"]
+
+    # merge decoder: blocks of two generations, one Arrow pass
+    def gen_of(term_ids):
+        return np.where(term_ids % 2 == 0, 4, 7)
+
+    out["generation"] = gen_of(out["term_id"].to_numpy()).astype(np.int32)
+    seg = spark.createDataFrame(out, BLOCK_SCHEMA + ", generation int")
+    got = (
+        decode_segments_to_postings(seg).toPandas()
+        .sort_values(["term_id", "doc_id"]).reset_index(drop=True)
+    )
+    want = pdf.sort_values(["term_id", "doc_id"]).reset_index(drop=True)
+    assert np.array_equal(got["term_id"], want["term_id"])
+    assert np.array_equal(got["doc_id"], want["doc_id"])
+    assert np.array_equal(got["tf"], want["tf"])
+    assert np.array_equal(got["generation"], gen_of(want["term_id"].to_numpy()))
+    assert [bytes(b) for b in got["pos_blob"]] == [bytes(b) for b in want["pos_blob"]]
 
 
 def test_encode_kernel_rejects_unsorted_input():

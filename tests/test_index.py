@@ -245,17 +245,19 @@ def test_resume_after_side_table_crash_recomputes_stats(
     pd.testing.assert_frame_equal(got, ref)
 
 
-def test_fast_postings_equals_algebra_path(spark, tiny_corpus):
-    """fast_postings (mapInPandas pre-aggregated) must be row-identical
-    to the algebra path for both tokenizer modes."""
+def test_staged_postings_equal_algebra_path(spark, tiny_corpus):
+    """staged_postings' posting rows (tf > 0; pre-aggregated inside the
+    mapInArrow tokenizer) must be row-identical to the algebra path
+    for both tokenizer modes."""
     from open_source_search_engine_spark.operators.postings import (
         build_postings,
-        fast_postings,
+        staged_postings,
     )
 
     for mode in ("simple", "code"):
         a = (
-            fast_postings(tiny_corpus, "content", "doc_id", mode)
+            staged_postings(tiny_corpus, "content", "doc_id", mode)
+            .filter(F.col("tf") > 0)
             .select("term", "doc_id", "tf")
             .toPandas()
             .sort_values(["term", "doc_id"])

@@ -63,6 +63,78 @@ def test_add_then_compact_matches_full_build(spark, corpora, tmp_path):
         assert got["score"].tolist() == pytest.approx(want["score"].tolist(), abs=1e-5)
 
 
+def test_add_matches_fresh_build_with_every_writer_feature(spark, corpora, tmp_path):
+    """An add to a store built with extra doc_meta columns, field terms
+    and anchor text — one added doc with no postings at all — commits
+    the same term_dict, doc_meta, corpus stats, scored top-k and field
+    lists as a fresh build over the union."""
+    import numpy as np
+
+    from open_source_search_engine_spark.operators import indexed
+
+    base, extra, _ = corpora
+    n = 260
+    src = np.arange(0, n, 3)
+    dst = (7 * src + 1) % n
+    blank = min(set(range(200, n)) - set(dst.tolist()))  # gets no anchors
+    extra_b = extra.withColumn(
+        "content",
+        F.when(F.col("doc_id") == blank, F.lit("")).otherwise(F.col("content")),
+    )
+    full = base.unionByName(extra_b)
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src_doc_id": src, "dst_doc_id": dst})
+    ).join(
+        full.select(
+            F.col("doc_id").alias("src_doc_id"),
+            F.concat_ws(" ", F.slice(F.split("content", " "), 1, 3)).alias("anchor_text"),
+        ),
+        "src_doc_id",
+    )
+    kw = dict(
+        cfg=TEST_CFG, text_col="content", tokenizer_mode="code",
+        extra_meta_cols=["lang"], index_fields=["lang"],
+    )
+    d, d_full = tmp_path / "idx_add", tmp_path / "idx_fresh"
+    builder.build_index(
+        spark, base, d, anchor_edges=edges.filter(F.col("dst_doc_id") < 200), **kw
+    )
+    merge.add_documents(
+        spark, extra_b, d, anchor_edges=edges.filter(F.col("dst_doc_id") >= 200)
+    )
+    builder.build_index(spark, full, d_full, anchor_edges=edges, **kw)
+
+    def table(p, name, key):
+        t = spark.read.parquet(str(p / name)).drop("gen").toPandas()
+        return t[sorted(t.columns)].sort_values(key).reset_index(drop=True)
+
+    dm = table(d, "doc_meta", "doc_id")
+    assert dm.loc[dm["doc_id"] == blank, "doc_len"].tolist() == [0]
+    pd.testing.assert_frame_equal(dm, table(d_full, "doc_meta", "doc_id"))
+    pd.testing.assert_frame_equal(
+        table(d, "term_dict", "term"), table(d_full, "term_dict", "term")
+    )
+    got_meta, want_meta = builder.load_meta(d), builder.load_meta(d_full)
+    for key in ("n_docs", "avgdl", "max_doc_id"):
+        assert got_meta[key] == want_meta[key], key
+    for terms in TERMS:
+        got, want = (
+            wand.wand_topk(spark, p, terms, k=20, mode="or").toPandas()
+            for p in (d, d_full)
+        )
+        assert list(got["doc_id"]) == list(want["doc_id"]), terms
+        assert got["score"].tolist() == pytest.approx(want["score"].tolist(), abs=1e-9)
+    def field_docs(p):
+        return sorted(r["doc_id"] for r in indexed.field_docs(spark, p, "lang", "py").collect())
+
+    want = field_docs(d_full)
+    assert want and field_docs(d) == want
+    # compact decodes field-term blocks (no positions) next to word
+    # blocks in one batch
+    merge.compact(spark, d)
+    assert field_docs(d) == want
+
+
 def test_delete_and_update(spark, corpora, tmp_path):
     base, _, _ = corpora
     d = tmp_path / "idx2"
@@ -587,8 +659,10 @@ def test_add_documents_crash_rollback_and_rerun_exact(
     assert spark.read.parquet(str(d / "doc_meta")).count() == dm_rows_before
     assert merge.current_generations(d) == [0]
 
-    # retry: converges to the never-crashed twin — stats AND scores
+    # retry: converges to the never-crashed twin — stats AND scores —
+    # and leaves no add staging dir behind
     merge.add_documents(spark, extra, d)
+    assert not list(d.glob(builder.ADD_STAGING_PREFIX + "*"))
     for p in (d, d_ref):
         spark.catalog.refreshByPath(str(p / "term_dict"))
     td_got = (
@@ -683,6 +757,11 @@ def test_recover_swaps_epoch_matrix(spark, corpora, tmp_path):
     epoch = merge.B.load_meta(d).get("epoch", 0)
 
     import shutil
+
+    # a killed add's staging dir → swept
+    (d / f"{builder.ADD_STAGING_PREFIX}3").mkdir()
+    merge.B.load_meta(d, recover=True)
+    assert not list(d.glob(builder.ADD_STAGING_PREFIX + "*"))
 
     # staged AHEAD of the committed epoch → rollback (discard)
     shutil.copytree(td, nxt)
