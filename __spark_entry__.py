@@ -156,11 +156,12 @@ def _lsm_autocompacted(spark: SparkSession, sf_dir: str) -> Path:
     Format v2 + merge_deltas stats restoration make SCORED reads on
     this store hash-identical to a fresh build over the logical corpus
     (VERDICT r04 item 2): scores come from (tf, dl) + live stats at
-    read time, merge_deltas replaces the merged deltas' raw df with
-    their live df and recomputes n_docs/avgdl from the liveness view —
-    exact because no BASE-generation doc is masked (base-doc mutations
-    keep their raw df counted until compact, Lucene docFreq
-    semantics). The merged_topk entry pins exactly that."""
+    read time, and the merge swaps the merged deltas' raw df for the
+    merged generation's block counts and recomputes n_docs/avgdl from
+    the liveness view — exact because no BASE-generation doc is
+    masked (base-doc mutations keep their raw df counted until
+    compact, Lucene docFreq semantics). The merged_topk entry pins
+    exactly that."""
     key = sf_dir + "#lsmauto"
     if key not in _IDX_CACHE:
         import tempfile
@@ -199,9 +200,9 @@ def _lsm_autocompacted(spark: SparkSession, sf_dir: str) -> Path:
             ).select("doc_id"),
         )
         # ...then one more policy add, whose triggered merge_deltas
-        # folds the mutations' df adjustments and recomputes
-        # n_docs/avgdl from the liveness view — the store ends
-        # UNCOMPACTED but stats-exact
+        # drops the mutated postings' df and recomputes n_docs/avgdl
+        # from the liveness view — the store ends UNCOMPACTED but
+        # stats-exact
         merged = idx_merge.add_documents(
             spark,
             docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 350)),

@@ -132,10 +132,26 @@ def _promote_side_table(index_dir: Path, name: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _commit(spark: SparkSession, index_dir: Path, meta: dict) -> None:
+    """THE commit of every writer after the initial build (add_documents
+    and merge.py's one merge): the atomic meta.json flip, then
+    ``_recover_swaps`` rolls the store forward to it — the side tables
+    staged for this epoch are promoted and the generations the flip
+    unreferenced are dropped — then Spark's cached reads of the index
+    paths are invalidated. A crash after the flip leaves exactly what
+    the next writer's recovery finishes, by the same code."""
+    _write_meta(index_dir, meta)
+    _recover_swaps(index_dir)
+    refresh_read_caches(spark, index_dir)
+
+
 def _recover_swaps(index_dir: Path) -> None:
-    """Writer-side crash recovery. The commit protocol (every writer
-    after the initial build — add_documents, which writes through
-    ``_write_generation``, merge_deltas and compact) is:
+    """Writer-side crash recovery, and the roll-forward half of every
+    commit (``_commit`` runs it right after the flip; every writer's
+    ``load_meta(recover=True)`` runs it before starting). The commit
+    protocol (every writer after the initial build — add_documents,
+    which writes through ``_write_generation``, and merge.py's merge
+    behind merge_deltas and compact) is:
 
         1. append-only artifacts land first (doc_meta rows, tombstones,
            the new generation dir) — all UNREFERENCED by readers, who
@@ -146,7 +162,8 @@ def _recover_swaps(index_dir: Path) -> None:
            with epoch = meta['epoch'] + 1 (`_stage_side_table`);
         3. ONE atomic meta.json rename commits the new generation set
            AND the new epoch;
-        4. staged side tables are promoted (`_promote_side_table`).
+        4. this function promotes the staged side tables and drops the
+           generations the new meta no longer references.
 
     Recovery therefore converges from ANY crash point:
 
@@ -525,8 +542,7 @@ def _write_generation(
     reuses its staging checkpoint and skips encoded buckets. A
     generation above 0 appends its doc_meta rows, STAGES the df-folded
     term_dict for the next epoch and encodes an unreferenced
-    generation dir; it returns the meta to commit — the caller's meta
-    flip is the commit point (``_recover_swaps``)."""
+    generation dir; it returns the meta for the caller's ``_commit``."""
     # one anchor join: inbound anchor text is concatenated after each
     # doc's content before the single tokenize pass
     text_col = meta["text_col"]
@@ -692,10 +708,7 @@ def _write_generation(
                 .groupBy("term", "term_id")
                 .agg(F.sum("df").alias("df"))
             )
-        # term_dict hash-clustered + sorted by term: the query path's
-        # driver-side lookup prunes parquet row-groups on term min/max
-        # stats (the RdbMap seek applied to the dictionary)
-        td = td.repartition(8, "term").sortWithinPartitions("term")
+        td = _term_sorted(td)
         if gen:
             # STAGED unreferenced: the live term_dict is untouched
             # until the caller's meta flip, so a crash rolls the df
@@ -766,6 +779,14 @@ def _write_generation(
     # recovery (adds never resume from it).
     shutil.rmtree(staging, ignore_errors=True)
     return meta
+
+
+def _term_sorted(td: DataFrame) -> DataFrame:
+    """The on-disk term_dict layout every writer produces: hash-
+    clustered into 8 files, each sorted by term, so the query path's
+    term lookup prunes parquet row groups on term min/max stats (the
+    RdbMap seek applied to the dictionary)."""
+    return td.repartition(8, "term").sortWithinPartitions("term")
 
 
 def _live_doc_stats(dm_live: DataFrame):

@@ -190,21 +190,23 @@ def append(spark: SparkSession, index_dir, doc_ids, bar: int) -> None:
 
 
 def clear(index_dir) -> None:
-    """Drop the whole table (after a compact, which applied it)."""
+    """Drop the whole table (after a merge of every generation —
+    ``compact`` — which applied it)."""
     shutil.rmtree(Path(index_dir) / DIR, ignore_errors=True)
 
 
 def prune(spark: SparkSession, index_dir, base_generations: list[int]) -> None:
-    """After a delta merge: drop rows that no longer mask anything and
-    collapse the rest to one row per doc. A row ``(doc_id, bar)``
-    still matters iff it masks (a) BASE-generation postings — doc_meta
-    has a row of the doc at the base generation (min of
-    ``base_generations``: every surviving delta posting carries a
-    generation above every existing bar, so only the base can be
-    masked) — or (b) the doc_meta liveness view — the doc's newest
-    row sits below the bar (a doc added and deleted within the delta
-    tier). Without this sweep replace-mode ingest grows the table by
-    one row per updated doc per batch, re-joined by every read.
+    """After a committed merge that left the base generation unmerged
+    (``merge_deltas``; ``base_generations`` is the new committed set):
+    drop rows that no longer mask anything and collapse the rest to
+    one row per doc. A row ``(doc_id, bar)`` still matters iff it masks
+    (a) BASE-generation postings — doc_meta has a row of the doc at the
+    base generation (min of ``base_generations``: every merged posting
+    carries a generation at or above every existing bar, so only the
+    base can be masked) — or (b) the doc_meta liveness view — the doc's
+    newest row sits below the bar (a doc added and deleted within the
+    delta tier). Without this sweep replace-mode ingest grows the table
+    by one row per updated doc per batch, re-joined by every read.
 
     Crash-safe: the pruned rows are APPENDED first (a semantic subset;
     reads take max-per-doc), then the old files are unlinked; any
@@ -236,5 +238,7 @@ def prune(spark: SparkSession, index_dir, base_generations: list[int]) -> None:
     live.write.mode("append").parquet(str(tdir))
     for p in old_files:
         p.unlink()
-    if not files(index_dir):
+    if files(index_dir):
+        spark.catalog.refreshByPath(str(tdir))
+    else:
         shutil.rmtree(tdir)

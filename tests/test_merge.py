@@ -35,6 +35,26 @@ def corpora(spark):
     return base, extra, full
 
 
+def _term_dict(spark, d):
+    spark.catalog.refreshByPath(str(d / "term_dict"))
+    td = spark.read.parquet(str(d / "term_dict")).toPandas()
+    return td[["term", "term_id", "df"]].sort_values("term").reset_index(drop=True)
+
+
+def _assert_fresh_build_stats(spark, d, live, tmp_path):
+    """term_dict and meta's corpus stats equal a fresh build over ``live``."""
+    fresh = tmp_path / f"{d.name}_fresh"
+    builder.build_index(
+        spark, live, fresh, cfg=TEST_CFG, text_col="content", tokenizer_mode="code"
+    )
+    td = _term_dict(spark, d)
+    assert (td["df"] > 0).all()
+    pd.testing.assert_frame_equal(td, _term_dict(spark, fresh))
+    got, want = builder.load_meta(d), builder.load_meta(fresh)
+    for key in ("n_docs", "avgdl", "max_doc_id"):
+        assert got[key] == want[key], key
+
+
 def test_add_then_compact_matches_full_build(spark, corpora, tmp_path):
     base, extra, full = corpora
     d = tmp_path / "idx"
@@ -171,6 +191,9 @@ def test_delete_and_update(spark, corpora, tmp_path):
     want = _oracle(live, ["def", "return"], k=20)
     assert list(after["doc_id"]) == list(want["doc_id"])
     assert after["score"].tolist() == pytest.approx(want["score"].tolist(), abs=1e-5)
+    # the merge's df (block-metadata fold over base-generation postings)
+    # and its N/avgdl/max_doc_id equal a fresh count over the live set
+    _assert_fresh_build_stats(spark, d, live, tmp_path)
 
 
 def test_positions_survive_add_and_compact(spark, corpora, tmp_path):
@@ -299,6 +322,18 @@ def test_tiered_merge_policy_bounds_generations(spark, corpora, tmp_path):
     # the base generation is never rewritten by the deltas tier merge
     assert merge.current_generations(d)[0] == 0  # base untouched by delta merges
 
+    def assert_term_dict_sorted():
+        # the query's term lookup prunes row groups on term min/max
+        import pyarrow.parquet as pq
+
+        parts = sorted((d / "term_dict").glob("*.parquet"))
+        assert parts
+        for f in parts:
+            terms = pq.read_table(f, columns=["term"])["term"].to_pylist()
+            assert terms == sorted(terms), f.name
+
+    assert_term_dict_sorted()
+
     got = wand.wand_topk(spark, d, ["def", "return"], k=1000, mode="or").toPandas()
     want = _oracle(
         full.filter(F.col("doc_id") != victim), ["def", "return"], k=1000
@@ -308,6 +343,7 @@ def test_tiered_merge_policy_bounds_generations(spark, corpora, tmp_path):
 
     # full compact after the tiered merges restores exact ranking
     merge.compact(spark, d)
+    assert_term_dict_sorted()
     got = wand.wand_topk(spark, d, ["scan", "merge"], k=10, mode="or").toPandas()
     want = _oracle(full.filter(F.col("doc_id") != victim), ["scan", "merge"])
     assert list(got["doc_id"]) == list(want["doc_id"])
@@ -338,7 +374,7 @@ def test_merge_deltas_noop_and_budget_contract(spark, corpora, tmp_path):
     assert merge.merge_deltas(spark, d) is None
     assert merge.current_generations(d) == [0, 1]
     with pytest.raises(ValueError, match="max_generations"):
-        merge.maybe_compact(spark, d, max_generations=1, mode="deltas")
+        merge.maybe_compact(spark, d, max_generations=1)
     with pytest.raises(ValueError, match="max_generations"):
         merge.add_documents(spark, extra, d, max_generations=1)
 
@@ -740,6 +776,7 @@ def test_merge_deltas_crash_rollback_and_rerun_exact(
         assert got["score"].tolist() == pytest.approx(
             want["score"].tolist(), abs=1e-5
         )
+    _assert_fresh_build_stats(spark, d, live, tmp_path)
 
 
 def test_recover_swaps_epoch_matrix(spark, corpora, tmp_path):
