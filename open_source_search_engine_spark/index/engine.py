@@ -2,12 +2,15 @@
 
 The reference keeps termlist metadata and hot lists in RdbCache
 (RdbCache.cpp, SURVEY.md §4 'list caching'); the Spark analog is an
-index handle that lists the segment store, plans live doc_meta and
-takes the tombstone snapshot (index/tombstones.py) once per commit
-instead of once per call. It IS a ``lists.ColdIndex`` — the term
-lookup (driver-side pyarrow read of the term-sorted dictionary, no
-Spark job) and the pruned segment scan are the cold handle's own —
-with those three cached. Every
+index handle that plans live doc_meta and takes the tombstone snapshot
+(index/tombstones.py) once per commit instead of once per call. It IS
+a ``lists.ColdIndex`` — the term lookup (driver-side pyarrow read of
+the term-sorted dictionary, no Spark job) and both scans are the cold
+handle's own. A small scan (touched segment files ≤
+``lists.SMALL_SCAN_MAX_BYTES``, small tombstones) is a driver-side
+pyarrow read, so a warm small top-k or phrase starts no Spark job; a
+large scan reads the Spark ``segments`` listing lazily, once per
+commit. Every
 operator that takes an index path takes the engine instead: top-k
 (``wand.topk``, the one top-k implementation), boolean/facets/sort/
 pagination, phrase, the query language and nested boolean expressions.
@@ -59,9 +62,8 @@ class QueryEngine(ColdIndex):
     def _load(self) -> None:
         self._stamp = self._commit_stamp()
         self.meta = load_meta(self.index_dir)
-        # listings + schema inference once per commit (shadow the cold
-        # handle's lazily read ``segments`` and ``tombstones``)
-        self.segments = self.spark.read.parquet(str(self.index_dir / "segments"))
+        # the large-scan path reads ``segments`` lazily, once per commit
+        self.__dict__.pop("segments", None)
         self.tombstones = T.Snapshot(self.spark, self.index_dir)
         self._doc_meta = super().doc_meta_df()
 
@@ -85,7 +87,7 @@ class QueryEngine(ColdIndex):
         k: int = 10,
         round_dp: int | None = 5,
     ) -> DataFrame:
-        """N queries in ONE job — (query_id, doc_id, score),
+        """N queries in ONE scan — (query_id, doc_id, score),
         rank-identical per query to topk() (see wand.topk)."""
         self._maybe_refresh()
         return W.topk(self, queries, k, round_dp)

@@ -18,6 +18,14 @@ O(query's posting lists), not O(corpus). Deletes are annihilated
 inside the decode kernels, shipped by the handle's tombstone snapshot
 (index/tombstones.py).
 
+One size rule picks where a scored or positional scan runs
+(``ColdIndex.small_scan``): when the tombstones are small and the
+touched segment files total at most SMALL_SCAN_MAX_BYTES on disk
+(a 32nd of it for a positional scan, POSITIONAL_SCAN_WEIGHT),
+top-k (index/wand.py) and ``phrase_docs`` read those files in the
+driver with pyarrow and run their kernel once over all rows, so the
+query starts no Spark job. Above it they run the Spark scan below.
+
 Parallelism: the decode groups by (salt, bucket) — all generations of
 one (term, salt) share a bucket (bucket = term_id % n_buckets), so
 LSM generation-merge stays correct while the decode fans out over
@@ -38,8 +46,9 @@ from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.builder import load_meta
-from open_source_search_engine_spark.index.segments import decode_blocks
+from open_source_search_engine_spark.index.segments import BLOCK_SCHEMA, decode_blocks
 from open_source_search_engine_spark.index import wand as W
+from open_source_search_engine_spark.session import local_frame
 from open_source_search_engine_spark.index.wand import (
     KERNEL_INPUT_COLS,
     query_term_rows,
@@ -47,6 +56,38 @@ from open_source_search_engine_spark.index.wand import (
 
 POSTING_SCHEMA = "term_id long, doc_id long, tf int, score double"
 PHRASE_SCHEMA = "doc_id long"
+
+# The one size rule of the read path: a scan whose touched segment
+# files (committed generations × the query's buckets) total at most
+# this many bytes on disk is read and scored in the driver
+# (ColdIndex.small_scan); a larger one runs as a Spark job.
+# Measured crossover, warm OR top-k (k=10), gen_corpus stores built
+# with perfbench's config (64 buckets, 8 salts), local[4] on a 4-core
+# host, median of 7 per path (touched MB: driver ms / Spark ms):
+#   head term "dup", 2k-256k docs: 0.08: 86/406, 0.2: 51/327,
+#     0.7: 55/279, 1.4: 94/482, 2.8: 96/421, 5.5: 120/394 — the
+#     driver always wins;
+#   one head term per bucket (61 terms, every file touched), 64k, 128k
+#     and 256k docs: 44: 1073/1996, 85: 1654/2462, 167: 3075/2158.
+# The lines cross near 120 MB; 64 MiB keeps the driver path ~1.5x
+# faster at the bound and its per-query memory well below the crossover.
+# Cold top-k (a fresh handle per query, median of 4 of 5, same stores)
+# crosses later, since the Spark path also lists the store each query:
+#   wide query, 8k/64k/128k docs: 7.9: 319/1636, 44: 958/1670,
+#     85: 1531/1948.
+SMALL_SCAN_MAX_BYTES = 64 * 1024 * 1024
+# A positional scan (phrase_docs) also reads pos_blob, and decodes and
+# chains positions on one driver thread, so its touched bytes count
+# this many times against the bound (64 MiB / 32 = 2 MiB). Measured
+# the same way, warm phrase_docs, median of 4 of 5 (touched MB: driver
+# ms / Spark ms):
+#   "dup guard" (in half the docs), 8k/64k/128k docs: 0.32: 80/309,
+#     1.9: 285/397, 3.7: 598/620;
+#   61 head terms (one per bucket, no match), 8k/64k/128k docs:
+#     7.9: 315/1473, 44: 1497/1572, 85: 3170/1809.
+# The dense two-word phrase crosses near 4 MB; at 2 MiB the driver
+# path is ~1.4x faster.
+POSITIONAL_SCAN_WEIGHT = 32
 
 
 def require_positions(meta: dict) -> None:
@@ -63,14 +104,14 @@ def require_positions(meta: dict) -> None:
 
 
 class ColdIndex:
-    """One-shot index handle: ``meta``, ``term_rows``,
+    """One-shot index handle: ``meta``, ``term_rows``, ``small_scan``,
     ``pruned_segments``, ``tombstones`` (one index.tombstones.Snapshot
     shared by every read through the handle), ``doc_meta_df``. Every
     operator in this module, operators/indexed.py and wand.topk takes a
     handle (or a path, via as_handle). The warm subclass
-    index.engine.QueryEngine caches the segment listing, live doc_meta
-    and tombstone snapshot per commit, so query loops pay that IO once
-    (RdbCache, SURVEY.md §4)."""
+    index.engine.QueryEngine caches live doc_meta, the tombstone
+    snapshot and (on the large path) the segment listing per commit, so
+    query loops pay that IO once (RdbCache, SURVEY.md §4)."""
 
     def __init__(self, spark: SparkSession, index_dir):
         self.spark = spark
@@ -79,20 +120,43 @@ class ColdIndex:
 
     @cached_property
     def segments(self) -> DataFrame:
-        return self.spark.read.parquet(str(self.index_dir / "segments"))
+        # the large scan's listing, once per handle (per commit on the
+        # warm engine): listing the root costs one Spark job, where
+        # reading the touched files by name costs one listing job per
+        # query once they pass 32 (2.4 s for the 459 files of the
+        # 2000-doc perfbench store, local[4]). The explicit schema
+        # spares a schema-inference job.
+        return self.spark.read.schema(BLOCK_SCHEMA).parquet(str(self.index_dir / "segments"))
 
     def term_rows(self, terms: list[str]) -> list[dict]:
         return query_term_rows(self.spark, self.index_dir, terms)
 
+    def _scope(self, tids: list[int]) -> tuple[list[int], list[int]]:
+        """(generations, buckets) a scan of ``tids`` reads — the one
+        snapshot and pruning rule of both scans. Snapshot isolation:
+        only generations the meta commit pointer references (a
+        concurrent merge's staged dirs are invisible). A referenced
+        generation whose dir is gone was dropped by a later commit:
+        this handle's meta is stale, and reading on would return part
+        of the store, so it raises."""
+        gens = [int(g) for g in self.meta["generations"]]
+        root = self.index_dir / "segments"
+        gone = [g for g in gens if not (root / f"generation={g}").is_dir()]
+        if gone:
+            raise FileNotFoundError(
+                f"generations {gone} of {self.index_dir} were dropped by a later "
+                "commit; reopen the index (or refresh the QueryEngine)"
+            )
+        n_buckets = self.meta["config"]["n_buckets"]
+        return gens, sorted({t % n_buckets for t in tids})
+
     def pruned_segments(self, tids: list[int], with_positions: bool = False) -> DataFrame:
         if with_positions:
             require_positions(self.meta)
-        n_buckets = self.meta["config"]["n_buckets"]
-        buckets = sorted({t % n_buckets for t in tids})
-        # snapshot isolation: only generations the meta commit pointer
-        # references (a concurrent merge's staged dirs are invisible)
-        seg = self.segments.filter(
-            F.col("generation").isin([int(g) for g in self.meta["generations"]])
+        seg = self.segments
+        gens, buckets = self._scope(tids)
+        seg = seg.filter(
+            F.col("generation").isin(gens)
             & F.col("bucket").isin(buckets)
             & F.col("term_id").isin(tids)
         )
@@ -100,6 +164,39 @@ class ColdIndex:
         if with_positions:
             cols.append("pos_blob")
         return seg.select(*cols)
+
+    def small_scan(self, tids: list[int], with_positions: bool = False) -> pd.DataFrame | None:
+        """The block rows ``pruned_segments`` would scan, read in the
+        driver with pyarrow — or None when the scan is not small: the
+        tombstones are not small, or the touched segment files exceed
+        SMALL_SCAN_MAX_BYTES on disk (weighted by POSITIONAL_SCAN_WEIGHT
+        with positions). Same scope as ``pruned_segments`` (``_scope``),
+        found by globbing ``generation=G/bucket=B`` dirs instead of a
+        Spark listing; the ``term_id`` filter prunes on row-group
+        stats."""
+        if with_positions:
+            require_positions(self.meta)
+        if not self.tombstones.small:
+            return None
+        import pyarrow.dataset as ds
+
+        root = self.index_dir / "segments"
+        gens, buckets = self._scope(tids)
+        paths = [
+            p
+            for g in gens
+            for b in buckets
+            for p in sorted((root / f"generation={g}" / f"bucket={b}").glob("*.parquet"))
+        ]
+        weight = POSITIONAL_SCAN_WEIGHT if with_positions else 1
+        if sum(p.stat().st_size for p in paths) * weight > SMALL_SCAN_MAX_BYTES:
+            return None
+        cols = list(KERNEL_INPUT_COLS) + (["pos_blob"] if with_positions else [])
+        data = ds.dataset(
+            [str(p) for p in paths], format="parquet",
+            partitioning="hive", partition_base_dir=str(root),
+        )
+        return data.to_table(filter=ds.field("term_id").isin(tids), columns=cols).to_pandas()
 
     @cached_property
     def tombstones(self) -> T.Snapshot:
@@ -124,7 +221,7 @@ def term_postings(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame
     ix = as_handle(spark, index_dir)
     trows = ix.term_rows(terms)
     if not trows:
-        return spark.createDataFrame([], POSTING_SCHEMA)
+        return local_frame(spark, POSTING_SCHEMA)
     tids = sorted({int(r["term_id"]) for r in trows})
     seg = ix.pruned_segments(tids)
     n_buckets = ix.meta["config"]["n_buckets"]
@@ -180,9 +277,10 @@ def phrase_docs(spark: SparkSession, index_dir, words: list[str]) -> DataFrame:
     phrase matching from the persisted positions (posdb positional
     keys, SURVEY.md §1.3; bigram ids, Phrases.cpp — §2.8 X4).
 
-    Kernel: decode the phrase terms' lists WITH positions per salt,
-    then run the position-chain intersection VECTORIZED over the whole
-    candidate set at once: every term's candidate positions are kept
+    Kernel: decode the phrase terms' lists WITH positions — once over
+    every row for a small scan, per salt otherwise — then run the
+    position-chain intersection VECTORIZED over the whole candidate set
+    at once: every term's candidate positions are kept
     flat as (doc_index * M + pos) keys, and start positions survive
     word i iff (start_key + i) appears in word i's key stream — one
     searchsorted per word over the concatenation, no per-doc Python
@@ -191,11 +289,15 @@ def phrase_docs(spark: SparkSession, index_dir, words: list[str]) -> DataFrame:
     ix = as_handle(spark, index_dir)
     tmap = term_id_map(spark, ix, words)
     if any(w not in tmap for w in words):
-        return spark.createDataFrame([], PHRASE_SCHEMA)
+        return local_frame(spark, PHRASE_SCHEMA)
     word_tids = [tmap[w] for w in words]
     tids = sorted(set(word_tids))
-    seg = ix.pruned_segments(tids, with_positions=True)
     n_words = len(words)
+    rows = ix.small_scan(tids, with_positions=True)
+    if rows is not None:
+        kernel = _phrase_kernel(word_tids, n_words, ix.tombstones.arrays)
+        return local_frame(spark, PHRASE_SCHEMA, kernel(rows))
+    seg = ix.pruned_segments(tids, with_positions=True)
 
     def kernel_factory(tombstones):
         return _phrase_kernel(word_tids, n_words, tombstones)

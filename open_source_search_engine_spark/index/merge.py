@@ -263,12 +263,15 @@ def _merge(
     snap = T.Snapshot(spark, index_dir)
     dm_live = T.live_doc_meta(spark, index_dir, committed, snap)
     stats = B._live_doc_stats(dm_live)
+    # every doc deleted: commit an empty store (avg and max over no
+    # rows are null); max_doc_id keeps its last value
+    avgdl = float(stats["avgdl"] or 0.0)
+    max_doc_id = int(meta["max_doc_id"] if stats["max_doc_id"] is None else stats["max_doc_id"])
     B._encode_and_write(
         _live_postings(spark, index_dir, gens, snap).join(
             dm_live.select("doc_id", "doc_len"), "doc_id"
         ),
-        index_dir, new_gen, None, _cfg_from_meta(meta), "merge",
-        int(stats["max_doc_id"]),
+        index_dir, new_gen, None, _cfg_from_meta(meta), "merge", max_doc_id,
     )
     # explicit schemas (here and in _live_postings) spare each read a
     # schema-inference job; generation/bucket still come from the paths
@@ -294,8 +297,8 @@ def _merge(
         )
     meta = meta | {
         "n_docs": float(stats["n_docs"]),
-        "avgdl": float(stats["avgdl"]),
-        "max_doc_id": int(stats["max_doc_id"]),
+        "avgdl": avgdl,
+        "max_doc_id": max_doc_id,
         "generations": sorted((set(committed) - set(gens)) | {new_gen}),
         "epoch": epoch,
     }

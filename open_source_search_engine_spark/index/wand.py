@@ -6,10 +6,22 @@ ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
 
   1. term lookup in term_dict (replaces driver-side re-hashing; also
      yields exact df — Posdb::getTermFreq is approximate, ours exact)
-  2. partition-pruned segment scan: ``bucket IN (...) AND term_id IN
-     (...)`` — Catalyst prunes to the queries' term buckets
-     (the RdbMap ranged seek, SURVEY.md §2.1 S3) and parquet row-group
-     stats skip non-matching term_ids inside a bucket
+  2. the one size rule (``ColdIndex.small_scan``): when the tombstones
+     are small and the touched segment files — committed generations ×
+     the queries' term buckets — total at most
+     ``lists.SMALL_SCAN_MAX_BYTES`` on disk, the scan is small:
+       small: pyarrow reads those files in the driver (term_id filter
+         on row-group stats, pos_blob not read) and the kernel below
+         runs ONCE over all rows; every doc's postings are in that one
+         frame, so each query's local top-k is its answer, returned as
+         a local DataFrame — a warm query starts no Spark job (a Spark
+         job costs more than the read; the reference serves a query's
+         lists inside the process that holds them, Msg39)
+       large: partition-pruned Spark scan ``bucket IN (...) AND
+         term_id IN (...)`` — Catalyst prunes to the queries' term
+         buckets (the RdbMap ranged seek, SURVEY.md §2.1 S3) and parquet
+         row-group stats skip non-matching term_ids inside a bucket —
+         then steps 3 and 4
   3. per-salt kernel (applyInPandas over disjoint doc_id ranges — the
      per-shard Msg39 computation): decode + prune + score + local
      top-k via numpy, per query; deletes are annihilated in the decode,
@@ -47,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index.segments import block_bound, decode_blocks
+from open_source_search_engine_spark.session import local_frame
 
 # make_salt_kernel output; the batch kernel prefixes query_id
 KERNEL_SCHEMA = "doc_id long, score double"
@@ -154,8 +167,9 @@ def make_salt_kernel(
     tombstones: tuple[np.ndarray, np.ndarray] | None,
     scoring,
 ):
-    """Kernel run once per salt (disjoint doc_id range). Input: block
-    rows of the query's terms only. Output: local top-k candidates.
+    """Kernel run once per salt (disjoint doc_id range), or once over
+    every row of a small scan. Input: block rows of the query's terms
+    only. Output: local top-k candidates.
 
     ``scoring`` = (idf_by_tid, avgdl, k1, b) from scoring_ctx: v2
     blocks are stat-free, so per-posting scores AND the MaxScore block
@@ -279,7 +293,8 @@ def make_batch_salt_kernel(
     tombstones: tuple[np.ndarray, np.ndarray] | None,
     scoring,
 ):
-    """Per-salt kernel serving MANY queries from one block partition.
+    """Per-salt kernel serving MANY queries from one block partition
+    (or from every row of a small scan).
 
     ``resolved`` = [(query_id, tids sorted, mode)]. Each query runs the
     EXACT single-query kernel (make_salt_kernel) over the sub-frame of
@@ -334,19 +349,21 @@ def topk(
     QueryEngine.topk/topk_batch and the streaming query server — is a
     thin wrapper over this one function.
 
-    One job whatever |Q| (Msg39 serving many queries per shard, SURVEY.md
-    §2.6): the handle resolves every query's terms in one dictionary
-    read, one partition-pruned scan covers the UNION of their term
-    buckets, one per-salt kernel pass runs each query's single-query
-    kernel over its own term groups, with tombstones shipped by the
-    handle's snapshot (index.tombstones).
+    One scan whatever |Q| (Msg39 serving many queries per shard,
+    SURVEY.md §2.6): the handle resolves every query's terms in one
+    dictionary read, one scan covers the UNION of their term buckets,
+    and the kernel runs each query's single-query kernel over its own
+    term groups, with tombstones shipped by the handle's snapshot
+    (index.tombstones).
 
-    The merge over the ≤ n_salts × k × |Q| per-salt candidates follows
-    the input size: one resolved query merges by ``ORDER BY score DESC,
-    doc_id ASC LIMIT k`` — a driver-side take on collect, no shuffle
-    (Msg3a::mergeLists, §2.6 O4); more than one ranks per query_id in a
-    window. Queries whose required term is missing (AND) or with no
-    known terms contribute no rows."""
+    A small scan (``ColdIndex.small_scan``) runs the kernel once in the
+    driver and needs no merge. A large one is a Spark job with one
+    kernel per salt; the merge over the ≤ n_salts × k × |Q| per-salt
+    candidates follows the input size: one resolved query merges by
+    ``ORDER BY score DESC, doc_id ASC LIMIT k`` — a driver-side take on
+    collect, no shuffle (Msg3a::mergeLists, §2.6 O4); more than one
+    ranks per query_id in a window. Queries whose required term is
+    missing (AND) or with no known terms contribute no rows."""
     spark = ix.spark
     all_terms = sorted({t for terms, _m in queries.values() for t in terms})
     trows = ix.term_rows(all_terms)
@@ -354,20 +371,28 @@ def topk(
         queries, {r["term"]: int(r["term_id"]) for r in trows}
     )
     if not resolved:
-        return spark.createDataFrame([], BATCH_KERNEL_SCHEMA)
+        return local_frame(spark, BATCH_KERNEL_SCHEMA)
     tids = sorted({t for _q, ts, _m in resolved for t in ts})
-    seg = ix.pruned_segments(tids).drop("bucket")
     scoring = scoring_ctx(ix.meta, trows)
-    local = ix.tombstones.apply_kernel(
-        seg, ("salt",),
-        lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
-        BATCH_KERNEL_SCHEMA, ix.meta["config"]["n_salts"],
-    )
-    if len(resolved) == 1:
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    rows = ix.small_scan(tids)
+    if rows is not None:
+        # one kernel call over every row: salts only spread a
+        # distributed scan, and with every doc's postings in one frame
+        # each query's local top-k is already its global top-k
+        kernel = make_batch_salt_kernel(resolved, k, ix.tombstones.arrays, scoring)
+        out = local_frame(spark, BATCH_KERNEL_SCHEMA, kernel(rows))
     else:
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        out = local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+        seg = ix.pruned_segments(tids).drop("bucket")
+        local = ix.tombstones.apply_kernel(
+            seg, ("salt",),
+            lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
+            BATCH_KERNEL_SCHEMA, ix.meta["config"]["n_salts"],
+        )
+        if len(resolved) == 1:
+            out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        else:
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+            out = local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
     score = F.round(F.col("score"), round_dp) if round_dp is not None else F.col("score")
     return out.select("query_id", "doc_id", score.alias("score"))
 
@@ -395,7 +420,7 @@ def wand_topk_batch(
     k: int = 10,
     round_dp: int | None = 5,
 ) -> DataFrame:
-    """Top-k for MANY queries in ONE job: (query_id, doc_id, score),
+    """Top-k for MANY queries in ONE scan: (query_id, doc_id, score),
     rank-identical per query to wand_topk (see topk)."""
     from open_source_search_engine_spark.index.lists import ColdIndex
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index import lists as L
+from open_source_search_engine_spark.session import local_frame
 
 
 def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
@@ -77,7 +78,7 @@ def and_intersect(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame
     n = len(set(terms))
     tmap = L.term_id_map(spark, index_dir, terms)
     if len(tmap) < n:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, "doc_id long")
     tp = L.term_postings(spark, index_dir, terms)
     return (
         tp.groupBy("doc_id")
@@ -97,7 +98,7 @@ def not_exclude(spark: SparkSession, index_dir, term: str, minus: str) -> DataFr
     """`term -minus` (F1/U3) — anti-join of decoded lists."""
     tmap = L.term_id_map(spark, index_dir, [term, minus])
     if term not in tmap:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, "doc_id long")
     tp = L.term_postings(spark, index_dir, [term, minus])
     pos = tp.filter(F.col("term_id") == tmap[term]).select("doc_id")
     if minus not in tmap:
@@ -174,11 +175,11 @@ def scored_matches(
     n = len(set(terms))
     tmap = L.term_id_map(spark, index_dir, terms)
     if mode == "and" and groups is None and len(tmap) < n:
-        return spark.createDataFrame([], "doc_id long, _score double")
+        return local_frame(spark, "doc_id long, _score double")
     if mode == "and" and groups is not None and any(
         not any(t in tmap for t in g) for g in groups
     ):
-        return spark.createDataFrame([], "doc_id long, _score double")
+        return local_frame(spark, "doc_id long, _score double")
     tp = L.term_postings(spark, index_dir, terms)
     if candidate_docs is not None:
         tp = tp.join(candidate_docs.select("doc_id"), "doc_id", "left_semi")
@@ -197,7 +198,7 @@ def scored_matches(
         if gid is None:
             # OR mode with no group member in the term dictionary:
             # no group can contribute a match
-            return spark.createDataFrame([], "doc_id long, _score double")
+            return local_frame(spark, "doc_id long, _score double")
         agg = tp.withColumn("gid", gid).groupBy("doc_id").agg(
             F.sum("score").alias("_score"),
             F.countDistinct("gid").alias("_nterms"),

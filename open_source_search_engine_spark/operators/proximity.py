@@ -30,6 +30,7 @@ from open_source_search_engine_spark.config import EngineConfig
 from open_source_search_engine_spark.operators import bm25
 from open_source_search_engine_spark.operators.postings import doc_tokens
 from open_source_search_engine_spark.plans.oracle_sql import BM25_PARAMS, _terms_list
+from open_source_search_engine_spark.session import local_frame
 
 PROX_W = 0.25
 
@@ -94,7 +95,7 @@ def proximity_topk_indexed(
     # proximity needs ≥2 distinct present terms (mindist is a PAIR
     # distance; the corpus path and oracle drop all rows otherwise)
     if len(tmap) < len(ts) or len(ts) < 2:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, "doc_id long, score double")
     tids = sorted(tmap.values())
     seg = ix.pruned_segments(tids, with_positions=True)
     n_q = len(tids)

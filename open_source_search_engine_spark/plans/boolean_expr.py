@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_source_search_engine_spark.session import local_frame
+
 _TOKEN_RE = re.compile(r"\(|\)|[^\s()]+")
 _KEYWORDS = {"and", "or", "not"}
 
@@ -167,7 +169,7 @@ def evaluate_indexed(spark, index_dir, q: str) -> DataFrame:
     tmap = L.term_id_map(spark, index_dir, terms)
     tp = L.term_postings(spark, index_dir, terms).select("term_id", "doc_id").persist()
     universe = index_dir.doc_meta_df().select("doc_id")
-    empty = spark.createDataFrame([], "doc_id long")
+    empty = local_frame(spark, "doc_id long")
 
     def term_set(t: str) -> DataFrame:
         if t not in tmap:

@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 # Make the package importable inside Spark's Python workers no matter
 # what the driver's cwd is — the local-mode analog of shipping the
@@ -120,3 +121,25 @@ def _usable_tmpfs_dir(min_free_bytes: int = 4 << 30) -> str | None:
         return shm
     except OSError:
         return None
+
+
+def local_frame(spark: SparkSession, schema: str, rows=None) -> DataFrame:
+    """A DataFrame over driver-side rows (a pandas frame; None for an
+    empty result) with the DDL ``schema``, built from an Arrow table.
+
+    Spark plans it as a LocalRelation and folds later projections into
+    it, so a ``collect`` starts no job. An empty frame made from a
+    Python list or an empty pandas frame starts one job per collect
+    (medians at local[4] on a 4-core host: ~120 ms per collect from a
+    list or empty pandas frame, ~20 ms from an Arrow table)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    tbl = (
+        arrow.empty_table()
+        if rows is None
+        else pa.Table.from_pandas(rows, schema=arrow, preserve_index=False)
+    )
+    return spark.createDataFrame(tbl, struct)

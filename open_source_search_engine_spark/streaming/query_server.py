@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from open_source_search_engine_spark.index.engine import QueryEngine
+from open_source_search_engine_spark.session import local_frame
 
 QUERY_STREAM_SCHEMA = StructType(
     [
@@ -124,7 +125,7 @@ def read_results(spark: SparkSession, result_dir: str | Path):
     """(query_id, doc_id, score, batch) — the served result log; empty
     (same columns) before the first batch lands."""
     if not any(Path(result_dir).glob("batch=*")):
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(spark, RESULT_SCHEMA)
     return spark.read.option("basePath", str(result_dir)).parquet(
         str(Path(result_dir) / "batch=*")
     )

@@ -1,0 +1,152 @@
+"""The driver-side small scan (``lists.ColdIndex.small_scan``) against
+the Spark scan it replaces below ``lists.SMALL_SCAN_MAX_BYTES``.
+
+Every store in the other tests is small, so they all run the driver
+path; these tests force the Spark path (``SMALL_SCAN_MAX_BYTES = -1``,
+or large tombstones) and pin both to identical ranks and scores on a
+store with an add, a replace and a delete. They also pin the point of
+the driver path: a warm top-k and an empty result start no Spark job."""
+
+from __future__ import annotations
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from fixtures.gen_corpus import gen_corpus
+from open_source_search_engine_spark.index import builder, lists, merge, wand
+from open_source_search_engine_spark.index import tombstones as T
+from open_source_search_engine_spark.index.engine import QueryEngine
+from tests.conftest import TEST_CFG
+
+QUERIES = {
+    "or2": (["def", "return"], "or"),
+    "and2": (["scan", "merge"], "and"),
+    "and_missing": (["scan", "zzz_not_a_term"], "and"),
+    "unknown": (["zzz_not_a_term"], "or"),
+    "single": (["index"], "and"),
+}
+PHRASE = ["index", "merge"]
+DEAD = list(range(3, 260, 7))
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """Base of docs 0-199, an add of 200-259, a replace of 0-29 with
+    other content, and a delete of every 7th doc from 3."""
+    pdf = gen_corpus(n_docs=260)
+    d = tmp_path_factory.mktemp("small_scan") / "idx"
+    builder.build_index(
+        spark, spark.createDataFrame(pdf[pdf["doc_id"] < 200]), d,
+        cfg=TEST_CFG, text_col="content", tokenizer_mode="code",
+    )
+    merge.add_documents(spark, spark.createDataFrame(pdf[pdf["doc_id"] >= 200]), d)
+    merge.add_documents(spark, spark.createDataFrame(gen_corpus(n_docs=30, seed=7)), d, replace=True)
+    merge.delete_documents(spark, d, DEAD)
+    return d
+
+
+def _jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _reads(spark, d) -> dict[str, pd.DataFrame]:
+    eng = QueryEngine(spark, d, auto_refresh=False)
+    out = {
+        "cold_batch": wand.wand_topk_batch(spark, d, QUERIES, k=25)
+        .orderBy("query_id", F.desc("score"), "doc_id").toPandas(),
+        "warm_batch": eng.topk_batch(QUERIES, k=25)
+        .orderBy("query_id", F.desc("score"), "doc_id").toPandas(),
+        "phrase": lists.phrase_docs(spark, d, PHRASE).orderBy("doc_id").toPandas(),
+        "warm_phrase": eng.phrase(PHRASE).orderBy("doc_id").toPandas(),
+    }
+    for qid, (terms, mode) in QUERIES.items():
+        out[f"cold_{qid}"] = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
+        out[f"warm_{qid}"] = eng.topk(terms, k=25, mode=mode).toPandas()
+    return out
+
+
+def test_small_scan_matches_spark_scan(spark, store, monkeypatch):
+    ix = lists.ColdIndex(spark, store)
+    tids = sorted(int(r["term_id"]) for r in ix.term_rows(["def", "return"]))
+    assert ix.tombstones.small and ix.small_scan(tids) is not None
+    want = _reads(spark, store)
+
+    monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
+    assert lists.ColdIndex(spark, store).small_scan(tids) is None
+    spark_scan = _reads(spark, store)
+    monkeypatch.undo()
+
+    # large tombstones alone must take the Spark path (cogrouped)
+    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
+    ix = lists.ColdIndex(spark, store)
+    assert not ix.tombstones.small and ix.small_scan(tids) is None
+    cogrouped = _reads(spark, store)
+    monkeypatch.undo()
+
+    for got in (spark_scan, cogrouped):
+        for key in want:
+            pd.testing.assert_frame_equal(
+                got[key].reset_index(drop=True), want[key].reset_index(drop=True),
+                obj=key,
+            )
+    # non-vacuous: every query with known terms answers, deletes and
+    # replaced content are visible
+    for qid in ("or2", "and2", "single"):
+        assert len(want[f"cold_{qid}"]) > 0, qid
+    assert set(want["cold_batch"]["query_id"]) == {"or2", "and2", "single"}
+    assert len(want["phrase"]) > 0
+    for key in want:
+        assert not set(want[key]["doc_id"]) & set(DEAD), key
+
+
+def test_warm_small_topk_starts_no_job(spark, store):
+    eng = QueryEngine(spark, store)
+    eng.topk(["def", "return"], k=10, mode="or").collect()
+    before = _jobs(spark)
+    rows = eng.topk(["def", "return"], k=10, mode="or").collect()
+    batch = eng.topk_batch(QUERIES, k=10).collect()
+    assert _jobs(spark) == before
+    assert len(rows) == 10 and len(batch) > 0
+
+
+def test_unknown_term_reads_start_no_job(spark, store):
+    before = _jobs(spark)
+    assert wand.wand_topk(spark, store, ["zzz_not_a_term"], k=5).collect() == []
+    assert lists.phrase_docs(spark, store, ["zzz_not_a_term", "def"]).collect() == []
+    assert lists.term_postings(spark, store, ["zzz_not_a_term"]).collect() == []
+    assert _jobs(spark) == before
+
+
+def test_stale_handle_raises_after_commit_drops_generations(spark, tmp_path, monkeypatch):
+    """A handle whose meta predates a commit that dropped generations
+    (compact) must raise on either scan, not read part of the store."""
+    pdf = gen_corpus(n_docs=60)
+    d = tmp_path / "idx"
+    builder.build_index(
+        spark, spark.createDataFrame(pdf[pdf["doc_id"] < 40]), d,
+        cfg=TEST_CFG, text_col="content", tokenizer_mode="code",
+    )
+    merge.add_documents(spark, spark.createDataFrame(pdf[pdf["doc_id"] >= 40]), d)
+    eng = QueryEngine(spark, d, auto_refresh=False)
+    cold = lists.ColdIndex(spark, d)
+    assert eng.topk(["def"], k=5, mode="or").count() > 0
+    merge.compact(spark, d)
+
+    reads = {
+        "warm_topk": lambda: eng.topk(["def"], k=5, mode="or").collect(),
+        "warm_phrase": lambda: eng.phrase(PHRASE).collect(),
+        "cold_phrase": lambda: lists.phrase_docs(spark, cold, PHRASE).collect(),
+        "cold_postings": lambda: lists.term_postings(spark, cold, ["def"]).collect(),
+    }
+    for name, read in reads.items():
+        with pytest.raises(FileNotFoundError, match="dropped by a later commit"):
+            read()
+    monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
+    for name in ("warm_topk", "warm_phrase"):
+        with pytest.raises(FileNotFoundError, match="dropped by a later commit"):
+            reads[name]()
+    monkeypatch.undo()
+
+    eng.refresh()
+    assert eng.topk(["def"], k=5, mode="or").count() == 5
