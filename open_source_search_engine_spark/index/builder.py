@@ -42,6 +42,7 @@ from dataclasses import asdict
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -65,6 +66,31 @@ MANIFEST_SCHEMA = (
     "bucket int, n_terms long, n_blocks long, n_postings long, "
     "built_at string, input_snapshot string"
 )
+
+# Postings per encode task (encode_partitions). Every task pays a fixed
+# JVM→Python hand-off and writes one parquet file per bucket it holds,
+# so a small generation runs fastest as one task; past this size a
+# second task's parallelism pays for its fixed cost.
+# Measured: _encode_and_write wall (shuffle, sort, encode, write,
+# manifest) with the task count pinned, over staged gen_corpus postings
+# under perfbench's config (64 buckets, 8 salts, positions), local[4]
+# on a 4-core host, median of 3 (2 at 4k and 128k), seconds:
+#   docs   postings   n=1    2     4     8     16    64
+#   2k     168k       2.3   2.4   2.7   3.3   4.2   6.5
+#   4k     336k       3.8   3.3   4.2   4.7   5.4   7.5
+#   8k     668k       3.5   2.8   3.0   3.7   4.8   6.7
+#   32k    2.67M      8.9   6.0   4.9   6.0   6.3   7.8
+#   128k   10.7M     27.4  19.1  13.4  13.6  14.3  14.9
+# One task wins up to ~300k postings. Past that, 320k is NOT the
+# measured best: it is chosen so the large builds keep the cap's count.
+# bench_scaling.py's 360k docs stage 30,377,863 rows (counted: postings
+# plus one meta row per doc) and still get 64 tasks (any count over
+# 20.16M does); sf1, three copies of that corpus (91.1M rows, 512 x 16
+# groups), still gets 256, which needs over 81.6M rows (10% margin) and
+# a bound below ~357k. Mid-sized generations (roughly 1-10M postings)
+# run more tasks than the table's best: 32k docs get 9 (~6 s), where 4
+# take 4.9 s.
+POSTINGS_PER_ENCODE_TASK = 320_000
 
 
 def _salt_col(doc_id: F.Column, max_doc_id: int, n_salts: int) -> F.Column:
@@ -295,6 +321,31 @@ def refresh_read_caches(spark: SparkSession, index_dir: str | Path) -> None:
             spark.catalog.refreshByPath(str(p))
 
 
+def encode_partitions(n_postings: int, cfg: EngineConfig, shuffle_partitions: int) -> int:
+    """The encode's task count: one task per POSTINGS_PER_ENCODE_TASK
+    postings, capped by the large-build rule. The cap is a floor of 64
+    that scales with the group count: hash-packing many (bucket, salt)
+    groups into few partitions gives fat-partition stragglers that
+    dominate wall clock once waves are few (measured at 512 buckets x
+    16 salts / 1.08M docs: encode 98.6 s at 64 partitions vs 80.1 s at
+    256 on 8 pinned cores — BENCH.md §sf1). ≤32 groups per partition
+    bounds the packing variance; the 1024 cap keeps per-partition fixed
+    costs negligible."""
+    n_groups = cfg.n_buckets * cfg.n_salts
+    cap = max(shuffle_partitions, 64, min(1024, n_groups // 32))
+    return min(cap, max(1, -(-n_postings // POSTINGS_PER_ENCODE_TASK)))
+
+
+def manifest_postings(index_dir: Path, generations: list[int]) -> int:
+    """Σ manifest n_postings over ``generations`` — the postings those
+    generations hold, from their manifest rows alone."""
+    return sum(
+        int(pq.read_table(p, columns=["n_postings"])["n_postings"].to_numpy().sum())
+        for g in generations
+        for p in (index_dir / "manifest" / f"generation={g}").glob("*.parquet")
+    )
+
+
 def _encode_and_write(
     posts: DataFrame,
     index_dir: Path,
@@ -303,9 +354,12 @@ def _encode_and_write(
     cfg: EngineConfig,
     input_snapshot: str,
     max_doc_id: int,
+    n_postings: int,
 ) -> None:
     """Encode (a subset of buckets of) postings into block rows,
-    write segments + manifest rows.
+    write segments + manifest rows. ``n_postings`` is the caller's
+    estimate of the posting count, read from metadata (no Spark job);
+    it sizes the encode (``encode_partitions``).
 
     ``posts`` needs only (term_id, doc_id, tf, doc_len): the repartition
     below is THE salted shuffle — it hashes on the (bucket, salt)
@@ -323,37 +377,22 @@ def _encode_and_write(
     if buckets is not None:
         sel = sel.filter(bucket_expr.isin(buckets))
     # ONE shuffle end to end: the salted repartition hashes on the
-    # (bucket, salt) EXPRESSIONS (explicit N — AQE respects it and the
-    # waves stay even at any core count), the kernel emits blocks
-    # already sorted (bucket, term_id, salt, doc) and the partitioned
-    # write happens straight off the kernel output. The old plan
-    # re-shuffled the ENCODED blocks into n_buckets partitions to get
-    # one file per bucket dir — that second shuffle moved the entire
-    # index bytes again and capped write parallelism at n_buckets
-    # (measured: the encode+write phase scaled 4→16 cores at only
-    # 1.46×). Now write tasks = shuffle partitions, independent of
-    # n_buckets; each task holds ~(n_buckets·n_salts)/N whole
-    # (bucket, salt) groups, so a bucket dir gets ~n_salts files — and
-    # the term-major sort within each task keeps parquet row-group
-    # term_id min/max stats tight for the query path's pruning
-    # (RdbMap analog).
-    # floor of 64 partitions: the whole-partition encode kernel's
-    # arena scales with partition size, and first-touch of a fresh
-    # arena is a fixed per-worker cost on virtualized hosts — more,
-    # smaller partitions keep arenas small and reused (a worker
-    # processes many partitions with one arena) and keep waves even.
-    # The floor also scales with the group count: hash-packing many
-    # (bucket, salt) groups into few partitions gives fat-partition
-    # stragglers that dominate wall clock once waves are few
-    # (measured at 512 buckets x 16 salts / 1.08M docs: encode 98.6 s
-    # at 64 partitions vs 80.1 s at 256 on 8 pinned cores — BENCH.md
-    # §sf1). ≤32 groups per partition bounds the packing variance;
-    # the 1024 cap keeps per-partition fixed costs negligible.
-    n_groups = cfg.n_buckets * cfg.n_salts
-    n_shuffle = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        64,
-        min(1024, n_groups // 32),
+    # (bucket, salt) EXPRESSIONS (explicit N — AQE respects it), the
+    # kernel emits blocks already sorted (bucket, term_id, salt, doc)
+    # and the partitioned write happens straight off the kernel
+    # output. The old plan re-shuffled the ENCODED blocks into
+    # n_buckets partitions to get one file per bucket dir — that
+    # second shuffle moved the entire index bytes again and capped
+    # write parallelism at n_buckets (measured: the encode+write phase
+    # scaled 4→16 cores at only 1.46×). Now write tasks = N
+    # (encode_partitions: sized to the generation's postings), and
+    # each task writes one file per bucket it holds, so a bucket dir
+    # gets at most min(N, n_salts) files — one for a generation small enough
+    # for one task. The term-major sort within each task keeps parquet
+    # row-group term_id min/max stats tight for the query path's
+    # pruning (RdbMap analog).
+    n_shuffle = encode_partitions(
+        n_postings, cfg, int(spark.conf.get("spark.sql.shuffle.partitions"))
     )
     salt_expr = _salt_col(F.col("doc_id"), max_doc_id, cfg.n_salts)
     # the (bucket, term, salt, doc) sort runs JVM-SIDE: Tungsten's
@@ -437,8 +476,6 @@ def done_buckets(spark: SparkSession, index_dir: str | Path, generation: int = 0
     man_dir = Path(index_dir) / "manifest" / f"generation={generation}"
     if not man_dir.exists():
         return set()
-    import pyarrow.dataset as ds
-
     tbl = ds.dataset(str(man_dir), format="parquet").to_table(columns=["bucket"])
     return set(tbl["bucket"].to_pylist())
 
@@ -743,13 +780,16 @@ def _write_generation(
         # reads score with the live stats. _encode_and_write writes
         # a manifest row for EVERY bucket it was responsible for
         # (empty ones included) — the generation is complete when it
-        # returns
+        # returns. Its size estimate is the staging footers' row
+        # count (postings plus one meta row per doc), which also
+        # serves a resumed build that never ran the staging write.
         enc_fut = (
             None
             if todo == []
             else ex.submit(
                 _encode_and_write,
                 posts, index_dir, gen, todo, cfg, input_snapshot, meta["max_doc_id"],
+                ds.dataset(str(staging), format="parquet").count_rows(),
             )
         )
         for f in side_futs:

@@ -123,9 +123,10 @@ class ColdIndex:
         # the large scan's listing, once per handle (per commit on the
         # warm engine): listing the root costs one Spark job, where
         # reading the touched files by name costs one listing job per
-        # query once they pass 32 (2.4 s for the 459 files of the
-        # 2000-doc perfbench store, local[4]). The explicit schema
-        # spares a schema-inference job.
+        # query once they pass 32 (2.4 s for 459 files, local[4]: the
+        # 2000-doc perfbench store when its base encode ran 64 tasks;
+        # sized to its postings it is one task and 61 files). The
+        # explicit schema spares a schema-inference job.
         return self.spark.read.schema(BLOCK_SCHEMA).parquet(str(self.index_dir / "segments"))
 
     def term_rows(self, terms: list[str]) -> list[dict]:

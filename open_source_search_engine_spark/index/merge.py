@@ -272,6 +272,8 @@ def _merge(
             dm_live.select("doc_id", "doc_len"), "doc_id"
         ),
         index_dir, new_gen, None, _cfg_from_meta(meta), "merge", max_doc_id,
+        # the merged generations' postings bound the merge's output
+        B.manifest_postings(index_dir, gens),
     )
     # explicit schemas (here and in _live_postings) spare each read a
     # schema-inference job; generation/bucket still come from the paths

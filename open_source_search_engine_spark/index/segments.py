@@ -93,20 +93,20 @@ def _binary_array(data: np.ndarray, offsets: np.ndarray) -> "object":
     int offsets (no per-value Python bytes objects).
 
     pa.binary() offsets are int32; the kernel concatenates a whole
-    shuffle partition's stream, so a partition whose blob bytes exceed
+    encode partition's stream, so a partition whose blob bytes exceed
     2 GiB would silently wrap the astype and corrupt the column
-    (ADVICE r02). Fail loudly instead — the fix at scale is more
-    shuffle partitions (spark.sql.shuffle.partitions), not a bigger
-    offset type, since 2 GiB-per-task partitions are already far past
-    the healthy task size."""
+    (ADVICE r02). Fail loudly instead — the fix is more encode tasks
+    (builder.encode_partitions: a lower POSTINGS_PER_ENCODE_TASK), not
+    a bigger offset type, since 2 GiB-per-task partitions are already
+    far past the healthy task size."""
     import pyarrow as pa
 
     last = int(offsets[-1]) if offsets.size else 0
     if last > np.iinfo(np.int32).max:
         raise ValueError(
             f"encode partition blob stream is {last} bytes > int32 offset "
-            "range; raise spark.sql.shuffle.partitions so each encode "
-            "task holds < 2 GiB of blob bytes"
+            "range; builder.encode_partitions must give more encode tasks "
+            "(lower POSTINGS_PER_ENCODE_TASK) so each holds < 2 GiB of blob bytes"
         )
     return pa.Array.from_buffers(
         pa.binary(),

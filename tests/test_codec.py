@@ -196,6 +196,16 @@ def test_encode_kernel_rejects_unsorted_input():
         _run_kernel(pdf.iloc[::-1], 100, 8, 4, 999, 3)
 
 
+def test_binary_array_guard_rejects_int32_overflow():
+    """An encode partition whose blob stream passes int32 offsets fails
+    loudly, before any buffer is built (no 2 GiB allocation: the
+    offsets alone trip it)."""
+    from open_source_search_engine_spark.index.segments import _binary_array
+
+    with pytest.raises(ValueError, match="int32 offset range"):
+        _binary_array(np.empty(0, np.uint8), np.array([0, 2**31], np.int64))
+
+
 def test_positions_roundtrip_and_self_contained_slices():
     """positions_encode/decode roundtrip + the per-posting slice
     contract the segment/compaction paths rely on: every posting's

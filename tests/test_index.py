@@ -202,47 +202,107 @@ def test_resume_noop_when_complete(spark, tiny_corpus, tmp_path):
     assert sorted(str(p) for p in seg_root.rglob("*.parquet")) == before
 
 
+def _crash_then_resume(spark, corpus, tmp_path, monkeypatch, kill_encode):
+    """Build ``corpus`` with ``term_stats`` (and, if ``kill_encode``,
+    ``_encode_and_write``) failing, then resume it. Returns the resumed
+    store, an uninterrupted build of it, the posting counts the resume
+    sized its encode with (one per encode run) and the staging rows."""
+    ref_dir = tmp_path / "ref_idx"
+    builder.build_index(
+        spark, corpus, ref_dir, cfg=TEST_CFG, text_col="content",
+        tokenizer_mode="code",
+    )
+    d = tmp_path / "crash_idx"
+    import open_source_search_engine_spark.index.builder as b
+
+    def kill(*a, **k):
+        raise RuntimeError("kill")
+
+    with monkeypatch.context() as m:
+        m.setattr(b, "term_stats", kill)
+        if kill_encode:
+            m.setattr(b, "_encode_and_write", kill)
+        with pytest.raises(RuntimeError, match="kill"):
+            builder.build_index(
+                spark, corpus, d, cfg=TEST_CFG, text_col="content",
+                tokenizer_mode="code",
+            )
+    assert (d / "_staging" / "_SUCCESS").exists()  # checkpoint survived
+    assert not (d / "meta.json").exists()  # commit pointer never landed
+
+    import pyarrow.dataset as ds
+
+    staged_rows = ds.dataset(str(d / "_staging"), format="parquet").count_rows()
+    sized = []
+    real_partitions = b.encode_partitions
+    monkeypatch.setattr(
+        b, "encode_partitions", lambda n, *a: sized.append(n) or real_partitions(n, *a)
+    )
+    builder.build_index(
+        spark, corpus, d, cfg=TEST_CFG, text_col="content",
+        tokenizer_mode="code", resume=True,
+    )
+    return d, ref_dir, sized, staged_rows
+
+
+def _assert_same_store(spark, got_dir, ref_dir):
+    got_meta, ref_meta = builder.load_meta(got_dir), builder.load_meta(ref_dir)
+    for k in ("n_docs", "avgdl", "max_doc_id"):
+        assert got_meta[k] == ref_meta[k], k
+    ref = wand.wand_topk(spark, ref_dir, ["def", "return"], k=10, mode="or").toPandas()
+    got = wand.wand_topk(spark, got_dir, ["def", "return"], k=10, mode="or").toPandas()
+    pd.testing.assert_frame_equal(got, ref)
+
+
 def test_resume_after_side_table_crash_recomputes_stats(
     spark, tiny_corpus, tmp_path, monkeypatch
 ):
     """Crash between the staging checkpoint and the side-table commits:
-    the resumed build reuses staging (no re-tokenize, so no staging
-    Observation this session) and must recover the corpus stats from
-    the column-pruned agg fallback — meta.json stats and query results
-    must equal an uninterrupted build's (SURVEY.md §5.4)."""
-    ref_dir = tmp_path / "ref_idx"
-    builder.build_index(
-        spark, tiny_corpus, ref_dir, cfg=TEST_CFG, text_col="content",
-        tokenizer_mode="code",
+    the encode finishes (the writer waits for it), so the resumed build
+    skips it (every bucket is in the manifest) and reuses staging (no
+    re-tokenize, so no staging Observation this session). It must
+    recover the corpus stats from the column-pruned agg fallback —
+    meta.json stats and query results must equal an uninterrupted
+    build's (SURVEY.md §5.4)."""
+    d, ref_dir, sized, _ = _crash_then_resume(
+        spark, tiny_corpus, tmp_path, monkeypatch, kill_encode=False
     )
-    ref_meta = builder.load_meta(ref_dir)
-    ref = wand.wand_topk(spark, ref_dir, ["def", "return"], k=10, mode="or").toPandas()
+    assert sized == []  # no encode ran on resume
+    _assert_same_store(spark, d, ref_dir)
 
-    d = tmp_path / "crash_idx"
-    import open_source_search_engine_spark.index.builder as b
 
-    real_term_stats = b.term_stats
-    monkeypatch.setattr(
-        b, "term_stats", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("kill"))
+def test_resume_after_encode_crash_sizes_encode_from_staging_footers(
+    spark, tiny_corpus, tmp_path, monkeypatch
+):
+    """The same crash with the encode failing too: the resumed build
+    encodes every bucket with no staging Observation this session, so
+    its encode is sized from the staging footers' row count."""
+    d, ref_dir, sized, staged_rows = _crash_then_resume(
+        spark, tiny_corpus, tmp_path, monkeypatch, kill_encode=True
     )
-    with pytest.raises(RuntimeError, match="kill"):
-        builder.build_index(
-            spark, tiny_corpus, d, cfg=TEST_CFG, text_col="content",
-            tokenizer_mode="code",
-        )
-    monkeypatch.setattr(b, "term_stats", real_term_stats)
-    assert (d / "_staging" / "_SUCCESS").exists()  # checkpoint survived
-    assert not (d / "meta.json").exists()  # commit pointer never landed
+    assert staged_rows > 0 and sized == [staged_rows]
+    _assert_same_store(spark, d, ref_dir)
 
-    builder.build_index(
-        spark, tiny_corpus, d, cfg=TEST_CFG, text_col="content",
-        tokenizer_mode="code", resume=True,
-    )
-    got_meta = builder.load_meta(d)
-    for k in ("n_docs", "avgdl", "max_doc_id"):
-        assert got_meta[k] == ref_meta[k], k
-    got = wand.wand_topk(spark, d, ["def", "return"], k=10, mode="or").toPandas()
-    pd.testing.assert_frame_equal(got, ref)
+
+def test_encode_partitions_follow_posting_count():
+    """One encode task per POSTINGS_PER_ENCODE_TASK postings, capped
+    by the large-build rule: a large build keeps the cap's count."""
+    from open_source_search_engine_spark.config import EngineConfig
+
+    per_task = builder.POSTINGS_PER_ENCODE_TASK
+    cfg = EngineConfig(n_buckets=64, n_salts=8, block_size=128)  # perfbench's
+    assert builder.encode_partitions(0, cfg, 16) == 1
+    assert builder.encode_partitions(5_000, cfg, 16) == 1
+    assert builder.encode_partitions(per_task, cfg, 16) == 1
+    assert builder.encode_partitions(per_task + 1, cfg, 16) == 2
+    assert builder.encode_partitions(10 * per_task, cfg, 16) == 10
+    # staged rows (postings + one meta row per doc) of bench_scaling.py's
+    # 360k-doc gen_corpus build, counted: it keeps 64 tasks ...
+    rows_360k = 30_377_863
+    assert builder.encode_partitions(rows_360k, cfg, 16) == 64
+    # ... and sf1 (three copies of it, 512 buckets x 16 salts) keeps 256
+    sf1 = EngineConfig(n_buckets=512, n_salts=16, block_size=128)
+    assert builder.encode_partitions(3 * rows_360k, sf1, 16) == 256
 
 
 def test_staged_postings_equal_algebra_path(spark, tiny_corpus):

@@ -83,6 +83,29 @@ def test_add_then_compact_matches_full_build(spark, corpora, tmp_path):
         assert got["score"].tolist() == pytest.approx(want["score"].tolist(), abs=1e-5)
 
 
+def test_small_generations_write_one_file_per_bucket(spark, corpora, tmp_path):
+    """A generation small enough for one encode task writes at most one
+    parquet file per bucket dir, whichever writer made it."""
+    base, extra, _full = corpora
+    d = tmp_path / "idx"
+
+    def files_per_bucket_dir() -> list[int]:
+        return [
+            len(list(b.glob("*.parquet")))
+            for b in (d / "segments").glob("generation=*/bucket=*")
+        ]
+
+    builder.build_index(
+        spark, base, d, cfg=TEST_CFG, text_col="content", tokenizer_mode="code"
+    )
+    assert max(files_per_bucket_dir()) == 1
+    merge.add_documents(spark, extra, d)
+    assert max(files_per_bucket_dir()) == 1
+    merge.compact(spark, d)
+    assert len(merge.current_generations(d)) == 1
+    assert max(files_per_bucket_dir()) == 1
+
+
 def test_add_matches_fresh_build_with_every_writer_feature(spark, corpora, tmp_path):
     """An add to a store built with extra doc_meta columns, field terms
     and anchor text — one added doc with no postings at all — commits
