@@ -65,25 +65,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-def delta_encode(sorted_vals: np.ndarray) -> bytes:
-    """Encode a strictly-increasing int array as varint gaps
-    (first value absolute, then successive deltas)."""
-    v = np.ascontiguousarray(sorted_vals, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    gaps = np.empty_like(v)
-    gaps[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=gaps[1:])
-    return varint_encode(gaps)
-
-
-def delta_decode(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf)
-    if gaps.size == 0:
-        return gaps
-    return np.cumsum(gaps, dtype=np.uint64)
-
-
 def positions_encode(flat_pos: np.ndarray, tfs: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Encode per-posting position lists, laid out flat in posting
     order (posting i owns flat_pos[cum_tf[i-1]:cum_tf[i]], ascending).
@@ -132,11 +113,3 @@ def positions_byte_offsets(buf: bytes, tfs: np.ndarray) -> np.ndarray:
             f"tfs sum to {first_value[-1]}"
         )
     return value_ends[first_value]
-
-
-def f64_encode(values: np.ndarray) -> bytes:
-    return np.ascontiguousarray(values, dtype=np.float64).tobytes()
-
-
-def f64_decode(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype=np.float64)

@@ -8,9 +8,10 @@ a ``lists.ColdIndex`` — the term lookup (driver-side pyarrow read of
 the term-sorted dictionary, no Spark job) and both scans are the cold
 handle's own. A small scan (touched segment files ≤
 ``lists.SMALL_SCAN_MAX_BYTES``, small tombstones) is a driver-side
-pyarrow read, so a warm small top-k or phrase starts no Spark job; a
-large scan reads the Spark ``segments`` listing lazily, once per
-commit. Every
+pyarrow read, so a warm small top-k, phrase or query-language query
+(``query``; one without a filter on a non-indexed doc_meta column)
+starts no Spark job; a large scan reads the Spark ``segments`` listing
+lazily, once per commit. Every
 operator that takes an index path takes the engine instead: top-k
 (``wand.topk``, the one top-k implementation), boolean/facets/sort/
 pagination, phrase, the query language and nested boolean expressions.

@@ -7,8 +7,9 @@ works off those lists (Msg2.cpp getLists / Msg39 intersect,
 SURVEY.md §3.1). The Spark expression:
 
     term_dict lookup (driver, pyarrow, metadata-scale)
-        → partition-pruned segment scan (bucket IN …, term_id IN …;
-          parquet row-group stats skip non-matching term_ids)
+        → partition-pruned segment scan (generation, bucket IN …;
+          reads the touched files' columns and filters on term_id —
+          a segment file is one parquet row group, ROADMAP item 8)
         → per-(salt, bucket) decode kernel (numpy, Arrow-batched)
         → posting rows (term_id, doc_id, tf, score)
 
@@ -18,20 +19,23 @@ O(query's posting lists), not O(corpus). Deletes are annihilated
 inside the decode kernels, shipped by the handle's tombstone snapshot
 (index/tombstones.py).
 
-One size rule picks where a scored or positional scan runs
+Reads whose output is O(k) — top-k (index/wand.py), ``phrase_docs``
+and the query language (plans/query_language.py) — go through one
+dispatcher, ``ColdIndex.scan``, and one size rule
 (``ColdIndex.small_scan``): when the tombstones are small and the
 touched segment files total at most SMALL_SCAN_MAX_BYTES on disk
-(a 32nd of it for a positional scan, POSITIONAL_SCAN_WEIGHT),
-top-k (index/wand.py) and ``phrase_docs`` read those files in the
-driver with pyarrow and run their kernel once over all rows, so the
-query starts no Spark job. Above it they run the Spark scan below.
+(a 32nd of it for a positional scan, POSITIONAL_SCAN_WEIGHT), the
+kernel runs once in the driver over those files read with pyarrow, so
+the query starts no Spark job. Above it the kernel runs per salt in
+Spark. ``term_postings`` (output O(postings)) always runs in Spark.
 
 Parallelism: the decode groups by (salt, bucket) — all generations of
 one (term, salt) share a bucket (bucket = term_id % n_buckets), so
 LSM generation-merge stays correct while the decode fans out over
-n_salts × touched-buckets tasks. Phrase matching groups by salt only
-(it must see all the phrase's terms for a doc range together — a doc's
-salt is term-independent, so the grouping is complete).
+n_salts × touched-buckets tasks. Kernels that must see all of a
+query's terms for a doc range together (phrase, query language, top-k)
+group by salt only — a live doc's postings are in one salt, so the
+grouping is complete.
 """
 
 from __future__ import annotations
@@ -46,7 +50,11 @@ from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.builder import load_meta
-from open_source_search_engine_spark.index.segments import BLOCK_SCHEMA, decode_blocks
+from open_source_search_engine_spark.index.segments import (
+    BLOCK_SCHEMA,
+    decode_blocks,
+    gather_flat,
+)
 from open_source_search_engine_spark.index import wand as W
 from open_source_search_engine_spark.session import local_frame
 from open_source_search_engine_spark.index.wand import (
@@ -173,8 +181,9 @@ class ColdIndex:
         SMALL_SCAN_MAX_BYTES on disk (weighted by POSITIONAL_SCAN_WEIGHT
         with positions). Same scope as ``pruned_segments`` (``_scope``),
         found by globbing ``generation=G/bucket=B`` dirs instead of a
-        Spark listing; the ``term_id`` filter prunes on row-group
-        stats."""
+        Spark listing. It reads the touched files' columns and filters
+        on ``term_id``: a segment file is one parquet row group, so
+        nothing inside a file is skipped (ROADMAP item 8)."""
         if with_positions:
             require_positions(self.meta)
         if not self.tombstones.small:
@@ -198,6 +207,27 @@ class ColdIndex:
             partitioning="hive", partition_base_dir=str(root),
         )
         return data.to_table(filter=ds.field("term_id").isin(tids), columns=cols).to_pandas()
+
+    def scan(
+        self, tids: list[int], kernel_factory, schema: str,
+        with_positions: bool = False, merge=None,
+    ) -> DataFrame:
+        """The one read dispatcher: ``kernel_factory(tombstone arrays)``
+        over the block rows of ``tids``. A small scan runs the kernel
+        once in the driver over every row, so its output is final and
+        returns as a local frame (no Spark job). A large one runs it
+        per salt in Spark and returns ``merge`` of the per-salt
+        outputs."""
+        rows = self.small_scan(tids, with_positions)
+        if rows is not None:
+            return local_frame(
+                self.spark, schema, kernel_factory(self.tombstones.arrays)(rows)
+            )
+        seg = self.pruned_segments(tids, with_positions).drop("bucket")
+        out = self.tombstones.apply_kernel(
+            seg, ("salt",), kernel_factory, schema, self.meta["config"]["n_salts"]
+        )
+        return out if merge is None else merge(out)
 
     @cached_property
     def tombstones(self) -> T.Snapshot:
@@ -279,95 +309,80 @@ def phrase_docs(spark: SparkSession, index_dir, words: list[str]) -> DataFrame:
     keys, SURVEY.md §1.3; bigram ids, Phrases.cpp — §2.8 X4).
 
     Kernel: decode the phrase terms' lists WITH positions — once over
-    every row for a small scan, per salt otherwise — then run the
-    position-chain intersection VECTORIZED over the whole candidate set
-    at once: every term's candidate positions are kept
-    flat as (doc_index * M + pos) keys, and start positions survive
-    word i iff (start_key + i) appears in word i's key stream — one
-    searchsorted per word over the concatenation, no per-doc Python
-    (VERDICT r02 item 2: the per-doc intersect1d chain died on
-    stop-wordy phrases with huge candidate sets)."""
+    every row for a small scan, per salt otherwise (``ColdIndex.scan``)
+    — then ``phrase_chain`` over them."""
     ix = as_handle(spark, index_dir)
     tmap = term_id_map(spark, ix, words)
     if any(w not in tmap for w in words):
         return local_frame(spark, PHRASE_SCHEMA)
     word_tids = [tmap[w] for w in words]
-    tids = sorted(set(word_tids))
-    n_words = len(words)
-    rows = ix.small_scan(tids, with_positions=True)
-    if rows is not None:
-        kernel = _phrase_kernel(word_tids, n_words, ix.tombstones.arrays)
-        return local_frame(spark, PHRASE_SCHEMA, kernel(rows))
-    seg = ix.pruned_segments(tids, with_positions=True)
 
     def kernel_factory(tombstones):
-        return _phrase_kernel(word_tids, n_words, tombstones)
-
-    return ix.tombstones.apply_kernel(
-        seg, ("salt",), kernel_factory, PHRASE_SCHEMA, ix.meta["config"]["n_salts"]
-    )
-
-
-def _phrase_kernel(word_tids: list[int], n_words: int, tombstones):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from open_source_search_engine_spark.index.segments import gather_flat
-
-        per_term: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for tid, rows in pdf.groupby("term_id"):
-            docs, tfs, _sc, pos_flat = decode_blocks(
-                rows, tombstones=tombstones, with_positions=True
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            lists = {
+                int(t): decode_blocks(rows, tombstones=tombstones, with_positions=True)
+                for t, rows in pdf.groupby("term_id")
+            }
+            return pd.DataFrame(
+                {"doc_id": pd.Series(phrase_chain(word_tids, lists), dtype="int64")}
             )
-            per_term[int(tid)] = (docs, tfs, pos_flat)
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        if any(t not in per_term for t in word_tids):
-            return empty
-        # docs containing every word
-        cand = per_term[word_tids[0]][0]
-        for t in word_tids[1:]:
-            docs = per_term[t][0]
-            if docs.size == 0 or cand.size == 0:
-                cand = cand[:0]
-                break
-            pos = np.searchsorted(docs, cand)
-            pos_c = np.minimum(pos, docs.size - 1)
-            cand = cand[docs[pos_c] == cand]
-        if cand.size == 0:
-            return empty
-        # flat candidate position streams per word, as composite keys
-        # cand_index * M + pos (M big enough that +i never crosses a
-        # doc boundary); each stream is globally sorted because cand
-        # indices ascend and positions ascend within a posting
-        keys = []
-        max_pos = 0
-        sel_of = {}
-        for t in set(word_tids):
-            docs, tfs, pos_flat = per_term[t]
-            j = np.searchsorted(docs, cand)
-            p = gather_flat(pos_flat, tfs, j)
-            sel_of[t] = (j, p)
-            if p.size:
-                max_pos = max(max_pos, int(p.max()))
-        M = np.int64(max_pos + n_words + 2)
-        key_of = {}
-        for t in set(word_tids):
-            j, p = sel_of[t]
-            ci = np.repeat(
-                np.arange(cand.size, dtype=np.int64), per_term[t][1][j]
-            )
-            key_of[t] = ci * M + p
-        # chain: a start key k survives word i iff k + i is in word
-        # i's stream (same doc guaranteed: pos + i < M)
-        starts = key_of[word_tids[0]]
-        for i, t in enumerate(word_tids[1:], start=1):
-            ks = key_of[t]
-            if starts.size == 0 or ks.size == 0:
-                starts = starts[:0]
-                break
-            jj = np.minimum(np.searchsorted(ks, starts + i), ks.size - 1)
-            starts = starts[ks[jj] == starts + i]
-        if starts.size == 0:
-            return empty
-        out = cand[np.unique(starts // M)]
-        return pd.DataFrame({"doc_id": pd.Series(out, dtype="int64")})
 
-    return kernel
+        return kernel
+
+    return ix.scan(sorted(set(word_tids)), kernel_factory, PHRASE_SCHEMA, with_positions=True)
+
+
+def phrase_chain(word_tids: list[int], lists: dict) -> np.ndarray:
+    """Doc ids (ascending) where the words ``word_tids`` occur ADJACENT
+    in order, from decoded per-term lists ``{tid: (doc_ids, tfs,
+    scores, flat positions)}`` (decode_blocks with positions; a
+    missing tid matches nothing).
+
+    The position-chain intersection runs VECTORIZED over the whole
+    candidate set at once: every term's candidate positions are kept
+    flat as (doc_index * M + pos) keys, and start positions survive
+    word i iff (start_key + i) appears in word i's key stream — one
+    searchsorted per word over the concatenation, no per-doc Python
+    (VERDICT r02 item 2: the per-doc intersect1d chain died on
+    stop-wordy phrases with huge candidate sets)."""
+    empty = np.empty(0, dtype=np.int64)
+    if any(t not in lists for t in word_tids):
+        return empty
+    # docs containing every word
+    cand = lists[word_tids[0]][0]
+    for t in word_tids[1:]:
+        docs = lists[t][0]
+        if docs.size == 0 or cand.size == 0:
+            return empty
+        pos = np.minimum(np.searchsorted(docs, cand), docs.size - 1)
+        cand = cand[docs[pos] == cand]
+    if cand.size == 0:
+        return empty
+    # flat candidate position streams per word, as composite keys
+    # cand_index * M + pos (M big enough that +i never crosses a
+    # doc boundary); each stream is globally sorted because cand
+    # indices ascend and positions ascend within a posting
+    max_pos = 0
+    sel_of = {}
+    for t in set(word_tids):
+        docs, tfs, _sc, pos_flat = lists[t]
+        j = np.searchsorted(docs, cand)
+        p = gather_flat(pos_flat, tfs, j)
+        sel_of[t] = (j, p)
+        if p.size:
+            max_pos = max(max_pos, int(p.max()))
+    M = np.int64(max_pos + len(word_tids) + 2)
+    key_of = {}
+    for t, (j, p) in sel_of.items():
+        ci = np.repeat(np.arange(cand.size, dtype=np.int64), lists[t][1][j])
+        key_of[t] = ci * M + p
+    # chain: a start key k survives word i iff k + i is in word
+    # i's stream (same doc guaranteed: pos + i < M)
+    starts = key_of[word_tids[0]]
+    for i, t in enumerate(word_tids[1:], start=1):
+        ks = key_of[t]
+        if starts.size == 0 or ks.size == 0:
+            return empty
+        jj = np.minimum(np.searchsorted(ks, starts + i), ks.size - 1)
+        starts = starts[ks[jj] == starts + i]
+    return cand[np.unique(starts // M)]

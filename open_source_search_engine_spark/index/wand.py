@@ -6,22 +6,25 @@ ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
 
   1. term lookup in term_dict (replaces driver-side re-hashing; also
      yields exact df — Posdb::getTermFreq is approximate, ours exact)
-  2. the one size rule (``ColdIndex.small_scan``): when the tombstones
-     are small and the touched segment files — committed generations ×
-     the queries' term buckets — total at most
-     ``lists.SMALL_SCAN_MAX_BYTES`` on disk, the scan is small:
-       small: pyarrow reads those files in the driver (term_id filter
-         on row-group stats, pos_blob not read) and the kernel below
-         runs ONCE over all rows; every doc's postings are in that one
+  2. the one scan dispatcher (``ColdIndex.scan``) and its size rule
+     (``ColdIndex.small_scan``): when the tombstones are small and the
+     touched segment files — committed generations × the queries' term
+     buckets — total at most ``lists.SMALL_SCAN_MAX_BYTES`` on disk,
+     the scan is small:
+       small: pyarrow reads those files' columns in the driver and
+         filters on term_id (a segment file is one parquet row group,
+         so nothing inside it is skipped — ROADMAP item 8; pos_blob is
+         not read), and the kernel below runs ONCE over all rows;
+         every doc's postings are in that one
          frame, so each query's local top-k is its answer, returned as
          a local DataFrame — a warm query starts no Spark job (a Spark
          job costs more than the read; the reference serves a query's
          lists inside the process that holds them, Msg39)
        large: partition-pruned Spark scan ``bucket IN (...) AND
          term_id IN (...)`` — Catalyst prunes to the queries' term
-         buckets (the RdbMap ranged seek, SURVEY.md §2.1 S3) and parquet
-         row-group stats skip non-matching term_ids inside a bucket —
-         then steps 3 and 4
+         buckets (the RdbMap ranged seek, SURVEY.md §2.1 S3), then
+         reads the touched files' columns and filters on term_id
+         (ROADMAP item 8) — then steps 3 and 4
   3. per-salt kernel (applyInPandas over disjoint doc_id ranges — the
      per-shard Msg39 computation): decode + prune + score + local
      top-k via numpy, per query; deletes are annihilated in the decode,
@@ -356,9 +359,9 @@ def topk(
     term groups, with tombstones shipped by the handle's snapshot
     (index.tombstones).
 
-    A small scan (``ColdIndex.small_scan``) runs the kernel once in the
-    driver and needs no merge. A large one is a Spark job with one
-    kernel per salt; the merge over the ≤ n_salts × k × |Q| per-salt
+    ``ColdIndex.scan`` picks the path. A small scan runs the kernel
+    once in the driver and needs no merge. A large one is a Spark job
+    with one kernel per salt; the merge over the ≤ n_salts × k × |Q| per-salt
     candidates follows the input size: one resolved query merges by
     ``ORDER BY score DESC, doc_id ASC LIMIT k`` — a driver-side take on
     collect, no shuffle (Msg3a::mergeLists, §2.6 O4); more than one
@@ -374,25 +377,18 @@ def topk(
         return local_frame(spark, BATCH_KERNEL_SCHEMA)
     tids = sorted({t for _q, ts, _m in resolved for t in ts})
     scoring = scoring_ctx(ix.meta, trows)
-    rows = ix.small_scan(tids)
-    if rows is not None:
-        # one kernel call over every row: salts only spread a
-        # distributed scan, and with every doc's postings in one frame
-        # each query's local top-k is already its global top-k
-        kernel = make_batch_salt_kernel(resolved, k, ix.tombstones.arrays, scoring)
-        out = local_frame(spark, BATCH_KERNEL_SCHEMA, kernel(rows))
-    else:
-        seg = ix.pruned_segments(tids).drop("bucket")
-        local = ix.tombstones.apply_kernel(
-            seg, ("salt",),
-            lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
-            BATCH_KERNEL_SCHEMA, ix.meta["config"]["n_salts"],
-        )
+
+    def merge(local: DataFrame) -> DataFrame:
         if len(resolved) == 1:
-            out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        else:
-            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-            out = local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+            return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        return local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+
+    out = ix.scan(
+        tids,
+        lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
+        BATCH_KERNEL_SCHEMA, merge=merge,
+    )
     score = F.round(F.col("score"), round_dp) if round_dp is not None else F.col("score")
     return out.select("query_id", "doc_id", score.alias("score"))
 

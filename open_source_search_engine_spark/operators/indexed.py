@@ -158,54 +158,20 @@ def scored_matches(
     index_dir,
     terms: list[str],
     mode: str = "and",
-    require_docs: DataFrame | None = None,
-    exclude_docs: DataFrame | None = None,
     candidate_docs: DataFrame | None = None,
-    groups: list[list[str]] | None = None,
 ) -> DataFrame:
     """FULL scored match set (doc_id, _score) from the read-time
     per-posting scores — unrounded, unordered, no k cut (the indexed
     twin of bm25.bm25_scores; consumers window/limit themselves).
-
-    ``groups`` (synonym OR-groups, X5): AND mode requires >=1 member
-    of every group present instead of every term; a group none of
-    whose members is in the term dictionary can never match, so the
-    result is empty — mirroring bm25_scores where an unknown term
-    zeroes the AND."""
+    AND mode with a term missing from the dictionary matches nothing,
+    mirroring bm25_scores where an unknown term zeroes the AND."""
     n = len(set(terms))
     tmap = L.term_id_map(spark, index_dir, terms)
-    if mode == "and" and groups is None and len(tmap) < n:
-        return local_frame(spark, "doc_id long, _score double")
-    if mode == "and" and groups is not None and any(
-        not any(t in tmap for t in g) for g in groups
-    ):
+    if mode == "and" and len(tmap) < n:
         return local_frame(spark, "doc_id long, _score double")
     tp = L.term_postings(spark, index_dir, terms)
     if candidate_docs is not None:
         tp = tp.join(candidate_docs.select("doc_id"), "doc_id", "left_semi")
-    if require_docs is not None:
-        tp = tp.join(require_docs.select("doc_id"), "doc_id", "left_semi")
-    if exclude_docs is not None:
-        tp = tp.join(exclude_docs.select("doc_id"), "doc_id", "left_anti")
-    if groups:  # groups=[] is a no-op, mirroring bm25_scores
-        gid = None
-        for i, g in enumerate(groups):
-            tids = sorted(tmap[t] for t in set(g) if t in tmap)
-            if not tids:
-                continue
-            cond = F.col("term_id").isin(tids)
-            gid = F.when(cond, i) if gid is None else gid.when(cond, i)
-        if gid is None:
-            # OR mode with no group member in the term dictionary:
-            # no group can contribute a match
-            return local_frame(spark, "doc_id long, _score double")
-        agg = tp.withColumn("gid", gid).groupBy("doc_id").agg(
-            F.sum("score").alias("_score"),
-            F.countDistinct("gid").alias("_nterms"),
-        )
-        if mode == "and":
-            agg = agg.filter(F.col("_nterms") == len(groups))
-        return agg.select("doc_id", "_score")
     agg = tp.groupBy("doc_id").agg(
         F.sum("score").alias("_score"),
         F.countDistinct("term_id").alias("_nterms"),

@@ -7,10 +7,6 @@ import numpy as np
 import pytest
 
 from open_source_search_engine_spark.functions.codec import (
-    delta_decode,
-    delta_encode,
-    f64_decode,
-    f64_encode,
     varint_decode,
     varint_encode,
 )
@@ -37,25 +33,6 @@ def test_varint_empty():
     assert varint_decode(b"").size == 0
 
 
-def test_delta_roundtrip():
-    rng = np.random.default_rng(7)
-    for n in (1, 2, 100, 10_000):
-        v = np.unique(rng.integers(0, 2**40, size=n).astype(np.uint64))
-        assert np.array_equal(delta_decode(delta_encode(v)), v)
-
-
-def test_delta_compresses_dense_runs():
-    v = np.arange(10_000, dtype=np.uint64) + 5_000_000
-    enc = delta_encode(v)
-    # gaps of 1 → 1 byte each (+ a few for the absolute head)
-    assert len(enc) < 10_010
-
-
-def test_f64_roundtrip():
-    v = np.random.default_rng(3).normal(size=257)
-    assert np.array_equal(f64_decode(f64_encode(v)), v)
-
-
 if HAVE_HYP:
 
     @settings(max_examples=200, deadline=None)
@@ -66,13 +43,6 @@ if HAVE_HYP:
         v = np.array(xs, dtype=np.uint64)
         assert np.array_equal(varint_decode(varint_encode(v)), v)
 
-    @settings(max_examples=100, deadline=None)
-    @given(
-        st.sets(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=300)
-    )
-    def test_delta_property(xs):
-        v = np.array(sorted(xs), dtype=np.uint64)
-        assert np.array_equal(delta_decode(delta_encode(v)), v)
 else:  # pragma: no cover
 
     def test_hypothesis_present():

@@ -4,8 +4,10 @@ the Spark scan it replaces below ``lists.SMALL_SCAN_MAX_BYTES``.
 Every store in the other tests is small, so they all run the driver
 path; these tests force the Spark path (``SMALL_SCAN_MAX_BYTES = -1``,
 or large tombstones) and pin both to identical ranks and scores on a
-store with an add, a replace and a delete. They also pin the point of
-the driver path: a warm top-k and an empty result start no Spark job."""
+store with an add, a replace and a delete: top-k, phrase, and the
+query language (``query_language.execute_indexed``, one scan and one
+kernel). They also pin the point of the driver path: a warm top-k, a
+warm query-language query and an empty result start no Spark job."""
 
 from __future__ import annotations
 
@@ -17,6 +19,7 @@ from fixtures.gen_corpus import gen_corpus
 from open_source_search_engine_spark.index import builder, lists, merge, wand
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.engine import QueryEngine
+from open_source_search_engine_spark.plans import query_language
 from tests.conftest import TEST_CFG
 
 QUERIES = {
@@ -33,12 +36,15 @@ DEAD = list(range(3, 260, 7))
 @pytest.fixture(scope="module")
 def store(spark, tmp_path_factory):
     """Base of docs 0-199, an add of 200-259, a replace of 0-29 with
-    other content, and a delete of every 7th doc from 3."""
+    other content, and a delete of every 7th doc from 3. ``lang`` is
+    an indexed field (composite terms), ``repo`` a plain doc_meta
+    column."""
     pdf = gen_corpus(n_docs=260)
     d = tmp_path_factory.mktemp("small_scan") / "idx"
     builder.build_index(
         spark, spark.createDataFrame(pdf[pdf["doc_id"] < 200]), d,
         cfg=TEST_CFG, text_col="content", tokenizer_mode="code",
+        extra_meta_cols=["lang", "repo"], index_fields=["lang"],
     )
     merge.add_documents(spark, spark.createDataFrame(pdf[pdf["doc_id"] >= 200]), d)
     merge.add_documents(spark, spark.createDataFrame(gen_corpus(n_docs=30, seed=7)), d, replace=True)
@@ -108,6 +114,109 @@ def test_warm_small_topk_starts_no_job(spark, store):
     batch = eng.topk_batch(QUERIES, k=10).collect()
     assert _jobs(spark) == before
     assert len(rows) == 10 and len(batch) > 0
+
+
+def qlang_queries(repo: str) -> dict[str, str]:
+    """Every query-language shape; ``repo`` is a value of the
+    non-indexed ``repo`` column that some live doc carries."""
+    return {
+        "and": "scan merge",
+        "plus": "dup +guard",
+        "minus": "scan merge -trait",
+        "minus_group": "scan -trait|func",
+        "or_group": "dup|bloomer scan",
+        "phrase2": '"scan lock" merge',
+        "phrase3": '"scan lock impl"',
+        "indexed_field": "scan merge lang:py",
+        "meta_filter": f"def repo:{repo}",
+        "unknown_required": "scan zzz_not_a_term",
+        "unknown_group": "zzz_not_a_term|zzz_other scan",
+        "unknown_phrase_word": '"scan zzz_not_a_term" merge',
+        "unknown_excluded": "scan merge -zzz_not_a_term",
+        "all_excluded": "scan merge -def",
+    }
+
+
+EMPTY_QLANG = {"unknown_required", "unknown_group", "unknown_phrase_word", "all_excluded"}
+
+
+def _qlang_reads(spark, d, queries: dict[str, str]) -> dict[str, pd.DataFrame]:
+    eng = QueryEngine(spark, d, auto_refresh=False)
+    return {name: eng.query(q, k=25).toPandas() for name, q in queries.items()}
+
+
+def _assert_qlang_nonvacuous(got: dict[str, pd.DataFrame]) -> None:
+    for name, rows in got.items():
+        assert (len(rows) == 0) == (name in EMPTY_QLANG), name
+    pd.testing.assert_frame_equal(got["unknown_excluded"], got["and"])
+
+
+def test_qlang_driver_matches_spark_scan(spark, store, monkeypatch):
+    """Every query-language shape ranks and scores identically on the
+    driver path, the forced Spark scan and the cogrouped-tombstone
+    Spark path, and never returns a deleted doc."""
+    queries = qlang_queries(gen_corpus(n_docs=260).loc[100, "repo"])
+    ix = lists.ColdIndex(spark, store)
+    tids = sorted(int(r["term_id"]) for r in ix.term_rows(["scan", "lock", "impl"]))
+    assert ix.small_scan(tids, with_positions=True) is not None
+    want = _qlang_reads(spark, store, queries)
+
+    monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
+    spark_scan = _qlang_reads(spark, store, queries)
+    monkeypatch.undo()
+    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
+    cogrouped = _qlang_reads(spark, store, queries)
+    monkeypatch.undo()
+
+    for got in (spark_scan, cogrouped):
+        for name in queries:
+            pd.testing.assert_frame_equal(got[name], want[name], obj=name)
+    _assert_qlang_nonvacuous(want)
+    for name, rows in want.items():
+        assert not set(rows["doc_id"]) & set(DEAD), name
+
+
+def test_qlang_matches_corpus_oracle_on_delta_only_store(spark, tmp_path):
+    """Mutations confined to the delta tier, then merged, leave exact
+    stats: the indexed query language equals ``execute`` over the live
+    corpus, shape by shape."""
+    pdf = gen_corpus(n_docs=200)
+    repl = gen_corpus(n_docs=10, seed=7).assign(doc_id=range(160, 170))
+    dead = list(range(180, 186))
+    d = tmp_path / "idx"
+    builder.build_index(
+        spark, spark.createDataFrame(pdf[pdf["doc_id"] < 150]), d,
+        cfg=TEST_CFG, text_col="content", tokenizer_mode="code",
+        extra_meta_cols=["lang", "repo"], index_fields=["lang"],
+    )
+    merge.add_documents(spark, spark.createDataFrame(pdf[pdf["doc_id"] >= 150]), d)
+    merge.add_documents(spark, spark.createDataFrame(repl), d, replace=True)
+    merge.delete_documents(spark, d, dead)
+    merge.merge_deltas(spark, d)
+    live = pd.concat([pdf[~pdf["doc_id"].isin(repl["doc_id"])], repl])
+    live = live[~live["doc_id"].isin(dead)]
+    # ``execute``'s phrase leg reads the default text column
+    docs = spark.createDataFrame(live.rename(columns={"content": "text"}))
+
+    queries = qlang_queries(pdf.loc[100, "repo"])
+    got = _qlang_reads(spark, d, queries)
+    _assert_qlang_nonvacuous(got)
+    for name, q in queries.items():
+        want = query_language.execute(docs, q, k=25, tokenizer_mode="code").toPandas()
+        pd.testing.assert_frame_equal(got[name], want, obj=name)
+
+
+def test_warm_small_qlang_starts_no_job(spark, store):
+    """A warm query-language query without a filter on a non-indexed
+    doc_meta column runs its one kernel in the driver: no Spark job."""
+    queries = qlang_queries("unused")
+    del queries["meta_filter"]
+    eng = QueryEngine(spark, store)
+    eng.query(queries["and"], k=10).collect()
+    before = _jobs(spark)
+    rows = {name: eng.query(q, k=10).collect() for name, q in queries.items()}
+    assert _jobs(spark) == before
+    assert len(rows["phrase3"]) > 0 and len(rows["indexed_field"]) > 0
 
 
 def test_unknown_term_reads_start_no_job(spark, store):
