@@ -10,8 +10,11 @@ handle's own. A small scan (touched segment files ≤
 ``lists.SMALL_SCAN_MAX_BYTES``, small tombstones) is a driver-side
 pyarrow read, so a warm small top-k, phrase or query-language query
 (``query``; one without a filter on a non-indexed doc_meta column)
-starts no Spark job; a large scan reads the Spark ``segments`` listing
-lazily, once per commit. Every
+starts no Spark job: its final frame (columns, order, rounded scores)
+is built in the driver and returned as one local DataFrame, so
+``topk``, ``topk_batch`` and ``query`` add no projection to it. A
+large scan reads the Spark ``segments`` listing lazily, once per
+commit. Every
 operator that takes an index path takes the engine instead: top-k
 (``wand.topk``, the one top-k implementation), boolean/facets/sort/
 pagination, phrase, the query language and nested boolean expressions.
@@ -80,7 +83,7 @@ class QueryEngine(ColdIndex):
         round_dp: int | None = 5,
     ) -> DataFrame:
         self._maybe_refresh()
-        return W.topk(self, {"q": (terms, mode)}, k, round_dp).select("doc_id", "score")
+        return W.topk(self, {"q": (terms, mode)}, k, round_dp, with_query_id=False)
 
     def topk_batch(
         self,

@@ -56,7 +56,7 @@ from open_source_search_engine_spark.index.segments import (
     gather_flat,
 )
 from open_source_search_engine_spark.index import wand as W
-from open_source_search_engine_spark.session import local_frame
+from open_source_search_engine_spark.session import local_frame, schema_fields, spark_round
 from open_source_search_engine_spark.index.wand import (
     KERNEL_INPUT_COLS,
     query_term_rows,
@@ -211,23 +211,38 @@ class ColdIndex:
     def scan(
         self, tids: list[int], kernel_factory, schema: str,
         with_positions: bool = False, merge=None,
+        out_schema: str | None = None, round_dp: int | None = None,
     ) -> DataFrame:
         """The one read dispatcher: ``kernel_factory(tombstone arrays)``
-        over the block rows of ``tids``. A small scan runs the kernel
-        once in the driver over every row, so its output is final and
-        returns as a local frame (no Spark job). A large one runs it
-        per salt in Spark and returns ``merge`` of the per-salt
-        outputs."""
+        over the block rows of ``tids``, returned as the columns of
+        ``out_schema`` (default ``schema``, the kernel's) in its order,
+        with ``score`` rounded to ``round_dp`` places as Spark's
+        ``round`` does when given.
+
+        A small scan runs the kernel once in the driver over every
+        row, so its output is final: rounded in Python
+        (``spark_round``) and returned as one local frame with no
+        projection on top (no Spark job, no per-call plan work). A
+        large one runs it per salt in Spark, ``merge``s the per-salt
+        outputs on their raw scores, then projects and rounds with
+        ``F.round`` (rounding before the merge would reorder near
+        ties)."""
+        out_schema = out_schema or schema
         rows = self.small_scan(tids, with_positions)
         if rows is not None:
-            return local_frame(
-                self.spark, schema, kernel_factory(self.tombstones.arrays)(rows)
-            )
+            out = kernel_factory(self.tombstones.arrays)(rows)
+            if round_dp is not None:
+                out = out.assign(score=spark_round(out["score"], round_dp))
+            return local_frame(self.spark, out_schema, out)
         seg = self.pruned_segments(tids, with_positions).drop("bucket")
         out = self.tombstones.apply_kernel(
             seg, ("salt",), kernel_factory, schema, self.meta["config"]["n_salts"]
         )
-        return out if merge is None else merge(out)
+        out = out if merge is None else merge(out)
+        return out.select(*(
+            F.round(c, round_dp).alias(c) if c == "score" and round_dp is not None else c
+            for c in schema_fields(out_schema)
+        ))
 
     @cached_property
     def tombstones(self) -> T.Snapshot:

@@ -16,10 +16,15 @@ ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
          so nothing inside it is skipped — ROADMAP item 8; pos_blob is
          not read), and the kernel below runs ONCE over all rows;
          every doc's postings are in that one
-         frame, so each query's local top-k is its answer, returned as
-         a local DataFrame — a warm query starts no Spark job (a Spark
-         job costs more than the read; the reference serves a query's
-         lists inside the process that holds them, Msg39)
+         frame, so each query's local top-k is its answer. The final
+         frame is built right there — the caller's columns, scores
+         rounded in Python exactly as Spark's ``round``
+         (``session.spark_round``) — and returned as one local
+         DataFrame with no projection on top: a warm query starts no
+         Spark job and pays no per-call plan work (a Spark job costs
+         more than the read; the reference serves a query's lists
+         inside the process that holds them, Msg39, and Msg3a returns
+         the final ranked list)
        large: partition-pruned Spark scan ``bucket IN (...) AND
          term_id IN (...)`` — Catalyst prunes to the queries' term
          buckets (the RdbMap ranged seek, SURVEY.md §2.1 S3), then
@@ -29,9 +34,11 @@ ONCE in ``topk`` over an index handle (cold ``lists.ColdIndex`` or warm
      per-shard Msg39 computation): decode + prune + score + local
      top-k via numpy, per query; deletes are annihilated in the decode,
      shipped by the handle's tombstone snapshot (index/tombstones.py)
-  4. merge of the ≤ n_salts × k candidates per query: ``ORDER BY score
-     DESC, doc_id ASC LIMIT k`` for one query (Msg3a::mergeLists, §2.6
-     O4), a per-query window rank for a batch
+  4. merge of the ≤ n_salts × k candidates per query on their raw
+     scores: ``ORDER BY score DESC, doc_id ASC LIMIT k`` for one query
+     (Msg3a::mergeLists, §2.6 O4), a per-query window rank for a
+     batch; then ``F.round`` (rounding before the merge would reorder
+     near ties)
 
 Pruning inside the kernel is the MaxScore/block-max family
 (Posdb.cpp getMaxPossibleScore is the reference precedent, §4):
@@ -344,8 +351,10 @@ def topk(
     queries: dict[str, tuple[list[str], str]],
     k: int = 10,
     round_dp: int | None = 5,
+    with_query_id: bool = True,
 ) -> DataFrame:
-    """The one top-k implementation: (query_id, doc_id, score) for
+    """The one top-k implementation: (query_id, doc_id, score) — or
+    (doc_id, score) without ``with_query_id`` — for
     ``queries`` = {query_id: (terms, mode)} over an index handle
     (index.lists.ColdIndex or the warm index.engine.QueryEngine).
     Every top-k entry point — wand_topk, wand_topk_batch,
@@ -360,21 +369,24 @@ def topk(
     (index.tombstones).
 
     ``ColdIndex.scan`` picks the path. A small scan runs the kernel
-    once in the driver and needs no merge. A large one is a Spark job
+    once in the driver and needs no merge: the kernel's rows, rounded
+    in Python, are the final frame. A large one is a Spark job
     with one kernel per salt; the merge over the ≤ n_salts × k × |Q| per-salt
     candidates follows the input size: one resolved query merges by
     ``ORDER BY score DESC, doc_id ASC LIMIT k`` — a driver-side take on
     collect, no shuffle (Msg3a::mergeLists, §2.6 O4); more than one
     ranks per query_id in a window. Queries whose required term is
-    missing (AND) or with no known terms contribute no rows."""
+    missing (AND) or with no known terms contribute no rows. Scores
+    are rounded to ``round_dp`` places after the merge (None: raw)."""
     spark = ix.spark
+    out_schema = BATCH_KERNEL_SCHEMA if with_query_id else KERNEL_SCHEMA
     all_terms = sorted({t for terms, _m in queries.values() for t in terms})
     trows = ix.term_rows(all_terms)
     resolved = resolve_batch_queries(
         queries, {r["term"]: int(r["term_id"]) for r in trows}
     )
     if not resolved:
-        return local_frame(spark, BATCH_KERNEL_SCHEMA)
+        return local_frame(spark, out_schema)
     tids = sorted({t for _q, ts, _m in resolved for t in ts})
     scoring = scoring_ctx(ix.meta, trows)
 
@@ -384,13 +396,11 @@ def topk(
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return local.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
 
-    out = ix.scan(
+    return ix.scan(
         tids,
         lambda arrays: make_batch_salt_kernel(resolved, k, arrays, scoring),
-        BATCH_KERNEL_SCHEMA, merge=merge,
+        BATCH_KERNEL_SCHEMA, merge=merge, out_schema=out_schema, round_dp=round_dp,
     )
-    score = F.round(F.col("score"), round_dp) if round_dp is not None else F.col("score")
-    return out.select("query_id", "doc_id", score.alias("score"))
 
 
 def wand_topk(
@@ -406,7 +416,7 @@ def wand_topk(
     from open_source_search_engine_spark.index.lists import ColdIndex
 
     ix = ColdIndex(spark, index_dir)
-    return topk(ix, {"q": (terms, mode)}, k, round_dp).select("doc_id", "score")
+    return topk(ix, {"q": (terms, mode)}, k, round_dp, with_query_id=False)
 
 
 def wand_topk_batch(

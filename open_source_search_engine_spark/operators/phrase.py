@@ -15,8 +15,15 @@ from pyspark.sql import functions as F
 from open_source_search_engine_spark.operators.postings import doc_tokens
 
 
-def phrase_bigram(docs: DataFrame, w1: str, w2: str, tokenizer_mode: str = "simple") -> DataFrame:
-    toks = doc_tokens(docs, mode=tokenizer_mode)
+def phrase_bigram(
+    docs: DataFrame,
+    w1: str,
+    w2: str,
+    tokenizer_mode: str = "simple",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    toks = doc_tokens(docs, text_col, id_col, mode=tokenizer_mode)
     t1 = toks.filter(F.col("term") == w1).select("doc_id", F.col("pos").alias("p1"))
     t2 = toks.filter(F.col("term") == w2).select("doc_id", F.col("pos").alias("p2"))
     return (

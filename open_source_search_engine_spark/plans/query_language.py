@@ -202,7 +202,9 @@ def execute(
     require = None
     for words in pq.phrases:
         for a, b in zip(words, words[1:]):
-            m = phrase_ops.phrase_bigram(docs, a, b, tokenizer_mode=tokenizer_mode)
+            m = phrase_ops.phrase_bigram(
+                docs, a, b, tokenizer_mode=tokenizer_mode, text_col=text_col, id_col=id_col
+            )
             require = m if require is None else require.join(m, "doc_id", "left_semi")
 
     exclude = None
@@ -248,8 +250,11 @@ def execute_indexed(
     intersect-and-score, SURVEY.md §3.1) — once in the driver for a
     small scan, else per salt plus the top-k merge (``ColdIndex.scan``).
     Positions are read only for a phrase. A filter on a NON-indexed
-    doc_meta column is a semi-join on the kernel's uncut output. Must
-    stay hash-identical to ``execute`` / the DuckDB oracle ``sql(q)``.
+    doc_meta column is a semi-join on the kernel's uncut output.
+    Scores are rounded to 5 places after the cut: in Python on a small
+    scan without such a filter, whose frame is final in the driver.
+    Must stay hash-identical to ``execute`` / the DuckDB oracle
+    ``sql(q)``.
 
     Empty results, as in ``execute``: a required term, every member of
     an OR-group, a phrase word or an indexed field value missing from
@@ -286,13 +291,15 @@ def execute_indexed(
             lambda arrays: _query_kernel(plan, k_cut, arrays, scoring),
             QUERY_SCHEMA, with_positions=bool(pairs),
             merge=None if meta_filters else top,
+            round_dp=None if meta_filters else 5,
         )
         if meta_filters:
             dm = ix.doc_meta_df()
             for f, v in meta_filters.items():
                 dm = dm.filter(F.col(f) == v)
             out = top(out.join(dm.select("doc_id"), "doc_id", "left_semi"))
-    return out.select("doc_id", F.round("score", 5).alias("score"))
+            out = out.select("doc_id", F.round("score", 5).alias("score"))
+    return out
 
 
 def _query_kernel(plan, k: int | None, tombstones, scoring):

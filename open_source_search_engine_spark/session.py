@@ -1,13 +1,20 @@
 """SparkSession factory with scale-appropriate defaults.
 
 Single place where shuffle sizing / AQE / Arrow flags live, so the
-bench, tests and driver all run the same physical config.
+bench, tests and driver all run the same physical config. Also the
+driver-side result hand-off: ``local_frame`` (a DataFrame over driver
+rows) and ``spark_round`` (Spark's ``round`` in Python).
 """
 
 from __future__ import annotations
 
+import decimal
+import math
 import os
+from functools import lru_cache
 from pathlib import Path
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
@@ -123,23 +130,67 @@ def _usable_tmpfs_dir(min_free_bytes: int = 4 << 30) -> str | None:
         return None
 
 
-def local_frame(spark: SparkSession, schema: str, rows=None) -> DataFrame:
-    """A DataFrame over driver-side rows (a pandas frame; None for an
-    empty result) with the DDL ``schema``, built from an Arrow table.
-
-    Spark plans it as a LocalRelation and folds later projections into
-    it, so a ``collect`` starts no job. An empty frame made from a
-    Python list or an empty pandas frame starts one job per collect
-    (medians at local[4] on a 4-core host: ~120 ms per collect from a
-    list or empty pandas frame, ~20 ms from an Arrow table)."""
-    import pyarrow as pa
+@lru_cache(maxsize=None)
+def _schemas(ddl: str):
+    """(StructType, Arrow schema) of a DDL string. Parsing DDL is a
+    JVM round trip, so each string is parsed once per process."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    struct = DataType.fromDDL(schema)
-    arrow = to_arrow_schema(struct)
+    struct = DataType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def schema_fields(ddl: str) -> list[str]:
+    """Column names of a DDL schema, in order."""
+    return _schemas(ddl)[0].fieldNames()
+
+
+def local_frame(spark: SparkSession, schema: str, rows=None) -> DataFrame:
+    """A DataFrame over driver-side rows (a pandas frame; None for an
+    empty result) with the DDL ``schema``, built from an Arrow table:
+    the schema's columns, in its order (other columns of ``rows`` are
+    dropped).
+
+    Spark plans it as a bare LocalRelation, so a ``collect`` starts no
+    job. Each projection on top costs py4j round trips per call (~15-20
+    ms at local[4] for a ``select`` with ``round``), so a read builds
+    its FINAL frame in the driver — columns, order, rounding
+    (``spark_round``) — and returns this frame as it is. An empty frame
+    made from a Python list or an empty pandas frame starts one job per
+    collect (medians at local[4] on a 4-core host: ~120 ms per collect
+    from a list or empty pandas frame, ~20 ms from an Arrow table)."""
+    import pyarrow as pa
+
+    struct, arrow = _schemas(schema)
     tbl = (
         arrow.empty_table()
         if rows is None
         else pa.Table.from_pandas(rows, schema=arrow, preserve_index=False)
     )
     return spark.createDataFrame(tbl, struct)
+
+
+# a double has at most 309 integer digits: exact to 490 places
+_ROUND_CTX = decimal.Context(prec=800)
+
+
+def spark_round(values, dp: int) -> np.ndarray:
+    """Spark SQL's ``round(double, dp)`` in the driver: HALF_UP on the
+    decimal form ``Double.toString`` prints (``repr`` in Python), not
+    numpy's half-even on the binary value — ``round(0.125, 2)`` is
+    0.13 in Spark, 0.12 in numpy. A zero result is +0.0 (Java's
+    BigDecimal has no negative zero); NaN and infinities pass through.
+    Per element, so only for result-sized arrays (≤ k rows per query).
+    Pinned against ``F.round`` in tests/test_spark_round.py."""
+    step = decimal.Decimal(1).scaleb(-dp)
+
+    def one(x: float) -> float:
+        if not math.isfinite(x):
+            return x
+        q = decimal.Decimal(repr(x)).quantize(
+            step, rounding=decimal.ROUND_HALF_UP, context=_ROUND_CTX
+        )
+        return float(q) or 0.0
+
+    arr = np.asarray(values, dtype=np.float64)
+    return np.fromiter((one(x) for x in arr.tolist()), np.float64, arr.size)

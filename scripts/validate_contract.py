@@ -53,7 +53,12 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    n_fail = 0
+    # only_query names are the PACKED contract names; a name that
+    # matches none of them would otherwise check nothing and pass
+    unknown = sorted(only - set(qs))
+    for name in unknown:
+        print(f"FAIL  {name:24s} unknown query name")
+    n_fail = len(unknown)
     for name, fn in qs.items():
         if only and name not in only:
             continue

@@ -114,3 +114,24 @@ def test_synonym_dictionary_collect_cap(spark, monkeypatch):
         ql.expand_synonyms("join hash", df)
     monkeypatch.undo()
     assert ql.expand_synonyms("join hash", df) == "join|merge hash|digest"
+
+
+def test_execute_phrase_reads_the_named_text_column(spark):
+    """A phrase leg tokenizes ``text_col``: a corpus whose text column
+    is ``content`` answers as the same corpus renamed to ``text``."""
+    import pandas as pd
+
+    from fixtures.gen_corpus import gen_corpus
+    from open_source_search_engine_spark.plans.query_language import execute
+
+    pdf = gen_corpus(n_docs=120)
+    q = '"scan lock" merge'
+    got = execute(
+        spark.createDataFrame(pdf), q, text_col="content", tokenizer_mode="code"
+    ).toPandas()
+    want = execute(
+        spark.createDataFrame(pdf.rename(columns={"content": "text"})), q,
+        tokenizer_mode="code",
+    ).toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)

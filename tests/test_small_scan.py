@@ -31,6 +31,8 @@ QUERIES = {
 }
 PHRASE = ["index", "merge"]
 DEAD = list(range(3, 260, 7))
+# a value of the non-indexed ``repo`` column that some live doc carries
+REPO = gen_corpus(n_docs=260).loc[100, "repo"]
 
 
 @pytest.fixture(scope="module")
@@ -57,45 +59,73 @@ def _jobs(spark) -> int:
 
 
 def _reads(spark, d) -> dict[str, pd.DataFrame]:
+    """Every read's final frame — top-k with rounded and raw scores,
+    phrase, every query-language shape — keyed by name."""
     eng = QueryEngine(spark, d, auto_refresh=False)
+    by_rank = ("query_id", F.desc("score"), "doc_id")
     out = {
         "cold_batch": wand.wand_topk_batch(spark, d, QUERIES, k=25)
-        .orderBy("query_id", F.desc("score"), "doc_id").toPandas(),
-        "warm_batch": eng.topk_batch(QUERIES, k=25)
-        .orderBy("query_id", F.desc("score"), "doc_id").toPandas(),
+        .orderBy(*by_rank).toPandas(),
+        "warm_batch": eng.topk_batch(QUERIES, k=25).orderBy(*by_rank).toPandas(),
+        "raw_cold_batch": wand.wand_topk_batch(spark, d, QUERIES, k=25, round_dp=None)
+        .orderBy(*by_rank).toPandas(),
+        "raw_warm_batch": eng.topk_batch(QUERIES, k=25, round_dp=None)
+        .orderBy(*by_rank).toPandas(),
         "phrase": lists.phrase_docs(spark, d, PHRASE).orderBy("doc_id").toPandas(),
         "warm_phrase": eng.phrase(PHRASE).orderBy("doc_id").toPandas(),
     }
     for qid, (terms, mode) in QUERIES.items():
         out[f"cold_{qid}"] = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
         out[f"warm_{qid}"] = eng.topk(terms, k=25, mode=mode).toPandas()
+        out[f"raw_cold_{qid}"] = wand.wand_topk(
+            spark, d, terms, k=25, mode=mode, round_dp=None
+        ).toPandas()
+        out[f"raw_warm_{qid}"] = eng.topk(terms, k=25, mode=mode, round_dp=None).toPandas()
+    for name, q in qlang_queries(REPO).items():
+        out[f"qlang_{name}"] = eng.query(q, k=25).toPandas()
     return out
 
 
-def test_small_scan_matches_spark_scan(spark, store, monkeypatch):
+@pytest.fixture(scope="module")
+def paths(spark, store) -> dict[str, dict[str, pd.DataFrame]]:
+    """``_reads`` on the driver path, the forced Spark scan and the
+    cogrouped-tombstone Spark path."""
     ix = lists.ColdIndex(spark, store)
     tids = sorted(int(r["term_id"]) for r in ix.term_rows(["def", "return"]))
+    phrase_tids = sorted(int(r["term_id"]) for r in ix.term_rows(["scan", "lock", "impl"]))
     assert ix.tombstones.small and ix.small_scan(tids) is not None
-    want = _reads(spark, store)
+    assert ix.small_scan(phrase_tids, with_positions=True) is not None
+    out = {"driver": _reads(spark, store)}
 
-    monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
-    assert lists.ColdIndex(spark, store).small_scan(tids) is None
-    spark_scan = _reads(spark, store)
-    monkeypatch.undo()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
+        assert lists.ColdIndex(spark, store).small_scan(tids) is None
+        out["spark"] = _reads(spark, store)
 
     # large tombstones alone must take the Spark path (cogrouped)
-    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
-    ix = lists.ColdIndex(spark, store)
-    assert not ix.tombstones.small and ix.small_scan(tids) is None
-    cogrouped = _reads(spark, store)
-    monkeypatch.undo()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(T, "SMALL_MAX_BYTES", -1)
+        ix = lists.ColdIndex(spark, store)
+        assert not ix.tombstones.small and ix.small_scan(tids) is None
+        out["cogroup"] = _reads(spark, store)
+    return out
 
-    for got in (spark_scan, cogrouped):
+
+def test_small_scan_matches_spark_scan(paths):
+    """Every final frame — column names, order, dtypes, rows — is the
+    same on the driver path and on both Spark paths."""
+    want = paths["driver"]
+    for got in (paths["spark"], paths["cogroup"]):
+        assert got.keys() == want.keys()
         for key in want:
             pd.testing.assert_frame_equal(
                 got[key].reset_index(drop=True), want[key].reset_index(drop=True),
                 obj=key,
             )
+    phrase_cols = {"phrase": ["doc_id"], "warm_phrase": ["doc_id"]}
+    for key, frame in want.items():
+        cols = ["query_id", "doc_id", "score"] if key.endswith("batch") else ["doc_id", "score"]
+        assert list(frame.columns) == phrase_cols.get(key, cols), key
     # non-vacuous: every query with known terms answers, deletes and
     # replaced content are visible
     for qid in ("or2", "and2", "single"):
@@ -104,6 +134,21 @@ def test_small_scan_matches_spark_scan(spark, store, monkeypatch):
     assert len(want["phrase"]) > 0
     for key in want:
         assert not set(want[key]["doc_id"]) & set(DEAD), key
+
+
+def test_warm_small_reads_are_bare_local_relations(spark, store):
+    """A warm small read's frame is built final in the driver: its
+    analyzed plan is one LocalRelation with no projection on top."""
+    eng = QueryEngine(spark, store)
+    frames = {
+        "topk": eng.topk(["def", "return"], k=10, mode="or"),
+        "topk_batch": eng.topk_batch(QUERIES, k=10),
+        "query": eng.query("scan merge -trait", k=10),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation", (name, plan.toString())
+        assert len(df.collect()) > 0, name
 
 
 def test_warm_small_topk_starts_no_job(spark, store):
@@ -151,26 +196,14 @@ def _assert_qlang_nonvacuous(got: dict[str, pd.DataFrame]) -> None:
     pd.testing.assert_frame_equal(got["unknown_excluded"], got["and"])
 
 
-def test_qlang_driver_matches_spark_scan(spark, store, monkeypatch):
+def test_qlang_driver_matches_spark_scan(paths):
     """Every query-language shape ranks and scores identically on the
     driver path, the forced Spark scan and the cogrouped-tombstone
     Spark path, and never returns a deleted doc."""
-    queries = qlang_queries(gen_corpus(n_docs=260).loc[100, "repo"])
-    ix = lists.ColdIndex(spark, store)
-    tids = sorted(int(r["term_id"]) for r in ix.term_rows(["scan", "lock", "impl"]))
-    assert ix.small_scan(tids, with_positions=True) is not None
-    want = _qlang_reads(spark, store, queries)
-
-    monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
-    spark_scan = _qlang_reads(spark, store, queries)
-    monkeypatch.undo()
-    monkeypatch.setattr(T, "SMALL_MAX_BYTES", -1)
-    cogrouped = _qlang_reads(spark, store, queries)
-    monkeypatch.undo()
-
-    for got in (spark_scan, cogrouped):
-        for name in queries:
-            pd.testing.assert_frame_equal(got[name], want[name], obj=name)
+    want = {name: paths["driver"][f"qlang_{name}"] for name in qlang_queries(REPO)}
+    for path in ("spark", "cogroup"):
+        for name in want:
+            pd.testing.assert_frame_equal(paths[path][f"qlang_{name}"], want[name], obj=name)
     _assert_qlang_nonvacuous(want)
     for name, rows in want.items():
         assert not set(rows["doc_id"]) & set(DEAD), name
@@ -195,14 +228,15 @@ def test_qlang_matches_corpus_oracle_on_delta_only_store(spark, tmp_path):
     merge.merge_deltas(spark, d)
     live = pd.concat([pdf[~pdf["doc_id"].isin(repl["doc_id"])], repl])
     live = live[~live["doc_id"].isin(dead)]
-    # ``execute``'s phrase leg reads the default text column
-    docs = spark.createDataFrame(live.rename(columns={"content": "text"}))
+    docs = spark.createDataFrame(live)
 
     queries = qlang_queries(pdf.loc[100, "repo"])
     got = _qlang_reads(spark, d, queries)
     _assert_qlang_nonvacuous(got)
     for name, q in queries.items():
-        want = query_language.execute(docs, q, k=25, tokenizer_mode="code").toPandas()
+        want = query_language.execute(
+            docs, q, k=25, text_col="content", tokenizer_mode="code"
+        ).toPandas()
         pd.testing.assert_frame_equal(got[name], want, obj=name)
 
 
