@@ -10,7 +10,7 @@ SURVEY.md §3.1). The Spark expression:
         → partition-pruned segment scan (generation, bucket IN …;
           reads the touched files' columns and filters on term_id —
           a segment file is one parquet row group, ROADMAP item 8)
-        → per-(salt, bucket) decode kernel (numpy, Arrow-batched)
+        → per-salt decode kernel (numpy, Arrow-batched)
         → posting rows (term_id, doc_id, tf, score)
 
 and every operator downstream is plain DataFrame algebra over those
@@ -19,23 +19,31 @@ O(query's posting lists), not O(corpus). Deletes are annihilated
 inside the decode kernels, shipped by the handle's tombstone snapshot
 (index/tombstones.py).
 
-Reads whose output is O(k) — top-k (index/wand.py), ``phrase_docs``
-and the query language (plans/query_language.py) — go through one
-dispatcher, ``ColdIndex.scan``, and one size rule
-(``ColdIndex.small_scan``): when the tombstones are small and the
-touched segment files total at most SMALL_SCAN_MAX_BYTES on disk
-(a 32nd of it for a positional scan, POSITIONAL_SCAN_WEIGHT), the
-kernel runs once in the driver over those files read with pyarrow, so
-the query starts no Spark job. Above it the kernel runs per salt in
-Spark. ``term_postings`` (output O(postings)) always runs in Spark.
+Every list read runs its kernel through ``ColdIndex``. Reads whose
+output is O(k) — top-k (index/wand.py), ``phrase_docs``, proximity
+(operators/proximity.py) and the query language
+(plans/query_language.py) — go through one dispatcher,
+``ColdIndex.scan``, and one size rule (``ColdIndex.small_scan``):
+when the tombstones are small and the touched segment files total at
+most SMALL_SCAN_MAX_BYTES on disk (a 32nd of it for a positional scan,
+POSITIONAL_SCAN_WEIGHT), the kernel runs once in the driver over
+those files read with pyarrow, so the query starts no Spark job.
+Above it ``scan`` takes the Spark leg, ``ColdIndex.spark_scan``: one
+kernel per salt. A live doc's postings all sit in one salt, so each
+kernel sees every list of its docs.
 
-Parallelism: the decode groups by (salt, bucket) — all generations of
-one (term, salt) share a bucket (bucket = term_id % n_buckets), so
-LSM generation-merge stays correct while the decode fans out over
-n_salts × touched-buckets tasks. Kernels that must see all of a
-query's terms for a doc range together (phrase, query language, top-k)
-group by salt only — a live doc's postings are in one salt, so the
-grouping is complete.
+``term_postings`` always takes the Spark leg. Its output is
+O(postings), not O(k), and handing every decoded posting from the
+driver to Spark (``local_frame``) loses to the Spark leg from about
+65k postings, far inside SMALL_SCAN_MAX_BYTES. Measured on gen_corpus
+stores built with perfbench's config, local[4] on a 4-core host,
+median of 5 after a warm-up, consumer ``groupBy(doc_id).sum`` → top-10
+collect (postings: Spark leg ms / driver hand-off ms):
+  16k docs, 1 term, 8k: 579/328;  16k docs, 61 terms, 682k: 1659/4781;
+  64k docs, 5 terms, 325k: 866/2975;  64k docs, 61 terms, 2.73M: 1695/6945.
+The Spark leg groups by salt alone: grouping by (salt, bucket), which
+paid one kernel call per touched bucket as well, was never faster and
+2.2-2.5x slower at 61 terms.
 """
 
 from __future__ import annotations
@@ -112,10 +120,11 @@ def require_positions(meta: dict) -> None:
 
 
 class ColdIndex:
-    """One-shot index handle: ``meta``, ``term_rows``, ``small_scan``,
-    ``pruned_segments``, ``tombstones`` (one index.tombstones.Snapshot
-    shared by every read through the handle), ``doc_meta_df``. Every
-    operator in this module, operators/indexed.py and wand.topk takes a
+    """One-shot index handle: ``meta``, ``term_rows``, ``scan`` (with
+    its legs ``small_scan`` and ``spark_scan``), ``tombstones`` (one
+    index.tombstones.Snapshot shared by every read through the handle),
+    ``doc_meta_df``. Every operator in this module,
+    operators/indexed.py, operators/proximity.py and wand.topk takes a
     handle (or a path, via as_handle). The warm subclass
     index.engine.QueryEngine caches live doc_meta, the tombstone
     snapshot and (on the large path) the segment listing per commit, so
@@ -159,27 +168,32 @@ class ColdIndex:
         n_buckets = self.meta["config"]["n_buckets"]
         return gens, sorted({t % n_buckets for t in tids})
 
-    def pruned_segments(self, tids: list[int], with_positions: bool = False) -> DataFrame:
+    def spark_scan(
+        self, tids: list[int], kernel_factory, schema: str, with_positions: bool = False
+    ) -> DataFrame:
+        """The Spark leg of every list read: the block rows of ``tids``
+        (committed generations × their buckets, ``_scope``; partition
+        filters on generation and bucket, a pushed filter on term_id),
+        grouped by salt into ``kernel_factory(tombstone arrays)``
+        (``Snapshot.apply_kernel``)."""
         if with_positions:
             require_positions(self.meta)
-        seg = self.segments
         gens, buckets = self._scope(tids)
-        seg = seg.filter(
+        seg = self.segments.filter(
             F.col("generation").isin(gens)
             & F.col("bucket").isin(buckets)
             & F.col("term_id").isin(tids)
+        ).select(*KERNEL_INPUT_COLS, *(["pos_blob"] if with_positions else []))
+        return self.tombstones.apply_kernel(
+            seg, kernel_factory, schema, self.meta["config"]["n_salts"]
         )
-        cols = list(KERNEL_INPUT_COLS) + ["bucket"]
-        if with_positions:
-            cols.append("pos_blob")
-        return seg.select(*cols)
 
     def small_scan(self, tids: list[int], with_positions: bool = False) -> pd.DataFrame | None:
-        """The block rows ``pruned_segments`` would scan, read in the
+        """The block rows ``spark_scan`` would read, read in the
         driver with pyarrow — or None when the scan is not small: the
         tombstones are not small, or the touched segment files exceed
         SMALL_SCAN_MAX_BYTES on disk (weighted by POSITIONAL_SCAN_WEIGHT
-        with positions). Same scope as ``pruned_segments`` (``_scope``),
+        with positions). Same scope as ``spark_scan`` (``_scope``),
         found by globbing ``generation=G/bucket=B`` dirs instead of a
         Spark listing. It reads the touched files' columns and filters
         on ``term_id``: a segment file is one parquet row group, so
@@ -234,10 +248,7 @@ class ColdIndex:
             if round_dp is not None:
                 out = out.assign(score=spark_round(out["score"], round_dp))
             return local_frame(self.spark, out_schema, out)
-        seg = self.pruned_segments(tids, with_positions).drop("bucket")
-        out = self.tombstones.apply_kernel(
-            seg, ("salt",), kernel_factory, schema, self.meta["config"]["n_salts"]
-        )
+        out = self.spark_scan(tids, kernel_factory, schema, with_positions)
         out = out if merge is None else merge(out)
         return out.select(*(
             F.round(c, round_dp).alias(c) if c == "score" and round_dp is not None else c
@@ -269,8 +280,6 @@ def term_postings(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame
     if not trows:
         return local_frame(spark, POSTING_SCHEMA)
     tids = sorted({int(r["term_id"]) for r in trows})
-    seg = ix.pruned_segments(tids)
-    n_buckets = ix.meta["config"]["n_buckets"]
     idf_by, avgdl, k1, b = W.scoring_ctx(ix.meta, trows)
 
     def kernel_factory(tombstones):
@@ -304,10 +313,7 @@ def term_postings(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame
 
         return kernel
 
-    return ix.tombstones.apply_kernel(
-        seg, ("salt", "bucket"), kernel_factory, POSTING_SCHEMA,
-        ix.meta["config"]["n_salts"], buckets=sorted({t % n_buckets for t in tids}),
-    )
+    return ix.spark_scan(tids, kernel_factory, POSTING_SCHEMA)
 
 
 def term_id_map(spark: SparkSession, index_dir, terms: list[str]) -> dict[str, int]:

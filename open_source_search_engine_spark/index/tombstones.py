@@ -93,43 +93,33 @@ class Snapshot:
         )
 
     def apply_kernel(
-        self,
-        seg: DataFrame,
-        group_cols: tuple[str, ...],
-        kernel_factory,
-        out_schema: str,
-        n_salts: int,
-        buckets: list[int] | None = None,
+        self, seg: DataFrame, kernel_factory, out_schema: str, n_salts: int
     ) -> DataFrame:
-        """Run a per-group decode kernel ``kernel_factory(arrays)`` over
-        ``seg`` grouped by ``group_cols`` (salt, or salt and bucket).
+        """Run a per-salt decode kernel ``kernel_factory(arrays)`` over
+        ``seg`` grouped by salt — one kernel call per salt, whatever the
+        number of terms or buckets. ``ColdIndex.spark_scan`` is the
+        one caller.
 
         Small: the arrays ride in the closure, zero extra shuffle.
-        Large: the per-doc table is replicated to every group key
-        (n_salts × the query's ``buckets``, not corpus-scale) and
-        cogrouped into the kernels. Every salt needs the full set:
-        doc-range salts drift across generations, so a replaced doc's
-        old-salt postings must be annihilated wherever they sit.
-        Per-task memory is O(|tombstones|); past that the answer is a
-        merge, which prunes the table. Kernels must accept an empty
-        frame (a group present only on the tombstone side)."""
+        Large: the per-doc table is replicated to every salt (n_salts
+        copies, not corpus-scale) and cogrouped into the kernels. Every
+        salt needs the full set: doc-range salts drift across
+        generations, so a replaced doc's old-salt postings must be
+        annihilated wherever they sit. Per-task memory is
+        O(|tombstones|); past that the answer is a merge, which prunes
+        the table. Kernels must accept an empty frame (a salt present
+        only on the tombstone side)."""
         if self.small:
-            return seg.groupBy(*group_cols).applyInPandas(
-                kernel_factory(self.arrays), out_schema
-            )
-        keys = self.spark.range(n_salts).select(F.col("id").cast("int").alias("salt"))
-        if "bucket" in group_cols:
-            keys = keys.crossJoin(
-                self.spark.createDataFrame([(int(b),) for b in sorted(buckets)], "bucket int")
-            )
-        ts_rep = _per_doc(self.spark, self.files).crossJoin(keys)
+            return seg.groupBy("salt").applyInPandas(kernel_factory(self.arrays), out_schema)
+        salts = self.spark.range(n_salts).select(F.col("id").cast("int").alias("salt"))
+        ts_rep = _per_doc(self.spark, self.files).crossJoin(salts)
 
         def cokernel(seg_pdf: pd.DataFrame, ts_pdf: pd.DataFrame) -> pd.DataFrame:
             return kernel_factory(_arrays(ts_pdf[["doc_id", "before_generation"]]))(seg_pdf)
 
         return (
-            seg.groupBy(*group_cols)
-            .cogroup(ts_rep.groupBy(*group_cols))
+            seg.groupBy("salt")
+            .cogroup(ts_rep.groupBy("salt"))
             .applyInPandas(cokernel, out_schema)
         )
 

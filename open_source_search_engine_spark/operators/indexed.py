@@ -5,8 +5,11 @@ the corpus per query; at 100 TB a facet query that re-tokenizes the
 corpus is a batch job, not an operator).
 
 Every function here consumes `index.lists.term_postings` (the Msg2
-list fetch: pruned scan + numpy decode) and composes plain DataFrame
-algebra on the decoded rows. Metadata predicates (`lang:`, numeric
+list fetch: a pruned scan + one numpy decode kernel per salt, on the
+Spark leg `ColdIndex.spark_scan`) and composes plain DataFrame algebra
+on the decoded rows. The fetch's output is O(postings), not O(k), so
+it never takes the driver path of the top-k reads: these operators
+start Spark jobs on any store (index/lists.py gives the measurement). Metadata predicates (`lang:`, numeric
 ranges, site, sort keys) join `doc_meta`, which the build persists
 with the caller's extra columns — the titledb join (SURVEY.md §1.2).
 

@@ -35,18 +35,22 @@ def _ids(df):
 
 
 def test_term_postings_matches_algebra(spark, tiny_corpus, idx):
+    """One term, and several whose lists sit in different buckets (the
+    per-salt kernel decodes them in one call): (term, doc_id, tf) equal
+    the corpus postings."""
     from open_source_search_engine_spark.operators.postings import build_postings
 
-    want = (
-        build_postings(tiny_corpus, "content", "doc_id", mode="code", with_positions=False)
-        .filter(F.col("term") == "index")
-        .select("doc_id", "tf")
-        .collect()
-    )
-    got = lists.term_postings(spark, idx, ["index"]).select("doc_id", "tf").collect()
-    assert sorted((r["doc_id"], r["tf"]) for r in got) == sorted(
-        (r["doc_id"], r["tf"]) for r in want
-    )
+    corpus = build_postings(tiny_corpus, "content", "doc_id", mode="code", with_positions=False)
+    for terms in (["index"], ["index", "merge", "scan", "def", "return", "hash"]):
+        want = corpus.filter(F.col("term").isin(terms)).select("term", "doc_id", "tf").collect()
+        term_of = {t: term for term, t in lists.term_id_map(spark, idx, terms).items()}
+        assert len(term_of) == len(terms)
+        if len(terms) > 1:
+            assert len({t % TEST_CFG.n_buckets for t in term_of}) > 1
+        got = lists.term_postings(spark, idx, terms).collect()
+        assert sorted((term_of[r["term_id"]], r["doc_id"], r["tf"]) for r in got) == sorted(
+            (r["term"], r["doc_id"], r["tf"]) for r in want
+        ), terms
 
 
 def test_and_or_not_indexed(spark, tiny_corpus, idx):

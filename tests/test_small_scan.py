@@ -4,10 +4,12 @@ the Spark scan it replaces below ``lists.SMALL_SCAN_MAX_BYTES``.
 Every store in the other tests is small, so they all run the driver
 path; these tests force the Spark path (``SMALL_SCAN_MAX_BYTES = -1``,
 or large tombstones) and pin both to identical ranks and scores on a
-store with an add, a replace and a delete: top-k, phrase, and the
-query language (``query_language.execute_indexed``, one scan and one
-kernel). They also pin the point of the driver path: a warm top-k, a
-warm query-language query and an empty result start no Spark job."""
+store with an add, a replace and a delete: top-k, phrase, proximity,
+the query language (``query_language.execute_indexed``, one scan and
+one kernel) and ``term_postings`` (always the Spark leg, so only its
+cogrouped-tombstone variant differs). They also pin the point of the
+driver path: a warm top-k, a warm proximity, a warm query-language
+query and an empty result start no Spark job."""
 
 from __future__ import annotations
 
@@ -19,6 +21,7 @@ from fixtures.gen_corpus import gen_corpus
 from open_source_search_engine_spark.index import builder, lists, merge, wand
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.engine import QueryEngine
+from open_source_search_engine_spark.operators import proximity
 from open_source_search_engine_spark.plans import query_language
 from tests.conftest import TEST_CFG
 
@@ -30,6 +33,10 @@ QUERIES = {
     "single": (["index"], "and"),
 }
 PHRASE = ["index", "merge"]
+PROXIMITY = ["scan", "merge"]
+# term_postings' terms: their lists sit in several buckets, so one
+# per-salt kernel call decodes terms of different buckets together
+POSTINGS = ["def", "return", "scan", "merge", "index", "guard"]
 DEAD = list(range(3, 260, 7))
 # a value of the non-indexed ``repo`` column that some live doc carries
 REPO = gen_corpus(n_docs=260).loc[100, "repo"]
@@ -60,7 +67,8 @@ def _jobs(spark) -> int:
 
 def _reads(spark, d) -> dict[str, pd.DataFrame]:
     """Every read's final frame — top-k with rounded and raw scores,
-    phrase, every query-language shape — keyed by name."""
+    phrase, proximity, every query-language shape, term_postings —
+    keyed by name."""
     eng = QueryEngine(spark, d, auto_refresh=False)
     by_rank = ("query_id", F.desc("score"), "doc_id")
     out = {
@@ -73,6 +81,10 @@ def _reads(spark, d) -> dict[str, pd.DataFrame]:
         .orderBy(*by_rank).toPandas(),
         "phrase": lists.phrase_docs(spark, d, PHRASE).orderBy("doc_id").toPandas(),
         "warm_phrase": eng.phrase(PHRASE).orderBy("doc_id").toPandas(),
+        "cold_proximity": proximity.proximity_topk_indexed(spark, d, PROXIMITY, k=25).toPandas(),
+        "warm_proximity": proximity.proximity_topk_indexed(spark, eng, PROXIMITY, k=25).toPandas(),
+        "postings": lists.term_postings(spark, d, POSTINGS)
+        .orderBy("term_id", "doc_id").toPandas(),
     }
     for qid, (terms, mode) in QUERIES.items():
         out[f"cold_{qid}"] = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
@@ -122,16 +134,21 @@ def test_small_scan_matches_spark_scan(paths):
                 got[key].reset_index(drop=True), want[key].reset_index(drop=True),
                 obj=key,
             )
-    phrase_cols = {"phrase": ["doc_id"], "warm_phrase": ["doc_id"]}
+    other_cols = {
+        "phrase": ["doc_id"], "warm_phrase": ["doc_id"],
+        "postings": ["term_id", "doc_id", "tf", "score"],
+    }
     for key, frame in want.items():
         cols = ["query_id", "doc_id", "score"] if key.endswith("batch") else ["doc_id", "score"]
-        assert list(frame.columns) == phrase_cols.get(key, cols), key
+        assert list(frame.columns) == other_cols.get(key, cols), key
     # non-vacuous: every query with known terms answers, deletes and
     # replaced content are visible
     for qid in ("or2", "and2", "single"):
         assert len(want[f"cold_{qid}"]) > 0, qid
     assert set(want["cold_batch"]["query_id"]) == {"or2", "and2", "single"}
     assert len(want["phrase"]) > 0
+    assert len(want["cold_proximity"]) > 0
+    assert want["postings"]["term_id"].mod(TEST_CFG.n_buckets).nunique() > 1
     for key in want:
         assert not set(want[key]["doc_id"]) & set(DEAD), key
 
@@ -144,6 +161,7 @@ def test_warm_small_reads_are_bare_local_relations(spark, store):
         "topk": eng.topk(["def", "return"], k=10, mode="or"),
         "topk_batch": eng.topk_batch(QUERIES, k=10),
         "query": eng.query("scan merge -trait", k=10),
+        "proximity": proximity.proximity_topk_indexed(spark, eng, PROXIMITY, k=10),
     }
     for name, df in frames.items():
         plan = df._jdf.queryExecution().analyzed()
@@ -157,8 +175,9 @@ def test_warm_small_topk_starts_no_job(spark, store):
     before = _jobs(spark)
     rows = eng.topk(["def", "return"], k=10, mode="or").collect()
     batch = eng.topk_batch(QUERIES, k=10).collect()
+    prox = proximity.proximity_topk_indexed(spark, eng, PROXIMITY, k=10).collect()
     assert _jobs(spark) == before
-    assert len(rows) == 10 and len(batch) > 0
+    assert len(rows) == 10 and len(batch) > 0 and len(prox) > 0
 
 
 def qlang_queries(repo: str) -> dict[str, str]:
@@ -280,13 +299,16 @@ def test_stale_handle_raises_after_commit_drops_generations(spark, tmp_path, mon
         "warm_topk": lambda: eng.topk(["def"], k=5, mode="or").collect(),
         "warm_phrase": lambda: eng.phrase(PHRASE).collect(),
         "cold_phrase": lambda: lists.phrase_docs(spark, cold, PHRASE).collect(),
+        "cold_proximity": lambda: proximity.proximity_topk_indexed(
+            spark, cold, PHRASE, k=5
+        ).collect(),
         "cold_postings": lambda: lists.term_postings(spark, cold, ["def"]).collect(),
     }
     for name, read in reads.items():
         with pytest.raises(FileNotFoundError, match="dropped by a later commit"):
             read()
     monkeypatch.setattr(lists, "SMALL_SCAN_MAX_BYTES", -1)
-    for name in ("warm_topk", "warm_phrase"):
+    for name in ("warm_topk", "warm_phrase", "cold_proximity"):
         with pytest.raises(FileNotFoundError, match="dropped by a later commit"):
             reads[name]()
     monkeypatch.undo()
