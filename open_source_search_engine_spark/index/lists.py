@@ -10,46 +10,41 @@ SURVEY.md §3.1). The Spark expression:
         → partition-pruned segment scan (generation, bucket IN …;
           reads the touched files' columns and filters on term_id —
           a segment file is one parquet row group, ROADMAP item 8)
-        → per-salt decode kernel (numpy, Arrow-batched)
-        → posting rows (term_id, doc_id, tf, score)
+        → one doc-local numpy kernel over a salt's block rows
 
-and every operator downstream is plain DataFrame algebra over those
-rows. Nothing re-tokenizes the corpus at query time; the scan cost is
+Nothing re-tokenizes the corpus at query time; the scan cost is
 O(query's posting lists), not O(corpus). Deletes are annihilated
 inside the decode kernels, shipped by the handle's tombstone snapshot
-(index/tombstones.py).
+(index/tombstones.py). Every match read (plans/query_language.py,
+operators/indexed.py) is a ``match_plan`` for one kernel,
+``match_kernel`` (Msg39's intersect-and-score).
 
 Every list read runs its kernel through ``ColdIndex``. Reads whose
 output is O(k) — top-k (index/wand.py), ``phrase_docs``, proximity
-(operators/proximity.py) and the query language
-(plans/query_language.py) — go through one dispatcher,
-``ColdIndex.scan``, and one size rule (``ColdIndex.small_scan``):
-when the tombstones are small and the touched segment files total at
-most SMALL_SCAN_MAX_BYTES on disk (a 32nd of it for a positional scan,
-POSITIONAL_SCAN_WEIGHT), the kernel runs once in the driver over
-those files read with pyarrow, so the query starts no Spark job.
-Above it ``scan`` takes the Spark leg, ``ColdIndex.spark_scan``: one
-kernel per salt. A live doc's postings all sit in one salt, so each
-kernel sees every list of its docs.
+(operators/proximity.py) and the query language — go through one
+dispatcher, ``ColdIndex.scan``, and one size rule
+(``ColdIndex.small_scan``): when the tombstones are small and the
+touched segment files total at most SMALL_SCAN_MAX_BYTES on disk (a
+32nd of it for a positional scan, POSITIONAL_SCAN_WEIGHT), the kernel
+runs once in the driver over those files read with pyarrow, so the
+query starts no Spark job. Above it ``scan`` takes the Spark leg,
+``ColdIndex.spark_scan``: one kernel per salt. A live doc's postings
+all sit in one salt, so each kernel sees every list of its docs and
+the per-salt outputs are disjoint.
 
-``term_postings`` always takes the Spark leg. Its output is
-O(postings), not O(k), and handing every decoded posting from the
-driver to Spark (``local_frame``) loses to the Spark leg from about
-65k postings, far inside SMALL_SCAN_MAX_BYTES. Measured on gen_corpus
-stores built with perfbench's config, local[4] on a 4-core host,
-median of 5 after a warm-up, consumer ``groupBy(doc_id).sum`` → top-10
-collect (postings: Spark leg ms / driver hand-off ms):
-  16k docs, 1 term, 8k: 579/328;  16k docs, 61 terms, 682k: 1659/4781;
-  64k docs, 5 terms, 325k: 866/2975;  64k docs, 61 terms, 2.73M: 1695/6945.
-The Spark leg groups by salt alone: grouping by (salt, bucket), which
-paid one kernel call per touched bucket as well, was never faster and
-2.2-2.5x slower at 61 terms.
+Reads with an O(matches) output (operators/indexed.py) or an
+O(postings) one (``term_postings``: tf for ``indexed.term_lookup``,
+the doc_meta universe for ``boolean_expr.evaluate_indexed``'s NOT)
+always take the Spark leg: handing every row from the driver to Spark
+(``local_frame``) loses from about 65k postings, far inside
+SMALL_SCAN_MAX_BYTES (ROADMAP item 6 has the measurement).
 """
 
 from __future__ import annotations
 
 from functools import cached_property
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -407,3 +402,75 @@ def phrase_chain(word_tids: list[int], lists: dict) -> np.ndarray:
         jj = np.minimum(np.searchsorted(ks, starts + i), ks.size - 1)
         starts = starts[ks[jj] == starts + i]
     return cand[np.unique(starts // M)]
+
+
+class MatchPlan(NamedTuple):
+    """Term ids of a compiled match read, and ``wand.scoring_ctx``."""
+
+    tids: list[int]  # every list the scan reads
+    units: list[list[int]]  # a doc hits >=1 term of every unit
+    scored: list[int]  # terms whose BM25 contributions sum into score
+    pairs: list[tuple[int, int]]  # adjacent phrase pairs
+    excluded: list[int]  # a live posting of one drops the doc
+    scoring: tuple
+
+
+def match_plan(
+    ix: ColdIndex, units: list[list[str]], scored: list[str] = (),
+    pairs: list[tuple[str, str]] = (), excluded: list[str] = (),
+) -> MatchPlan | None:
+    """The one term→plan step of every match read: one dictionary
+    read. ``scored`` terms and phrase words must be unit members. None
+    (an empty result) with no unit, a unit with no known member or an
+    unknown phrase word; other unknown terms match nothing."""
+    words = [w for p in pairs for w in p]
+    trows = ix.term_rows([t for u in units for t in u] + list(excluded))
+    tid = {r["term"]: int(r["term_id"]) for r in trows}
+    groups = [sorted({tid[t] for t in u if t in tid}) for u in units]
+    if not groups or not all(groups) or not all(w in tid for w in words):
+        return None
+    return MatchPlan(
+        sorted(set(tid.values())),
+        groups,
+        sorted({tid[t] for t in scored if t in tid}),
+        [(tid[a], tid[b]) for a, b in pairs],
+        sorted({tid[t] for t in excluded if t in tid}),
+        W.scoring_ctx(ix.meta, trows),
+    )
+
+
+def match_kernel(plan: MatchPlan, k: int | None, tombstones):
+    """The one doc-local match kernel over one salt's block rows, or
+    every row of a small scan. A doc matches with >=1 member of every
+    unit, every pair adjacent and no live excluded posting; its score
+    sums its scored terms in ascending term_id order (FIXTURES.md §3).
+    (doc_id, score) by (score desc, doc_id asc), cut to ``k`` unless
+    None."""
+    phrase_tids = {t for p in plan.pairs for t in p}
+    idf_by, avgdl, k1, b = plan.scoring
+
+    def kernel(pdf):
+        rows = {int(t): g for t, g in pdf.groupby("term_id")}
+        lists = {
+            t: decode_blocks(
+                rows.get(t, pdf.iloc[0:0]), tombstones=tombstones,
+                with_positions=t in phrase_tids,
+                rescore=(idf_by[t], avgdl, k1, b) if t in plan.scored else None,
+            )
+            for t in {t for u in plan.units for t in u} | set(plan.excluded)
+        }
+        cand = None
+        for u in plan.units:
+            docs = np.unique(np.concatenate([lists[t][0] for t in u]))
+            cand = docs if cand is None else np.intersect1d(cand, docs, assume_unique=True)
+        for a, b_ in plan.pairs:
+            cand = cand[np.isin(cand, phrase_chain([a, b_], lists), assume_unique=True)]
+        for t in plan.excluded:
+            cand = cand[~np.isin(cand, lists[t][0], assume_unique=True)]
+        total, _hits = W._score_candidates(
+            cand, [(t, lists[t][0], lists[t][2]) for t in plan.scored]
+        )
+        idx = np.lexsort((cand, -total))[:k]
+        return W._topk_frame(cand[idx], total[idx])
+
+    return kernel

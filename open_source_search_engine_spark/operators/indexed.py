@@ -4,32 +4,34 @@ site-cap, scored retrieval — ALL served from the segment store
 the corpus per query; at 100 TB a facet query that re-tokenizes the
 corpus is a batch job, not an operator).
 
-Every function here consumes `index.lists.term_postings` (the Msg2
-list fetch: a pruned scan + one numpy decode kernel per salt, on the
-Spark leg `ColdIndex.spark_scan`) and composes plain DataFrame algebra
-on the decoded rows. The fetch's output is O(postings), not O(k), so
-it never takes the driver path of the top-k reads: these operators
-start Spark jobs on any store (index/lists.py gives the measurement). Metadata predicates (`lang:`, numeric
-ranges, site, sort keys) join `doc_meta`, which the build persists
-with the caller's extra columns — the titledb join (SURVEY.md §1.2).
+Every match read here (AND/OR/NOT, field restriction, numeric range,
+the scored match set) is a plan for the one doc-local match kernel,
+``index.lists.match_plan`` → ``match_kernel`` (Msg39's
+intersect-and-score, SURVEY.md §3.1), run per salt on the Spark leg
+``ColdIndex.spark_scan``: its output is O(matches), not O(k)
+(index/lists.py). Per-salt outputs are disjoint, so nothing is
+deduplicated. Metadata predicates (`lang:`, numeric ranges, site, sort
+keys) join `doc_meta`, which the build persists with the caller's
+extra columns — the titledb join (SURVEY.md §1.2).
 
 Score semantics: segment blocks store no statistics (tf, doc length
 and positions only); each per-posting BM25 contribution is computed at
 read time by `segments.bm25_rescore` from the LIVE stats (df from
-term_dict, N and avgdl from meta), so `sum(score) GROUP BY doc_id` here
-is rank-identical to the bm25_topk_oracle / DuckDB oracle — the driver
+term_dict, N and avgdl from meta), and the kernel sums a doc's
+contributions in ascending term_id order (FIXTURES.md §3), so
+``_score`` is bit-identical to ``wand.wand_topk(round_dp=None)`` and
+rank-identical to the bm25_topk_oracle / DuckDB oracle — the driver
 verifies every one of these entries against the same SQL as the
-DataFrame-algebra path.
+corpus-algebra path.
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index import lists as L
+from open_source_search_engine_spark.index.wand import KERNEL_SCHEMA
 from open_source_search_engine_spark.session import local_frame
 
 
@@ -39,12 +41,23 @@ def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
     return L.as_handle(spark, index_dir).doc_meta_df()
 
 
+def _matches(spark: SparkSession, index_dir, units, scored=(), excluded=()) -> DataFrame:
+    """(doc_id, _score), uncut and unordered: ``lists.match_kernel``
+    per salt (``_score`` is 0.0 when nothing is scored)."""
+    ix = L.as_handle(spark, index_dir)
+    plan = L.match_plan(ix, units, scored, excluded=excluded)
+    if plan is None:
+        return local_frame(spark, "doc_id long, _score double")
+    out = ix.spark_scan(plan.tids, lambda arrays: L.match_kernel(plan, None, arrays), KERNEL_SCHEMA)
+    return out.toDF("doc_id", "_score")
+
+
 def field_docs(spark: SparkSession, index_dir, field: str, value: str) -> DataFrame:
     """Doc set for a ``field:value`` restriction served from the
     composite-term posting list (built with ``index_fields`` — the
     reference's field-prefixed termIds, SURVEY.md §2.2 F3): one pruned
     list read, no doc_meta scan."""
-    return L.term_postings(spark, index_dir, [f"{field}:{value}"]).select("doc_id")
+    return _matches(spark, index_dir, [[f"{field}:{value}"]]).select("doc_id")
 
 
 def bm25_topk_field(
@@ -56,13 +69,11 @@ def bm25_topk_field(
     k: int = 10,
     mode: str = "and",
 ) -> DataFrame:
-    """Field-restricted BM25 top-k, BOTH legs from the index: the
-    restriction is the composite-term list, the scores are the
-    read-time per-posting contributions."""
-    scored = scored_matches(
-        spark, index_dir, terms, mode,
-        candidate_docs=field_docs(spark, index_dir, field, value),
-    )
+    """Field-restricted BM25 top-k, BOTH legs from the index in one
+    scan: the restriction is one more unit, the composite-term list;
+    the scores are the read-time per-posting contributions."""
+    units = [[t] for t in terms] if mode == "and" else [terms]
+    scored = _matches(spark, index_dir, units + [[f"{field}:{value}"]], terms)
     return (
         scored.orderBy(F.desc("_score"), F.asc("doc_id"))
         .limit(k)
@@ -78,36 +89,17 @@ def term_lookup(spark: SparkSession, index_dir, term: str) -> DataFrame:
 
 def and_intersect(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame:
     """Docs containing ALL terms (J1/U2) from the index lists."""
-    n = len(set(terms))
-    tmap = L.term_id_map(spark, index_dir, terms)
-    if len(tmap) < n:
-        return local_frame(spark, "doc_id long")
-    tp = L.term_postings(spark, index_dir, terms)
-    return (
-        tp.groupBy("doc_id")
-        .agg(F.countDistinct("term_id").alias("nt"))
-        .filter(F.col("nt") == n)
-        .select("doc_id")
-        .orderBy("doc_id")
-    )
+    return _matches(spark, index_dir, [[t] for t in terms]).select("doc_id").orderBy("doc_id")
 
 
 def or_union(spark: SparkSession, index_dir, terms: list[str]) -> DataFrame:
-    tp = L.term_postings(spark, index_dir, terms)
-    return tp.select("doc_id").distinct().orderBy("doc_id")
+    """Docs containing ANY known term (U1); unknown terms add nothing."""
+    return _matches(spark, index_dir, [terms]).select("doc_id").orderBy("doc_id")
 
 
 def not_exclude(spark: SparkSession, index_dir, term: str, minus: str) -> DataFrame:
-    """`term -minus` (F1/U3) — anti-join of decoded lists."""
-    tmap = L.term_id_map(spark, index_dir, [term, minus])
-    if term not in tmap:
-        return local_frame(spark, "doc_id long")
-    tp = L.term_postings(spark, index_dir, [term, minus])
-    pos = tp.filter(F.col("term_id") == tmap[term]).select("doc_id")
-    if minus not in tmap:
-        return pos.distinct().orderBy("doc_id")
-    neg = tp.filter(F.col("term_id") == tmap[minus]).select("doc_id")
-    return pos.join(neg, "doc_id", "left_anti").distinct().orderBy("doc_id")
+    """`term -minus` (F1/U3): docs with a live ``minus`` posting drop."""
+    return _matches(spark, index_dir, [[term]], (), [minus]).select("doc_id").orderBy("doc_id")
 
 
 def numeric_range(
@@ -115,9 +107,9 @@ def numeric_range(
 ) -> DataFrame:
     """Term match restricted to a numeric doc_meta range (F4) — the
     metadata leg comes from the persisted doc_meta, not the corpus."""
-    matches = L.term_postings(spark, index_dir, [term]).select("doc_id")
+    matches = _matches(spark, index_dir, [[term]]).select("doc_id")
     keep = _doc_meta(spark, index_dir).filter(F.col(col).between(lo, hi)).select("doc_id")
-    return matches.join(keep, "doc_id", "left_semi").distinct().orderBy("doc_id")
+    return matches.join(keep, "doc_id", "left_semi").orderBy("doc_id")
 
 
 def facet_counts(
@@ -144,7 +136,7 @@ def facet_ranges(
     bucket_width: int = 100,
 ) -> DataFrame:
     """Numeric range facets from the index (A5 int variant): match
-    from decoded lists, histogram from doc_meta."""
+    from the match kernel, histogram from doc_meta."""
     matches = or_union(spark, index_dir, terms)
     lo = (F.floor(F.col(facet_col) / bucket_width) * bucket_width).cast("bigint")
     return (
@@ -157,31 +149,15 @@ def facet_ranges(
 
 
 def scored_matches(
-    spark: SparkSession,
-    index_dir,
-    terms: list[str],
-    mode: str = "and",
-    candidate_docs: DataFrame | None = None,
+    spark: SparkSession, index_dir, terms: list[str], mode: str = "and"
 ) -> DataFrame:
     """FULL scored match set (doc_id, _score) from the read-time
     per-posting scores — unrounded, unordered, no k cut (the indexed
     twin of bm25.bm25_scores; consumers window/limit themselves).
     AND mode with a term missing from the dictionary matches nothing,
     mirroring bm25_scores where an unknown term zeroes the AND."""
-    n = len(set(terms))
-    tmap = L.term_id_map(spark, index_dir, terms)
-    if mode == "and" and len(tmap) < n:
-        return local_frame(spark, "doc_id long, _score double")
-    tp = L.term_postings(spark, index_dir, terms)
-    if candidate_docs is not None:
-        tp = tp.join(candidate_docs.select("doc_id"), "doc_id", "left_semi")
-    agg = tp.groupBy("doc_id").agg(
-        F.sum("score").alias("_score"),
-        F.countDistinct("term_id").alias("_nterms"),
-    )
-    if mode == "and":
-        agg = agg.filter(F.col("_nterms") == len(tmap))
-    return agg.select("doc_id", "_score")
+    units = [[t] for t in terms] if mode == "and" else [terms]
+    return _matches(spark, index_dir, units, terms)
 
 
 def bm25_topk(

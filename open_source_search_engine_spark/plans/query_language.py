@@ -19,8 +19,9 @@ Grammar (Gigablast-compatible subset):
                     excludes docs containing ANY member
 
 ``execute`` compiles the parsed query onto the DataFrame BM25 oracle;
-``execute_indexed`` compiles it into one segment-store scan and one
-numpy kernel (Msg39's per-shard intersect-and-score, SURVEY.md §3.1);
+``execute_indexed`` compiles it into one segment-store scan and the
+one match kernel of the read path, ``index.lists.match_kernel``
+(Msg39's per-shard intersect-and-score, SURVEY.md §3.1);
 ``sql`` emits the equivalent DuckDB SQL so the driver can verify the
 whole front end end-to-end.
 """
@@ -30,13 +31,10 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.index import lists as L
-from open_source_search_engine_spark.index import wand as W
-from open_source_search_engine_spark.index.segments import decode_blocks
 from open_source_search_engine_spark.operators import bm25, phrase as phrase_ops
 from open_source_search_engine_spark.plans import oracle_sql as osql
 from open_source_search_engine_spark.session import local_frame
@@ -244,99 +242,55 @@ def execute_indexed(
     k: int = 10,
 ) -> DataFrame:
     """Compile + run the SAME query language ENTIRELY from the segment
-    store (VERDICT r01 item 1) as ONE scan and ONE kernel: every
-    constraint is doc-local, so ``_query_kernel`` evaluates the parsed
-    query in one pass over the union of its lists (Msg39's
-    intersect-and-score, SURVEY.md §3.1) — once in the driver for a
-    small scan, else per salt plus the top-k merge (``ColdIndex.scan``).
-    Positions are read only for a phrase. A filter on a NON-indexed
-    doc_meta column is a semi-join on the kernel's uncut output.
-    Scores are rounded to 5 places after the cut: in Python on a small
-    scan without such a filter, whose frame is final in the driver.
-    Must stay hash-identical to ``execute`` / the DuckDB oracle
-    ``sql(q)``.
+    store (VERDICT r01 item 1) as ONE scan and ONE kernel: the units
+    are the scored groups plus one per indexed field term, and
+    ``lists.match_kernel`` evaluates them in one pass over the union of
+    their lists (Msg39's intersect-and-score, SURVEY.md §3.1) — once in
+    the driver for a small scan, else per salt plus the top-k merge
+    (``ColdIndex.scan``). Positions are read only for a phrase. A filter
+    on a NON-indexed doc_meta column is a semi-join on the kernel's
+    uncut output. Scores are rounded to 5 places after the cut: in
+    Python on a small scan without such a filter, whose frame is final
+    in the driver. Must stay hash-identical to ``execute`` / the DuckDB
+    oracle ``sql(q)``.
 
-    Empty results, as in ``execute``: a required term, every member of
-    an OR-group, a phrase word or an indexed field value missing from
-    the dictionary; an unknown excluded term excludes nothing. Phrases
-    constrain per ADJACENT PAIR, mirroring ``execute`` and ``sql`` —
-    not the full-chain n-gram of ``index.lists.phrase_docs``."""
+    Empty results, as in ``execute``: no scored group, or the empty
+    rule of ``lists.match_plan``. Phrases constrain per ADJACENT PAIR,
+    mirroring ``execute`` and ``sql`` — not the full-chain n-gram of
+    ``index.lists.phrase_docs``."""
     pq = parse(q)
     ix = L.as_handle(spark, index_dir)
     indexed_fields = set(ix.meta.get("index_fields", []))
     fields = [f"{f}:{v}" for f, v in pq.filters.items() if f in indexed_fields]
     meta_filters = {f: v for f, v in pq.filters.items() if f not in indexed_fields}
-    pairs = [p for words in pq.phrases for p in zip(words, words[1:])]
-    trows = ix.term_rows(pq.scored_terms + pq.excluded + fields)
-    tid = {r["term"]: int(r["term_id"]) for r in trows}
-    groups = [sorted(tid[t] for t in g if t in tid) for g in pq.scored_groups]
-    known = [t in tid for t in fields] + [w in tid for p in pairs for w in p]
-    if not groups or not all(groups) or not all(known):
-        out = local_frame(spark, QUERY_SCHEMA)
-    else:
-        plan = (
-            groups + [[tid[f]] for f in fields],  # every unit a doc must hit
-            sorted({t for g in groups for t in g}),  # the scored terms
-            [(tid[a], tid[b]) for a, b in pairs],
-            sorted({tid[t] for t in pq.excluded if t in tid}),
-        )
-        scoring = W.scoring_ctx(ix.meta, trows)
-        k_cut = None if meta_filters else k
+    plan = L.match_plan(
+        ix,
+        [list(g) for g in pq.scored_groups] + [[f] for f in fields],
+        pq.scored_terms,
+        [p for words in pq.phrases for p in zip(words, words[1:])],
+        pq.excluded,
+    ) if pq.scored_groups else None
+    if plan is None:
+        return local_frame(spark, QUERY_SCHEMA)
+    k_cut = None if meta_filters else k
 
-        def top(df: DataFrame) -> DataFrame:
-            return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def top(df: DataFrame) -> DataFrame:
+        return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-        out = ix.scan(
-            sorted(set(tid.values())),
-            lambda arrays: _query_kernel(plan, k_cut, arrays, scoring),
-            QUERY_SCHEMA, with_positions=bool(pairs),
-            merge=None if meta_filters else top,
-            round_dp=None if meta_filters else 5,
-        )
-        if meta_filters:
-            dm = ix.doc_meta_df()
-            for f, v in meta_filters.items():
-                dm = dm.filter(F.col(f) == v)
-            out = top(out.join(dm.select("doc_id"), "doc_id", "left_semi"))
-            out = out.select("doc_id", F.round("score", 5).alias("score"))
+    out = ix.scan(
+        plan.tids,
+        lambda arrays: L.match_kernel(plan, k_cut, arrays),
+        QUERY_SCHEMA, with_positions=bool(plan.pairs),
+        merge=None if meta_filters else top,
+        round_dp=None if meta_filters else 5,
+    )
+    if meta_filters:
+        dm = ix.doc_meta_df()
+        for f, v in meta_filters.items():
+            dm = dm.filter(F.col(f) == v)
+        out = top(out.join(dm.select("doc_id"), "doc_id", "left_semi"))
+        out = out.select("doc_id", F.round("score", 5).alias("score"))
     return out
-
-
-def _query_kernel(plan, k: int | None, tombstones, scoring):
-    """The parsed query over one salt's block rows, or every row of a
-    small scan. ``plan`` = term ids of (required units, scored terms,
-    phrase pairs, excluded terms). A doc matches with >=1 member of
-    every unit (a scored OR-group, a plain term, an indexed field
-    term), every pair adjacent and no live excluded posting; its score
-    sums its scored terms in ascending term_id order (FIXTURES.md §3).
-    Cut: (score desc, doc_id asc), top ``k``, or all when k is None."""
-    units, scored, pairs, excluded = plan
-    phrase_tids = {t for p in pairs for t in p}
-    idf_by, avgdl, k1, b = scoring
-
-    def kernel(pdf):
-        rows = {int(t): g for t, g in pdf.groupby("term_id")}
-        lists = {
-            t: decode_blocks(
-                rows.get(t, pdf.iloc[0:0]), tombstones=tombstones,
-                with_positions=t in phrase_tids,
-                rescore=(idf_by[t], avgdl, k1, b) if t in scored else None,
-            )
-            for t in {t for u in units for t in u} | set(excluded)
-        }
-        cand = None
-        for u in units:
-            docs = np.unique(np.concatenate([lists[t][0] for t in u]))
-            cand = docs if cand is None else np.intersect1d(cand, docs, assume_unique=True)
-        for a, b_ in pairs:
-            cand = cand[np.isin(cand, L.phrase_chain([a, b_], lists), assume_unique=True)]
-        for t in excluded:
-            cand = cand[~np.isin(cand, lists[t][0], assume_unique=True)]
-        total, _hits = W._score_candidates(cand, [(t, lists[t][0], lists[t][2]) for t in scored])
-        idx = np.lexsort((cand, -total))[:k]
-        return W._topk_frame(cand[idx], total[idx])
-
-    return kernel
 
 
 def sql(q: str, k: int = 10) -> str:

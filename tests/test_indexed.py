@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from open_source_search_engine_spark.index import builder, lists
+from open_source_search_engine_spark.index import builder, lists, wand
 from open_source_search_engine_spark.operators import bm25, boolean, facets, indexed
 from open_source_search_engine_spark.operators import phrase as phrase_ops
 from tests.conftest import TEST_CFG
@@ -26,6 +26,17 @@ def idx(spark, tiny_corpus, tmp_path_factory):
         text_col="content",
         tokenizer_mode="code",
         extra_meta_cols=["lang", "repo", "n_chars"],
+    )
+    return d
+
+
+@pytest.fixture(scope="module")
+def field_idx(spark, tiny_corpus, tmp_path_factory):
+    """A store with ``lang`` as an indexed field (composite terms)."""
+    d = tmp_path_factory.mktemp("idx_fields") / "idx"
+    builder.build_index(
+        spark, tiny_corpus, d, cfg=TEST_CFG, text_col="content",
+        tokenizer_mode="code", extra_meta_cols=["lang"], index_fields=["lang"],
     )
     return d
 
@@ -68,12 +79,21 @@ def test_and_or_not_indexed(spark, tiny_corpus, idx):
     )
 
 
-def test_missing_term_semantics(spark, idx):
+def test_missing_term_semantics(spark, idx, field_idx):
     assert indexed.and_intersect(spark, idx, ["index", "zzzznotaterm"]).count() == 0
     assert indexed.bm25_topk(spark, idx, ["index", "zzzznotaterm"], 5).count() == 0
     assert _ids(indexed.not_exclude(spark, idx, "index", "zzzznotaterm")) == _ids(
         indexed.or_union(spark, idx, ["index"])
     )
+    assert indexed.field_docs(spark, field_idx, "lang", "zzzznotalang").count() == 0
+    assert indexed.bm25_topk_field(
+        spark, field_idx, TERMS, "lang", "zzzznotalang", k=10
+    ).count() == 0
+    known = _ids(indexed.or_union(spark, idx, ["index"]))
+    assert known and _ids(indexed.or_union(spark, idx, ["index", "zzzznotaterm"])) == known
+    assert indexed.scored_matches(
+        spark, idx, ["zzzznotaterm", "zzzzother"], "or"
+    ).count() == 0
 
 
 def test_facets_indexed(spark, tiny_corpus, idx):
@@ -88,13 +108,31 @@ def test_facets_indexed(spark, tiny_corpus, idx):
 
 
 def test_bm25_topk_indexed_rank_identical(spark, tiny_corpus, idx):
-    want = bm25.bm25_topk_oracle(
-        tiny_corpus, TERMS, k=10, mode="and", text_col="content", tokenizer_mode="code"
-    ).collect()
-    got = indexed.bm25_topk(spark, idx, TERMS, k=10).collect()
-    assert [(r["doc_id"], r["score"]) for r in got] == [
-        (r["doc_id"], r["score"]) for r in want
-    ]
+    """bm25_topk equals the corpus oracle in AND and OR mode, and the
+    raw scored match set of >=3 terms (where summation order shows) is
+    bit-identical to wand_topk's raw scores."""
+    for mode in ("and", "or"):
+        want = bm25.bm25_topk_oracle(
+            tiny_corpus, TERMS, k=10, mode=mode, text_col="content", tokenizer_mode="code"
+        ).collect()
+        got = indexed.bm25_topk(spark, idx, TERMS, k=10, mode=mode).collect()
+        assert [(r["doc_id"], r["score"]) for r in got] == [
+            (r["doc_id"], r["score"]) for r in want
+        ], mode
+    n_docs = tiny_corpus.count()
+    for terms, mode in ((["index", "merge", "scan"], "and"),
+                        (["index", "merge", "scan", "hash"], "or")):
+        raw = {
+            r["doc_id"]: r["_score"]
+            for r in indexed.scored_matches(spark, idx, terms, mode).collect()
+        }
+        want = {
+            r["doc_id"]: r["score"]
+            for r in wand.wand_topk(
+                spark, idx, terms, k=n_docs, mode=mode, round_dp=None
+            ).collect()
+        }
+        assert raw and raw == want, mode
 
 
 def test_phrase_from_positions(spark, tiny_corpus, idx):
@@ -160,15 +198,11 @@ def test_sitecap_paginate_indexed(spark, tiny_corpus, idx):
     assert [r["doc_id"] for r in page0 + page1] == [r["doc_id"] for r in full]
 
 
-def test_field_prefixed_terms(spark, tiny_corpus, tmp_path_factory):
+def test_field_prefixed_terms(spark, tiny_corpus, field_idx):
     """index_fields builds `field:value` composite termlists (F3):
     field restriction resolves to one pruned list read, identical to
     the doc_meta filter."""
-    d = tmp_path_factory.mktemp("idx_fields") / "idx"
-    builder.build_index(
-        spark, tiny_corpus, d, cfg=TEST_CFG, text_col="content",
-        tokenizer_mode="code", extra_meta_cols=["lang"], index_fields=["lang"],
-    )
+    d = field_idx
     meta_docs = set(
         r["doc_id"]
         for r in spark.read.parquet(str(d / "doc_meta"))

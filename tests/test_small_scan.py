@@ -6,7 +6,8 @@ path; these tests force the Spark path (``SMALL_SCAN_MAX_BYTES = -1``,
 or large tombstones) and pin both to identical ranks and scores on a
 store with an add, a replace and a delete: top-k, phrase, proximity,
 the query language (``query_language.execute_indexed``, one scan and
-one kernel) and ``term_postings`` (always the Spark leg, so only its
+one kernel), ``term_postings`` and the match reads of
+``operators.indexed`` (always the Spark leg, so only their
 cogrouped-tombstone variant differs). They also pin the point of the
 driver path: a warm top-k, a warm proximity, a warm query-language
 query and an empty result start no Spark job."""
@@ -21,7 +22,7 @@ from fixtures.gen_corpus import gen_corpus
 from open_source_search_engine_spark.index import builder, lists, merge, wand
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.index.engine import QueryEngine
-from open_source_search_engine_spark.operators import proximity
+from open_source_search_engine_spark.operators import indexed, proximity
 from open_source_search_engine_spark.plans import query_language
 from tests.conftest import TEST_CFG
 
@@ -67,8 +68,8 @@ def _jobs(spark) -> int:
 
 def _reads(spark, d) -> dict[str, pd.DataFrame]:
     """Every read's final frame — top-k with rounded and raw scores,
-    phrase, proximity, every query-language shape, term_postings —
-    keyed by name."""
+    phrase, proximity, every query-language shape, term_postings, the
+    match reads of operators/indexed.py — keyed by name."""
     eng = QueryEngine(spark, d, auto_refresh=False)
     by_rank = ("query_id", F.desc("score"), "doc_id")
     out = {
@@ -85,6 +86,13 @@ def _reads(spark, d) -> dict[str, pd.DataFrame]:
         "warm_proximity": proximity.proximity_topk_indexed(spark, eng, PROXIMITY, k=25).toPandas(),
         "postings": lists.term_postings(spark, d, POSTINGS)
         .orderBy("term_id", "doc_id").toPandas(),
+        "and_intersect": indexed.and_intersect(spark, d, ["scan", "merge"]).toPandas(),
+        "not_exclude": indexed.not_exclude(spark, eng, "scan", "trait").toPandas(),
+        "field_docs": indexed.field_docs(spark, d, "lang", "py").orderBy("doc_id").toPandas(),
+        "scored_and": indexed.scored_matches(spark, d, ["scan", "merge", "index"], "and")
+        .orderBy("doc_id").toPandas(),
+        "scored_or": indexed.scored_matches(spark, eng, POSTINGS[:4], "or")
+        .orderBy("doc_id").toPandas(),
     }
     for qid, (terms, mode) in QUERIES.items():
         out[f"cold_{qid}"] = wand.wand_topk(spark, d, terms, k=25, mode=mode).toPandas()
@@ -137,6 +145,8 @@ def test_small_scan_matches_spark_scan(paths):
     other_cols = {
         "phrase": ["doc_id"], "warm_phrase": ["doc_id"],
         "postings": ["term_id", "doc_id", "tf", "score"],
+        "and_intersect": ["doc_id"], "not_exclude": ["doc_id"], "field_docs": ["doc_id"],
+        "scored_and": ["doc_id", "_score"], "scored_or": ["doc_id", "_score"],
     }
     for key, frame in want.items():
         cols = ["query_id", "doc_id", "score"] if key.endswith("batch") else ["doc_id", "score"]
@@ -148,6 +158,8 @@ def test_small_scan_matches_spark_scan(paths):
     assert set(want["cold_batch"]["query_id"]) == {"or2", "and2", "single"}
     assert len(want["phrase"]) > 0
     assert len(want["cold_proximity"]) > 0
+    for key in ("and_intersect", "not_exclude", "field_docs", "scored_and", "scored_or"):
+        assert len(want[key]) > 0, key
     assert want["postings"]["term_id"].mod(TEST_CFG.n_buckets).nunique() > 1
     for key in want:
         assert not set(want[key]["doc_id"]) & set(DEAD), key
