@@ -4,8 +4,22 @@ reference's index pipeline (SURVEY.md §3.2):
     XmlDoc::hashAll            → tokenize + posexplode + groupBy  (postings)
     Msg4 fan-out to shards     → salted repartition by (term-bucket, doc-range)
     RdbTree sorted memtable    → sortWithinPartitions / in-kernel sort
-    RdbDump sorted run + RdbMap→ mapInArrow block encoder (segments.py)
+    RdbDump sorted run + RdbMap→ block encoder (segments.make_encode_kernel)
     Rdb stats                  → DataFrame aggs (doc_meta / term_dict / stats)
+
+Who writes what. Tokenizing, staging and the doc_meta append are
+always Spark jobs. A generation of up to POSTINGS_PER_ENCODE_TASK
+postings (every add, merge and build of a small store) is encoded in
+the driver: one collect, an ``np.lexsort``, the encode kernel and one
+pyarrow file per bucket, with the manifest counted from the encoded
+blocks — the RdbDump of a memtable by the process that holds it. Such
+an add onto a small store (small tombstones; term_dict plus doc_meta
+within DRIVER_FOLD_MAX_ROWS rows) also folds its df counts into
+term_dict and computes the live N/avgdl in the driver with pyarrow and
+numpy. Larger generations and stores run the same steps as Spark jobs
+(the salted shuffle, ``mapInArrow`` encode, partitioned write and
+read-back; the union/groupBy fold; the live-doc aggregation); both
+paths write the same rows (tests/test_writer_paths.py).
 
 Layout under ``index_dir`` (plain parquet dirs; Iceberg would add its
 manifests on top — no Iceberg jar in-sandbox, SURVEY.md §7 M0):
@@ -38,9 +52,11 @@ import json
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import asdict
 from pathlib import Path
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -55,12 +71,21 @@ from open_source_search_engine_spark.index.segments import (
     BLOCK_SCHEMA,
     SEGMENT_FORMAT,
     make_encode_kernel,
+    salt_width,
 )
 from open_source_search_engine_spark.operators.postings import staged_postings
 from open_source_search_engine_spark.operators.stats import term_stats
 
 # an add's private staging dir: `<prefix><generation>`
 ADD_STAGING_PREFIX = "_staging_gen="
+# suffix of the hidden (dot-prefixed) temp names the driver writes
+# before a rename: segment files and staged side-table dirs. Not
+# `.parquet`, so no reader (small_scan, tombstones.files, Spark,
+# pyarrow datasets) ever lists one.
+STAGING_TMP_SUFFIX = ".tmp"
+# term_dict's term-sorted parts: files (Spark writer, _term_sorted) or
+# row groups of one file (driver fold, _stage_driver_fold)
+TERM_DICT_PARTS = 8
 
 MANIFEST_SCHEMA = (
     "bucket int, n_terms long, n_blocks long, n_postings long, "
@@ -70,9 +95,12 @@ MANIFEST_SCHEMA = (
 # Postings per encode task (encode_partitions). Every task pays a fixed
 # JVM→Python hand-off and writes one parquet file per bucket it holds,
 # so a small generation runs fastest as one task; past this size a
-# second task's parallelism pays for its fixed cost.
-# Measured: _encode_and_write wall (shuffle, sort, encode, write,
-# manifest) with the task count pinned, over staged gen_corpus postings
+# second task's parallelism pays for its fixed cost. A generation that
+# gets one task is encoded in the driver instead (_encode_and_write),
+# which drops the shuffle, the Python worker and the read-back too.
+# Measured on the Spark path: _encode_and_write wall (shuffle, sort,
+# encode, write, manifest) with the task count pinned, over staged
+# gen_corpus postings
 # under perfbench's config (64 buckets, 8 salts, positions), local[4]
 # on a 4-core host, median of 3 (2 at 4k and 128k), seconds:
 #   docs   postings   n=1    2     4     8     16    64
@@ -91,6 +119,25 @@ MANIFEST_SCHEMA = (
 # run more tasks than the table's best: 32k docs get 9 (~6 s), where 4
 # take 4.9 s.
 POSTINGS_PER_ENCODE_TASK = 320_000
+
+# Rows of term_dict plus doc_meta (side_table_rows) up to which a
+# one-task add folds its df and computes the live N/avgdl in the driver
+# (_stage_driver_fold, tombstones.live_doc_stats) instead of in Spark.
+# Measured: both steps, driver vs Spark (the union/groupBy fold staged
+# by _stage_side_table, _live_doc_stats over live_doc_meta), over
+# synthetic side tables of R rows each (2% of doc_meta in a delta
+# generation, a 10k-term add), local[4] on a 4-core host, median of 3
+# after a warm-up; driver peak RSS from ru_maxrss (- = not measured):
+#   rows (both)   driver s   Spark s   driver peak MiB
+#   40k           0.15       1.42      -
+#   500k          0.28       1.52      31
+#   2M            0.68       2.03      112
+#   4M            1.35       3.13      187
+#   8M            2.60       4.75      -
+# The driver is faster at every measured size (Spark's fixed ~1.4 s of
+# jobs dominates), so the bound is the driver's memory, not speed:
+# ~0.05 MiB per thousand rows, about 100 MiB here.
+DRIVER_FOLD_MAX_ROWS = 2_000_000
 
 
 def _salt_col(doc_id: F.Column, max_doc_id: int, n_salts: int) -> F.Column:
@@ -121,27 +168,50 @@ def load_meta(index_dir: str | Path, recover: bool = False) -> dict:
     return meta
 
 
-def _read_epoch(d: Path) -> int:
-    """Epoch stamp of a side-table dir (0 when unstamped — a fresh
-    build or a pre-epoch store). The `_epoch` marker file starts with
-    an underscore, so Spark / pyarrow dataset discovery both skip it
-    (the `_SUCCESS` convention)."""
+def _tmp_name(final: Path) -> Path:
+    """The hidden temp name a driver write of ``final`` lands under
+    before its rename (``STAGING_TMP_SUFFIX``)."""
+    return final.parent / f".{final.name}-{uuid.uuid4().hex}{STAGING_TMP_SUFFIX}"
+
+
+def _read_epoch(d: Path) -> int | None:
+    """Epoch stamp of a side-table dir (None when unstamped). The
+    `_epoch` marker file starts with an underscore, so Spark / pyarrow
+    dataset discovery both skip it (the `_SUCCESS` convention)."""
     f = d / "_epoch"
     try:
         return int(f.read_text())
     except (OSError, ValueError):
-        return 0
+        return None
 
 
-def _stage_side_table(index_dir: Path, name: str, df, epoch: int) -> None:
-    """Write a side table's replacement UNREFERENCED (`<name>_next`),
-    stamped with the epoch of the meta.json commit that will reference
-    it. Nothing a reader touches changes until the meta flip; a crash
-    before the flip leaves a stamped-ahead dir that recovery discards
-    (rollback), so incremental df folds can never be applied twice."""
+@contextmanager
+def _staging_dir(index_dir: Path, name: str, epoch: int):
+    """Yield the path a side table's replacement is written to (a dir
+    the caller creates), then stamp it with the epoch of the meta.json
+    commit that will reference it and rename it to `<name>_next`,
+    UNREFERENCED.
+
+    The path is a hidden temp name (``STAGING_TMP_SUFFIX``), so a
+    `_next` dir is always whole and stamped: a writer killed mid-write
+    leaves only a temp dir recovery sweeps. Nothing a reader touches
+    changes until the meta flip; a crash before the flip leaves a
+    stamped-ahead dir that recovery discards (rollback), so
+    incremental df folds can never be applied twice."""
     nxt = index_dir / f"{name}_next"
-    df.write.mode("overwrite").parquet(str(nxt))
-    (nxt / "_epoch").write_text(str(int(epoch)))
+    tmp = _tmp_name(nxt)
+    yield tmp
+    (tmp / "_epoch").write_text(str(int(epoch)))
+    if nxt.exists():
+        shutil.rmtree(nxt)
+    tmp.rename(nxt)
+
+
+def _stage_side_table(index_dir: Path, name: str, df: DataFrame, epoch: int) -> None:
+    """Stage ``df`` as side table ``name``'s replacement, written by
+    Spark (``_staging_dir``)."""
+    with _staging_dir(index_dir, name, epoch) as tmp:
+        df.write.parquet(str(tmp))
 
 
 def _promote_side_table(index_dir: Path, name: str) -> None:
@@ -185,7 +255,8 @@ def _recover_swaps(index_dir: Path) -> None:
            gen <= max(meta['generations']) implicitly (committed
            writers never leave doc_meta rows above that bar);
         2. replacement side tables are STAGED as `<name>_next` stamped
-           with epoch = meta['epoch'] + 1 (`_stage_side_table`);
+           with epoch = meta['epoch'] + 1 (`_staging_dir`: written
+           and stamped in a hidden temp dir, then renamed);
         3. ONE atomic meta.json rename commits the new generation set
            AND the new epoch;
         4. this function promotes the staged side tables and drops the
@@ -198,6 +269,11 @@ def _recover_swaps(index_dir: Path) -> None:
         touched, so a rerun redoes the fold exactly once);
       * `<name>_next` stamped AT/BELOW meta['epoch'] → the flip
         committed it: finish the promotion;
+      * `<name>_next` without a stamp → not written by
+        `_staging_dir` (which renames only whole, stamped dirs),
+        so it may be partial: discard it;
+      * a staging temp dir (``STAGING_TMP_SUFFIX``) → left by a writer
+        killed while staging: drop it;
       * live dir missing (crash mid-promotion, which only runs
         post-flip) → promote `_next` if present, else restore `_old`;
       * doc_meta parquet files whose min(gen) exceeds every committed
@@ -214,7 +290,10 @@ def _recover_swaps(index_dir: Path) -> None:
     meta_path = index_dir / "meta.json"
     if not meta_path.exists():
         return
-    for p in index_dir.glob(f"{ADD_STAGING_PREFIX}*"):
+    for p in [
+        *index_dir.glob(f"{ADD_STAGING_PREFIX}*"),
+        *index_dir.glob(f".*{STAGING_TMP_SUFFIX}"),
+    ]:
         shutil.rmtree(p, ignore_errors=True)
     meta = json.loads(meta_path.read_text())
     committed_epoch = int(meta.get("epoch", 0))
@@ -228,7 +307,8 @@ def _recover_swaps(index_dir: Path) -> None:
             elif old.exists():
                 old.rename(live)
         elif nxt.exists():
-            if _read_epoch(nxt) <= committed_epoch:
+            stamp = _read_epoch(nxt)
+            if stamp is not None and stamp <= committed_epoch:
                 _promote_side_table(index_dir, name)
             else:
                 shutil.rmtree(nxt)
@@ -323,7 +403,8 @@ def refresh_read_caches(spark: SparkSession, index_dir: str | Path) -> None:
 
 def encode_partitions(n_postings: int, cfg: EngineConfig, shuffle_partitions: int) -> int:
     """The encode's task count: one task per POSTINGS_PER_ENCODE_TASK
-    postings, capped by the large-build rule. The cap is a floor of 64
+    postings, capped by the large-build rule. One task means the
+    driver path of ``_encode_and_write``. The cap is a floor of 64
     that scales with the group count: hash-packing many (bucket, salt)
     groups into few partitions gives fat-partition stragglers that
     dominate wall clock once waves are few (measured at 512 buckets x
@@ -361,13 +442,27 @@ def _encode_and_write(
     estimate of the posting count, read from metadata (no Spark job);
     it sizes the encode (``encode_partitions``).
 
-    ``posts`` needs only (term_id, doc_id, tf, doc_len): the repartition
-    below is THE salted shuffle — it hashes on the (bucket, salt)
-    EXPRESSIONS without materializing them as columns (8 fewer bytes
-    per shuffled posting), spreading a Zipf head term over n_salts
-    partitions; the mapInArrow kernel recomputes bucket/salt in numpy
-    and encodes its whole partition in one pass (segments.py
-    make_encode_kernel)."""
+    ``posts`` needs only (term_id, doc_id, tf, doc_len[, pos_blob]).
+    Both paths run the same kernel (segments.make_encode_kernel, which
+    recomputes bucket/salt in numpy and verifies the order) and write
+    the same block rows; they differ in who sorts and writes them:
+
+      * one task (a generation up to POSTINGS_PER_ENCODE_TASK
+        postings — every add and merge of a small store): the driver
+        collects the postings once (``toArrow``), sorts them (bucket,
+        term_id, salt, doc_id) with ``np.lexsort``, runs the kernel
+        and writes one file per bucket with pyarrow
+        (``_write_bucket_files``); the manifest rows are counted from
+        the encoded blocks. The RdbDump of a memtable by the process
+        that holds it (SURVEY.md §3.2): no shuffle, no Python worker,
+        no read-back.
+      * more tasks: the salted repartition below is THE shuffle — it
+        hashes on the (bucket, salt) EXPRESSIONS without
+        materializing them as columns (8 fewer bytes per shuffled
+        posting), spreading a Zipf head term over n_salts partitions;
+        Spark sorts, runs the kernel per partition (mapInArrow) and
+        writes; the manifest rows come from a column-pruned read-back
+        of the written files."""
     spark = posts.sparkSession
     cols = ["term_id", "doc_id", "tf", "doc_len"]
     if cfg.store_positions and "pos_blob" in posts.columns:
@@ -376,100 +471,144 @@ def _encode_and_write(
     bucket_expr = F.pmod(F.col("term_id"), F.lit(cfg.n_buckets)).cast("int")
     if buckets is not None:
         sel = sel.filter(bucket_expr.isin(buckets))
-    # ONE shuffle end to end: the salted repartition hashes on the
-    # (bucket, salt) EXPRESSIONS (explicit N — AQE respects it), the
-    # kernel emits blocks already sorted (bucket, term_id, salt, doc)
-    # and the partitioned write happens straight off the kernel
-    # output. The old plan re-shuffled the ENCODED blocks into
-    # n_buckets partitions to get one file per bucket dir — that
-    # second shuffle moved the entire index bytes again and capped
-    # write parallelism at n_buckets (measured: the encode+write phase
-    # scaled 4→16 cores at only 1.46×). Now write tasks = N
-    # (encode_partitions: sized to the generation's postings), and
-    # each task writes one file per bucket it holds, so a bucket dir
-    # gets at most min(N, n_salts) files — one for a generation small enough
-    # for one task. The term-major sort within each task keeps parquet
-    # row-group term_id min/max stats tight for the query path's
-    # pruning (RdbMap analog).
-    n_shuffle = encode_partitions(
+    n_tasks = encode_partitions(
         n_postings, cfg, int(spark.conf.get("spark.sql.shuffle.partitions"))
     )
-    salt_expr = _salt_col(F.col("doc_id"), max_doc_id, cfg.n_salts)
-    # the (bucket, term, salt, doc) sort runs JVM-SIDE: Tungsten's
-    # radix/binary sort is far less memory-bandwidth-hungry than a
-    # numpy lexsort+gather in the Python kernel (measured: the numpy
-    # path scales 4→16 cores at ~0.46 on this host; the pure-streaming
-    # kernel over pre-sorted input removes that wall)
-    blocks = (
-        sel.repartition(n_shuffle, bucket_expr, salt_expr)
-        .sortWithinPartitions(
-            bucket_expr, F.col("term_id"), salt_expr, F.col("doc_id")
-        )
-        .mapInArrow(
-            make_encode_kernel(cfg.block_size, cfg.n_buckets, max_doc_id, cfg.n_salts),
-            BLOCK_SCHEMA,
-        )
-    )
+    kernel = make_encode_kernel(cfg.block_size, cfg.n_buckets, max_doc_id, cfg.n_salts)
     seg_dir = index_dir / "segments" / f"generation={generation}"
-    blocks.write.mode("append").partitionBy("bucket").parquet(str(seg_dir))
-
-    # manifest AFTER segments land (the commit point): aggregated from
-    # a COLUMN-PRUNED read-back of the files just written (bucket is
-    # the dir partition value; term_id/n_docs are tiny int columns —
-    # the blob columns are never touched). This replaces a persist()
-    # of the full encoded index, which at real scale would push the
-    # entire index bytes through executor storage memory just to count
-    # blocks. Every bucket this call was responsible for gets a row
-    # (empty ones included) so a resumed build can tell "done and
-    # empty" from "not yet encoded".
-    # explicit schema: an empty generation (e.g. an all-stopword delta)
-    # writes no part files and schema inference would throw
-    written = spark.read.schema(BLOCK_SCHEMA).parquet(str(seg_dir))
-    if buckets is not None:
-        written = written.filter(F.col("bucket").isin(buckets))
-    man_rows = {
-        r["bucket"]: r
-        for r in written.groupBy("bucket")
-        .agg(
-            F.countDistinct("term_id").alias("n_terms"),
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum("n_docs").alias("n_postings"),
+    if n_tasks == 1:
+        # the encode's one Spark job: this collect (perfbench attributes
+        # jobs to the enclosing function, so it stays in this one)
+        tbl = sel.toArrow()
+        term_ids = tbl.column("term_id").to_numpy()
+        doc_ids = tbl.column("doc_id").to_numpy()
+        order = np.lexsort((
+            doc_ids,
+            np.minimum(doc_ids // salt_width(max_doc_id, cfg.n_salts), cfg.n_salts - 1),
+            term_ids,
+            term_ids % cfg.n_buckets,
+        ))
+        blocks = next(kernel(iter(tbl.take(order).to_batches())))
+        man_rows = _write_bucket_files(blocks, seg_dir, generation)
+    else:
+        # ONE shuffle end to end: the salted repartition (explicit N —
+        # AQE respects it), a JVM-side (bucket, term, salt, doc) sort
+        # (Tungsten's radix sort is far less memory-bandwidth-hungry
+        # than a numpy lexsort+gather in the Python kernel: measured,
+        # the numpy path scales 4→16 cores at ~0.46 on this host) and
+        # the partitioned write straight off the kernel output. Each
+        # of the N tasks writes one file per bucket it holds, so a
+        # bucket dir gets at most min(N, n_salts) files. The old plan
+        # re-shuffled the ENCODED blocks into n_buckets partitions to
+        # get one file per bucket dir — that moved the entire index
+        # bytes again and capped write parallelism at n_buckets.
+        salt_expr = _salt_col(F.col("doc_id"), max_doc_id, cfg.n_salts)
+        blocks = (
+            sel.repartition(n_tasks, bucket_expr, salt_expr)
+            .sortWithinPartitions(
+                bucket_expr, F.col("term_id"), salt_expr, F.col("doc_id")
+            )
+            .mapInArrow(kernel, BLOCK_SCHEMA)
         )
-        .collect()
-    }
+        blocks.write.mode("append").partitionBy("bucket").parquet(str(seg_dir))
+        # manifest AFTER segments land, aggregated from a COLUMN-PRUNED
+        # read-back (bucket is the dir partition value; term_id/n_docs
+        # are tiny int columns — the blob columns are never touched).
+        # Explicit schema: an empty generation (e.g. an all-stopword
+        # delta) writes no part files and schema inference would throw.
+        written = spark.read.schema(BLOCK_SCHEMA).parquet(str(seg_dir))
+        if buckets is not None:
+            written = written.filter(F.col("bucket").isin(buckets))
+        man_rows = {
+            r["bucket"]: (r["n_terms"], r["n_blocks"], r["n_postings"])
+            for r in written.groupBy("bucket")
+            .agg(
+                F.countDistinct("term_id").alias("n_terms"),
+                F.count(F.lit(1)).alias("n_blocks"),
+                F.sum("n_docs").alias("n_postings"),
+            )
+            .collect()
+        }
+    # Every bucket this call was responsible for gets a manifest row
+    # (empty ones included) so a resumed build can tell "done and
+    # empty" from "not yet encoded". Manifest rows are driver-known
+    # metadata — written straight from the driver with pyarrow (the
+    # Iceberg pattern: the committer writes manifests, not a
+    # distributed job).
     ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     want = buckets if buckets is not None else range(cfg.n_buckets)
-    rows = [
-        (
-            int(b),
-            int(man_rows[b]["n_terms"]) if b in man_rows else 0,
-            int(man_rows[b]["n_blocks"]) if b in man_rows else 0,
-            int(man_rows[b]["n_postings"]) if b in man_rows else 0,
-            ts,
-            input_snapshot,
-        )
-        for b in want
-    ]
-    # manifest rows are driver-known metadata — write the parquet file
-    # straight from the driver with pyarrow (the Iceberg pattern: the
-    # committer writes manifests, not a distributed job). A Spark
-    # createDataFrame().write of 64 rows costs ~5 s of job overhead.
+    counts = [man_rows.get(b, (0, 0, 0)) for b in want]
     man_dir = index_dir / "manifest" / f"generation={generation}"
     man_dir.mkdir(parents=True, exist_ok=True)
-    cols = list(zip(*rows)) if rows else [[]] * 6
     pq.write_table(
         pa.table(
             {
-                "bucket": pa.array(cols[0], pa.int32()),
-                "n_terms": pa.array(cols[1], pa.int64()),
-                "n_blocks": pa.array(cols[2], pa.int64()),
-                "n_postings": pa.array(cols[3], pa.int64()),
-                "built_at": pa.array(cols[4], pa.string()),
-                "input_snapshot": pa.array(cols[5], pa.string()),
+                "bucket": pa.array(list(want), pa.int32()),
+                "n_terms": pa.array([int(c[0]) for c in counts], pa.int64()),
+                "n_blocks": pa.array([int(c[1]) for c in counts], pa.int64()),
+                "n_postings": pa.array([int(c[2]) for c in counts], pa.int64()),
+                "built_at": pa.array([ts] * len(counts), pa.string()),
+                "input_snapshot": pa.array([input_snapshot] * len(counts), pa.string()),
             }
         ),
         man_dir / f"manifest-{uuid.uuid4().hex}.parquet",
     )
+
+
+# Columns of a driver-written segment file with min/max statistics:
+# the small scan's term_id filter reads them, and the blob columns'
+# byte-string extrema would only bloat the footer.
+SEGMENT_STAT_COLUMNS = [
+    "salt", "term_id", "block_id", "doc_id_min", "doc_id_max",
+    "n_docs", "block_max_tf", "block_min_dl",
+]
+
+
+def _write_bucket_files(blocks: pa.RecordBatch, seg_dir: Path, generation: int) -> dict:
+    """Write the encoded ``blocks`` (sorted by bucket) of a one-task
+    generation as one parquet file per bucket — the layout the Spark
+    path's partitioned write gives: ``bucket=B/`` dirs, no bucket
+    column, one row group. Each file is written under a hidden temp
+    name, then renamed to a name fixed per (generation, bucket), so a
+    resumed build overwrites a file a killed one left instead of
+    adding a second copy, and drops the temp files a killed one left
+    in the bucket dirs it rewrites (an add's or merge's killed
+    generation is unreferenced, and recovery drops its dir). No Arrow
+    schema in the footer: readers pass or infer the parquet schema.
+    Returns the manifest counts, ``{bucket: (n_terms, n_blocks,
+    n_postings)}``. The generation dir is made even when empty: readers
+    take a missing committed generation dir for one a later commit
+    dropped."""
+    seg_dir.mkdir(parents=True, exist_ok=True)
+    bucket = blocks.column("bucket").to_numpy()
+    starts = np.flatnonzero(np.diff(bucket, prepend=-1))
+    ends = np.append(starts[1:], len(bucket))
+    body = pa.Table.from_batches([blocks]).drop_columns(["bucket"])
+    counts = {}
+    for s, e in zip(starts, ends):
+        b = int(bucket[s])
+        part = body.slice(s, e - s)
+        out = seg_dir / f"bucket={b}"
+        out.mkdir(parents=True, exist_ok=True)
+        for stale in out.glob(f".*{STAGING_TMP_SUFFIX}"):
+            stale.unlink()  # a killed writer's temp file: this write redoes it
+        final = out / f"part-g{generation}-b{b}.parquet"
+        tmp = _tmp_name(final)
+        try:
+            pq.write_table(
+                part, tmp, row_group_size=part.num_rows, store_schema=False,
+                write_statistics=SEGMENT_STAT_COLUMNS,
+            )
+            tmp.rename(final)
+        finally:
+            tmp.unlink(missing_ok=True)
+        tids = part.column("term_id").to_numpy()
+        counts[b] = (
+            int(np.count_nonzero(tids[1:] != tids[:-1])) + 1,
+            part.num_rows,
+            int(part.column("n_docs").to_numpy().sum()),
+        )
+    return counts
 
 
 def done_buckets(spark: SparkSession, index_dir: str | Path, generation: int = 0) -> set[int]:
@@ -694,8 +833,32 @@ def _write_generation(
             }
     epoch = meta["epoch"]
     base_schema = spark.read.parquet(str(dm_dir)).schema if gen else None
+    # The generation's size: the staging footers' row count (postings
+    # plus one meta row per doc), no Spark job. It sizes the encode
+    # (encode_partitions; one task runs in the driver) and, with the
+    # store's side tables, decides an add's df fold and N/avgdl: they
+    # run in the driver only when everything they read is small — a
+    # one-task generation, a small tombstone snapshot, and term_dict
+    # plus doc_meta within DRIVER_FOLD_MAX_ROWS rows. Else all three
+    # stay Spark jobs.
+    n_staged = ds.dataset(str(staging), format="parquet").count_rows()
+    snap = T.Snapshot(spark, index_dir) if gen else None
+    driver_side = (
+        gen > 0
+        and encode_partitions(
+            n_staged, cfg, int(spark.conf.get("spark.sql.shuffle.partitions"))
+        ) == 1
+        and snap.small
+        and side_table_rows(index_dir) <= DRIVER_FOLD_MAX_ROWS
+    )
 
-    def _write_doc_meta() -> None:
+    def _write_doc_meta():
+        """Append (or write) this generation's doc_meta rows; for an
+        add, then return N/avgdl over the LIVE doc set, this
+        generation's rows included — tombstone-filtered (a
+        replace-mode add has written its bars already), so deletes
+        are reflected and read-time scoring stays exact under
+        add+delete."""
         meta_df = sp.filter(F.col("tf") == 0).select(
             "doc_id", F.col("sha").alias("content_sha256"), "doc_len"
         )
@@ -731,13 +894,22 @@ def _write_generation(
         meta_df = meta_df.withColumn("gen", F.lit(gen))
         if gen == 0:
             meta_df.write.mode("overwrite").parquet(str(dm_dir))
-        else:
-            meta_df.select(*base_schema.fieldNames()).write.mode(
-                "append"
-            ).parquet(str(dm_dir))
+            return None
+        meta_df.select(*base_schema.fieldNames()).write.mode(
+            "append"
+        ).parquet(str(dm_dir))
+        if driver_side:
+            return T.live_doc_stats(index_dir, meta["generations"], snap)
+        return _live_doc_stats(
+            T.live_doc_meta(spark, index_dir, meta["generations"], snap)
+        )
 
     def _write_term_dict() -> None:
         td = term_stats(posts)
+        if driver_side:
+            # this generation's counts in one collect
+            _stage_driver_fold(index_dir, td.toArrow(), epoch)
+            return
         if gen:
             td = (
                 spark.read.parquet(str(td_dir))
@@ -758,7 +930,9 @@ def _write_generation(
     # staging checkpoint submitted concurrently (Spark schedules
     # concurrent actions from driver threads; the small side-table
     # jobs fill task slots the long encode job leaves idle at stage
-    # boundaries instead of adding serial wall). Commit ordering is
+    # boundaries instead of adding serial wall). An add's live N/avgdl
+    # ride the doc_meta thread, so they start as soon as its append
+    # lands, beside the df fold and the encode. Commit ordering is
     # preserved: generation 0's meta.json — the pointer resume
     # trusts to mean "side tables complete" — is written only after
     # BOTH side-table futures join, and its encode commits its files
@@ -780,36 +954,26 @@ def _write_generation(
         # reads score with the live stats. _encode_and_write writes
         # a manifest row for EVERY bucket it was responsible for
         # (empty ones included) — the generation is complete when it
-        # returns. Its size estimate is the staging footers' row
-        # count (postings plus one meta row per doc), which also
-        # serves a resumed build that never ran the staging write.
+        # returns. Its size estimate, n_staged, also serves a resumed
+        # build that never ran the staging write.
         enc_fut = (
             None
             if todo == []
             else ex.submit(
                 _encode_and_write,
                 posts, index_dir, gen, todo, cfg, input_snapshot, meta["max_doc_id"],
-                ds.dataset(str(staging), format="parquet").count_rows(),
+                n_staged,
             )
         )
-        for f in side_futs:
-            f.result()
+        side = [f.result() for f in side_futs]
         if gen == 0:
             if fresh_side_tables:
                 _write_meta(index_dir, meta)
         else:
-            # N/avgdl over the LIVE doc set, this generation's rows
-            # included — tombstone-filtered (a replace-mode add has
-            # written its bars already), so deletes are reflected
-            # and read-time scoring stays exact under add+delete
-            stats = _live_doc_stats(
-                T.live_doc_meta(
-                    spark, index_dir, meta["generations"], T.Snapshot(spark, index_dir)
-                )
-            )
+            live = side[0]  # _write_doc_meta's live stats
             meta = meta | {
-                "n_docs": float(stats["n_docs"]),
-                "avgdl": float(stats["avgdl"]),
+                "n_docs": float(live["n_docs"]),
+                "avgdl": float(live["avgdl"]),
             }
         if enc_fut is not None:
             enc_fut.result()
@@ -822,11 +986,47 @@ def _write_generation(
 
 
 def _term_sorted(td: DataFrame) -> DataFrame:
-    """The on-disk term_dict layout every writer produces: hash-
-    clustered into 8 files, each sorted by term, so the query path's
+    """The on-disk term_dict layout the Spark writers (the build, a
+    large add, every merge) produce: hash-clustered into
+    TERM_DICT_PARTS files, each sorted by term, so the query path's
     term lookup prunes parquet row groups on term min/max stats (the
-    RdbMap seek applied to the dictionary)."""
-    return td.repartition(8, "term").sortWithinPartitions("term")
+    RdbMap seek applied to the dictionary). A small add's driver fold
+    writes the same rows in another layout (``_stage_driver_fold``)."""
+    return td.repartition(TERM_DICT_PARTS, "term").sortWithinPartitions("term")
+
+
+def side_table_rows(index_dir: Path) -> int:
+    """Rows of term_dict plus doc_meta, from the parquet footers (no
+    Spark job): what an add's driver df fold and live N/avgdl read."""
+    return sum(
+        ds.dataset(str(index_dir / t), format="parquet").count_rows()
+        for t in ("term_dict", "doc_meta")
+    )
+
+
+def _stage_driver_fold(index_dir: Path, new: pa.Table, epoch: int) -> None:
+    """A small add's df fold in the driver: this generation's
+    (term, term_id, df) rows ``new`` summed into the live term_dict
+    with pyarrow, staged for ``epoch`` as ONE term-sorted file of
+    TERM_DICT_PARTS row groups, which cover disjoint term ranges (the
+    same row-group pruning as the Spark writers' term-sorted files)."""
+    live = ds.dataset(str(index_dir / "term_dict"), format="parquet").to_table(
+        columns=["term", "term_id", "df"]
+    )
+    folded = (
+        pa.concat_tables([live, new.cast(live.schema)])
+        .group_by(["term", "term_id"])
+        .aggregate([("df", "sum")])
+        .select(["term", "term_id", "df_sum"])
+        .rename_columns(["term", "term_id", "df"])
+        .sort_by("term")
+    )
+    with _staging_dir(index_dir, "term_dict", epoch) as tmp:
+        tmp.mkdir()
+        pq.write_table(
+            folded, tmp / "part-00000.parquet",
+            row_group_size=max(1, -(-folded.num_rows // TERM_DICT_PARTS)),
+        )
 
 
 def _live_doc_stats(dm_live: DataFrame):

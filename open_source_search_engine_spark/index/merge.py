@@ -21,10 +21,14 @@ LSM semantics lifted from the reference (SURVEY.md §1.1, §2.10):
     committed generation. It decodes those generations back to posting
     tuples once (a mapInArrow over the read path's block decoder),
     drops tombstoned versions, keeps the newest generation per
-    (term, doc) and encodes ONE new generation; the encoder re-sorts
-    per (bucket, salt) partition — a distributed sorted merge expressed
-    as shuffle + sortWithinPartitions rather than a hand-written k-way
-    file merge. The merge commits through ``builder._commit`` (an
+    (term, doc) and encodes ONE new generation with the build's
+    encoder (``builder._encode_and_write``), which re-sorts instead of
+    running a hand-written k-way file merge: a merge output of up to
+    ``builder.POSTINGS_PER_ENCODE_TASK`` postings is collected and
+    sorted in the driver (one ``np.lexsort``) and written there; a
+    larger one is a distributed sort, shuffle + sortWithinPartitions
+    per (bucket, salt) partition. The decode, the df swap and the
+    live stats stay Spark jobs. The merge commits through ``builder._commit`` (an
     ATOMIC meta.json flip, then recovery's roll-forward): readers
     filter segment scans to meta['generations'], so they see the old
     store or the new one, never a half-swapped tree (ADVICE/VERDICT

@@ -151,7 +151,9 @@ def make_encode_kernel(
     caller must have partitioned rows by the SAME (bucket, salt)
     expressions so every run is whole within the partition, and
     sorted them (bucket, term_id, salt, doc_id) within it
-    (builder._encode_and_write does both); unsorted input raises."""
+    (builder._encode_and_write does both: in Spark, or in the driver
+    for a one-task generation, whose one partition is every posting);
+    unsorted input raises."""
     import pyarrow as pa
 
     width = salt_width(max_doc_id, n_salts)
@@ -174,9 +176,10 @@ def make_encode_kernel(
         # directly produces files whose row groups span narrow term_id
         # ranges — tight min/max stats for query-side pruning.
         # The builder sorts this order JVM-SIDE (Tungsten radix sort
-        # in sortWithinPartitions): a numpy lexsort+gather here is
-        # memory-bandwidth-bound and measured to scale at only ~0.46
-        # from 4→16 cores, so the kernel only VERIFIES order (one
+        # in sortWithinPartitions; a one-task generation with one
+        # np.lexsort in the driver): a numpy lexsort+gather in every
+        # task is memory-bandwidth-bound and measured to scale at only
+        # ~0.46 from 4→16 cores, so the kernel only VERIFIES order (one
         # streaming pass) — an unsorted run would corrupt the blocks.
         n = term_ids.size
         sorted_ok = bool(

@@ -149,6 +149,53 @@ def live_doc_meta(
     return snap.mask(dm, "gen").select("doc_id", *extra)
 
 
+def live_rows(
+    doc_ids: np.ndarray, gens: np.ndarray, max_gen: int, arrays
+) -> np.ndarray:
+    """``live_doc_meta``'s rule on doc_meta columns held as numpy
+    arrays: the indices of the live rows — gen <= ``max_gen``, the
+    newest row per doc_id, minus docs whose newest row sits below
+    their tombstone bar (``arrays`` is ``Snapshot.arrays``)."""
+    idx = np.flatnonzero(gens <= max_gen)
+    idx = idx[np.lexsort((gens[idx], doc_ids[idx]))]
+    d = doc_ids[idx]
+    idx = idx[np.append(d[1:] != d[:-1], True)]  # last = newest per doc
+    if arrays is not None and idx.size:
+        ts_ids, bars = arrays
+        at = np.minimum(np.searchsorted(ts_ids, doc_ids[idx]), ts_ids.size - 1)
+        dead = (ts_ids[at] == doc_ids[idx]) & (gens[idx] < bars[at])
+        idx = idx[~dead]
+    return idx
+
+
+def live_doc_stats(index_dir, generations: list[int], snap: Snapshot) -> dict:
+    """(n_docs, avgdl, max_doc_id) over the live document set, computed
+    in the driver: doc_meta's (doc_id, doc_len, gen) read with pyarrow
+    and ``live_rows`` — the same numbers as ``builder._live_doc_stats``
+    over ``live_doc_meta`` (a sum of integer doc lengths is exact in
+    both, so avgdl is bit-identical). ``snap`` must be small. avgdl and
+    max_doc_id are None for an empty live set, as Spark's aggregates
+    are."""
+    import pyarrow.dataset as ds
+
+    tbl = ds.dataset(str(Path(index_dir) / "doc_meta"), format="parquet").to_table(
+        columns=["doc_id", "doc_len", "gen"]
+    )
+    doc_ids = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
+    live = live_rows(
+        doc_ids,
+        tbl.column("gen").to_numpy().astype(np.int64, copy=False),
+        max(int(g) for g in generations),
+        snap.arrays,
+    )
+    n = live.size
+    return {
+        "n_docs": float(n),
+        "avgdl": float(tbl.column("doc_len").to_numpy()[live].sum()) / n if n else None,
+        "max_doc_id": int(doc_ids[live].max()) if n else None,
+    }
+
+
 def append(spark: SparkSession, index_dir, doc_ids, bar: int) -> None:
     """Tombstone ``doc_ids`` below generation ``bar``. A DataFrame
     (with a doc_id column) is appended distributed, so a mass delete or

@@ -28,6 +28,16 @@ def spark():
 TEST_CFG = EngineConfig(n_buckets=8, n_salts=4, block_size=16)
 
 
+def force_spark_writers(mp: pytest.MonkeyPatch) -> None:
+    """Make test-sized writers take their Spark paths: every encode gets
+    several tasks, and term_dict plus doc_meta exceed the driver fold's
+    bound."""
+    from open_source_search_engine_spark.index import builder
+
+    mp.setattr(builder, "POSTINGS_PER_ENCODE_TASK", 2_000)
+    mp.setattr(builder, "DRIVER_FOLD_MAX_ROWS", -1)
+
+
 @pytest.fixture(scope="session")
 def tiny_corpus_pdf():
     from fixtures.gen_corpus import gen_corpus

@@ -12,7 +12,7 @@ from fixtures.gen_corpus import gen_corpus
 from open_source_search_engine_spark.index import builder, merge, wand
 from open_source_search_engine_spark.index import tombstones as T
 from open_source_search_engine_spark.operators import bm25
-from tests.conftest import TEST_CFG
+from tests.conftest import TEST_CFG, force_spark_writers
 
 TERMS = [["def", "return"], ["scan", "merge"], ["index"]]
 
@@ -110,7 +110,21 @@ def test_add_matches_fresh_build_with_every_writer_feature(spark, corpora, tmp_p
     """An add to a store built with extra doc_meta columns, field terms
     and anchor text — one added doc with no postings at all — commits
     the same term_dict, doc_meta, corpus stats, scored top-k and field
-    lists as a fresh build over the union."""
+    lists as a fresh build over the union. Test-sized stores take the
+    driver writers (one-task encode, driver df fold and live stats)."""
+    _check_every_writer_feature(spark, corpora, tmp_path)
+
+
+def test_add_matches_fresh_build_with_every_writer_feature_on_spark_writers(
+    spark, corpora, tmp_path, monkeypatch
+):
+    """The same on the Spark writers (multi-task encode, Spark df fold
+    and live stats)."""
+    force_spark_writers(monkeypatch)
+    _check_every_writer_feature(spark, corpora, tmp_path)
+
+
+def _check_every_writer_feature(spark, corpora, tmp_path):
     import numpy as np
 
     from open_source_search_engine_spark.operators import indexed
@@ -828,7 +842,9 @@ def test_merge_deltas_crash_rollback_and_rerun_exact(
 def test_recover_swaps_epoch_matrix(spark, corpora, tmp_path):
     """Unit matrix for builder._recover_swaps: staged-ahead dirs roll
     back, staged-at-or-below-epoch dirs promote, mid-promotion states
-    repair, and unstamped legacy _next dirs (no _epoch file) promote."""
+    repair, and unstamped _next dirs (a writer killed while writing
+    one, or between its data and its stamp) and staging temp dirs are
+    discarded, never promoted over the live table."""
     base, _, _ = corpora
     d = tmp_path / "idx_epochs"
     builder.build_index(
@@ -864,6 +880,25 @@ def test_recover_swaps_epoch_matrix(spark, corpora, tmp_path):
     shutil.copytree(old, nxt)
     merge.B.load_meta(d, recover=True)
     assert td.exists() and not nxt.exists() and not old.exists()
+
+    # unstamped partial _next: killed while Spark wrote it (only its
+    # _temporary/ exists), or between the data and the stamp → discard
+    live_rows = spark.read.parquet(str(td)).count()
+    (nxt / "_temporary" / "0").mkdir(parents=True)
+    merge.B.load_meta(d, recover=True)
+    assert not nxt.exists() and list(td.glob("*.parquet"))
+    shutil.copytree(td, nxt)
+    (nxt / "_epoch").unlink(missing_ok=True)
+    merge.B.load_meta(d, recover=True)
+    assert not nxt.exists()
+    spark.catalog.refreshByPath(str(td))
+    assert spark.read.parquet(str(td)).count() == live_rows
+
+    # a staging temp dir left by a writer killed mid-stage → swept
+    tmp = builder._tmp_name(nxt)
+    shutil.copytree(td, tmp)
+    merge.B.load_meta(d, recover=True)
+    assert not tmp.exists() and not nxt.exists() and td.exists()
 
 
 def test_wand_batch_matches_single_queries(spark, corpora, tmp_path, monkeypatch):
